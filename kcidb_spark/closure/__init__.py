@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kcidb_spark.localrel import local_df
 from kcidb_spark.schema.graph import (
     ID_FIELDS,
     TABLES,
@@ -40,7 +41,9 @@ _KEY_TYPES = {"id": T.StringType(), "version": T.LongType()}
 
 
 def _ids_df(spark: SparkSession, table: str, ids: Iterable) -> DataFrame:
-    """Materialize an id list as a DataFrame keyed by ID_FIELDS."""
+    """Materialize an id list as a DataFrame keyed by ID_FIELDS — an
+    Arrow-backed local relation, so no consuming action starts Python
+    workers to re-read the seed rows."""
     fields = ID_FIELDS[table]
     schema = T.StructType(
         [T.StructField(f, _KEY_TYPES.get(f, T.StringType()), False) for f in fields]
@@ -52,7 +55,7 @@ def _ids_df(spark: SparkSession, table: str, ids: Iterable) -> DataFrame:
         if len(i) != len(fields):
             raise ValueError(f"{table} id {i!r} does not match fields {fields}")
         rows.append(tuple(i))
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def _union(a: DataFrame | None, b: DataFrame) -> DataFrame:

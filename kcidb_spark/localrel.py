@@ -24,14 +24,25 @@ every configuration:
   would fold it into NULL; nested structs, datetimes, Decimals) takes
   the stock path instead.
 
-Scale note: these frames are request-scale BY CONTRACT (probe
-batches, model tables, routing pairs) — callers with corpus-sized
-data must never route through a driver-held list in the first place.
+For rows of nested records (a report's objects: structs, lists,
+timestamps) :func:`local_records_df` builds a ``pyarrow.Table``
+directly against the Arrow form of the Spark schema; pandas, and the
+None/NaN coercions it brings, stay out of that path.
+
+Scale note: these frames are request-scale BY CONTRACT — probe
+batches, model tables, routing pairs, closure seeds, ORM id sets and
+the objects of one ``Store.load`` report (the inline submit path
+restricts the store by its ids with an IN-list, no frame at all).
+Callers with corpus-sized data must never route through a driver-held
+list in the first place.
 """
 
 from __future__ import annotations
 
+import datetime
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _plain_value(v) -> bool:
@@ -85,6 +96,40 @@ def local_df(sess: SparkSession, rows, schema: str) -> DataFrame:
                 columns=names,
             )
             return sess.createDataFrame(pdf, schema)
+        except Exception:  # noqa: BLE001 — fall back, never degrade
+            pass
+    return sess.createDataFrame(rows, schema)
+
+
+def _utc_faithful(v) -> bool:
+    """True unless ``v`` holds a datetime Arrow would misread: a naive
+    one (the row path reads it as driver-local time, Arrow as UTC) or
+    one with a non-zero UTC offset (``Table.from_pylist`` keeps its
+    wall clock and drops the offset)."""
+    if isinstance(v, datetime.datetime):
+        return v.utcoffset() == datetime.timedelta(0)
+    if isinstance(v, dict):
+        return all(_utc_faithful(x) for x in v.values())
+    if isinstance(v, (list, tuple)):
+        return all(_utc_faithful(x) for x in v)
+    return True
+
+
+def local_records_df(
+    sess: SparkSession, rows: list[dict], schema: T.StructType
+) -> DataFrame:
+    """``sess.createDataFrame(rows, schema)`` for dict rows of nested
+    records, built as a ``pyarrow.Table`` in the Arrow form of
+    ``schema`` (a LocalRelation: no Python RDD behind any action).
+    Datetimes must be UTC-offset to take this path; anything else, and
+    any conversion error, takes the stock path."""
+    if all(_utc_faithful(r) for r in rows):
+        try:
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+            return sess.createDataFrame(table, schema)
         except Exception:  # noqa: BLE001 — fall back, never degrade
             pass
     return sess.createDataFrame(rows, schema)

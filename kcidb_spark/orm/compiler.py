@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kcidb_spark.localrel import local_df
 from kcidb_spark.orm.pattern import Pattern
 from kcidb_spark.orm.types import RELATIONS, TYPES
 
@@ -44,7 +45,7 @@ def _restrict_ids(
             for f in fields
         ]
     )
-    ids_df = spark.createDataFrame([tuple(i) for i in ids], schema)
+    ids_df = local_df(spark, ids, schema)
     return df.join(F.broadcast(ids_df), on=list(fields), how="left_semi")
 
 

@@ -23,6 +23,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kcidb_spark.store import latest_nonnull
+
 
 @dataclass(frozen=True)
 class Relation:
@@ -70,17 +72,6 @@ def children_of(name: str) -> list[Relation]:
 
 def parents_of(name: str) -> list[Relation]:
     return [r for r in RELATIONS if r.child == name]
-
-
-def _latest_nonnull(col: str) -> F.Column:
-    """Deterministic ANY_VALUE: value at the latest _timestamp where
-    the column is non-NULL (see store dedup view rationale)."""
-    return F.max(
-        F.when(
-            F.col(col).isNotNull(),
-            F.struct(F.col("_timestamp").alias("t"), F.col(col).alias("v")),
-        )
-    )["v"].alias(col)
 
 
 def type_views(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
@@ -152,7 +143,7 @@ def type_views(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
     # Derived: one row per issue id, representative origin
     # (reference FIRST(origin) — ours is deterministic latest-non-null).
-    issue = issues.groupBy("id").agg(_latest_nonnull("origin"))
+    issue = issues.groupBy("id").agg(latest_nonnull("origin"))
 
     issue_version = issues.select(
         "id",
@@ -188,8 +179,8 @@ def type_views(tables: dict[str, DataFrame]) -> dict[str, DataFrame]:
         )
         .groupBy("git_commit_hash", "patchset_hash")
         .agg(
-            _latest_nonnull("patchset_files"),
-            _latest_nonnull("git_commit_name"),
+            latest_nonnull("patchset_files"),
+            latest_nonnull("git_commit_name"),
         )
     )
 

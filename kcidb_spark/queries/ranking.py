@@ -736,8 +736,11 @@ def _bm25_base(spark: SparkSession, sf_dir: str):
 
     docs = table(spark, sf_dir, "documents", spread=True)
     arr = F.split(_norm_text(F.col("text")), " ")
+    # len as BIGINT: F.size is INT, and the score's 9*len*N term would
+    # otherwise be INT arithmetic that overflows at corpus scale.
     toks = docs.select(
-        "doc_id", F.size(arr).alias("len"), F.explode(arr).alias("w")
+        "doc_id", F.size(arr).cast("long").alias("len"),
+        F.explode(arr).alias("w"),
     )
     tf = scoped_persist(
         toks.groupBy("doc_id", "len", "w").agg(

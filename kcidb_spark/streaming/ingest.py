@@ -10,6 +10,13 @@ report per file, standing in for a message queue) with foreachBatch
 running the merge-load + match + spool stages.  At-least-once file
 delivery × idempotent merge-load × id-deduplicated spool =
 effectively exactly-once end-to-end (T3/T6/T7).
+
+Two fan-out shapes.  The inline batch (:meth:`IngestPipeline.
+ingest_batch`) is request-scale: its merged report is already on the
+driver, so the changed ids restrict the store tables as an IN-list
+filter pushed to the parquet scan (no id frame, no job).  The stream
+(:meth:`IngestPipeline.start`) keeps its ids on the executors
+(:func:`changed_id_dfs_from_parsed`) and semi-joins them instead.
 """
 
 from __future__ import annotations
@@ -17,7 +24,7 @@ from __future__ import annotations
 import json
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kcidb_spark.schema.graph import TABLES
@@ -39,26 +46,12 @@ _IO_TO_ORM = {
 }
 
 
-def changed_id_dfs(
-    spark: SparkSession, report: dict[str, Any]
-) -> dict[str, DataFrame]:
-    """Ids of objects present in a loaded report, per ORM type — the
-    change fan-out key set (T4; reference Pattern.from_io,
-    kcidb/orm/query.py:787-848)."""
-    out: dict[str, DataFrame] = {}
-    for io_name, orm_name in _IO_TO_ORM.items():
-        objs = report.get(io_name)
-        if objs:
-            out[orm_name] = spark.createDataFrame(
-                [(o["id"],) for o in objs], "id string"
-            ).distinct()
-    return out
-
-
 def changed_id_dfs_from_parsed(parsed: DataFrame) -> dict[str, DataFrame]:
-    """Same fan-out key set, but derived ENGINE-SIDE from a parsed
-    report frame (``Store.load_json_df`` output) — ids never visit the
-    driver, so the streaming path stays distributed end-to-end."""
+    """Ids of objects present in a parsed report frame
+    (``Store.load_json_df`` output), per ORM type — the change fan-out
+    key set (T4; reference Pattern.from_io, kcidb/orm/query.py:787-848),
+    derived ENGINE-SIDE: ids never visit the driver, so the streaming
+    path stays distributed end-to-end."""
     out: dict[str, DataFrame] = {}
     for io_name, orm_name in _IO_TO_ORM.items():
         if io_name in parsed.columns:
@@ -122,15 +115,33 @@ class IngestPipeline:
         self.store.load(merged)
         self.loaded_reports += len(reports)
         if self.subscriptions:
-            views = type_views(
-                {t: self.store.table(t, with_metadata=True) for t in TABLES}
-            )
-            changed = changed_id_dfs(self.store.spark, merged)
-            notifications = match_subscriptions(
-                views, self.subscriptions, changed_ids=changed
-            )
-            if notifications is not None:
-                self.spooled += self.spool.spool(notifications)
+            views = self._changed_views(merged)
+            if views is not None:
+                self.spooled += self.spool.spool(
+                    match_subscriptions(views, self.subscriptions)
+                )
+
+    def _changed_views(self, report: dict[str, Any]) -> dict[str, DataFrame] | None:
+        """Type views holding only the objects ``report`` loaded (None
+        when it loaded nothing that fans out).  The ids are on the
+        driver, so each store table is filtered by an id IN-list before
+        the dedup view: the filter sits on the grouping key, reaches the
+        parquet scan beneath the dedup aggregate, and costs no job.  A
+        type without loaded ids — issues, revisions, and any I/O list
+        absent from the report — gets an empty view and so matches
+        nothing."""
+        ids = {io: sorted({o["id"] for o in report.get(io, ())})
+               for io in _IO_TO_ORM}
+        if not any(ids.values()):
+            return None
+        tables = {}
+        for t in TABLES:
+            df = self.store.table(t, with_metadata=True)
+            tables[t] = (df.where(F.col("id").isin(ids[t])) if ids.get(t)
+                         else df.where(F.lit(False)))
+        fanout = {_IO_TO_ORM[io] for io, v in ids.items() if v}
+        return {name: view if name in fanout else view.where(F.lit(False))
+                for name, view in type_views(tables).items()}
 
     # -- streaming -----------------------------------------------------
     def start(self, input_dir: str, checkpoint_dir: str,

@@ -20,10 +20,12 @@ import base64
 import datetime
 import glob
 import os
+import shutil
+import uuid
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -159,7 +161,15 @@ class NotificationSpool:
     def spool(self, notifications: DataFrame) -> int:
         """Insert-if-absent by id; returns the number of new rows.
         (The create-only transaction of the reference spool,
-        spool/__init__.py:89-252.)"""
+        spool/__init__.py:89-252.)
+
+        The match plan runs once: the append counts its own rows
+        (``DataFrame.observe``) instead of a ``count()`` that would
+        execute the plan a second time.  It writes into a hidden
+        staging directory, which readers of the spool never list (Spark's
+        file index skips ``_``-prefixed names); the part files move in
+        only when rows were written, so a fully redelivered batch leaves
+        no trace — not even an empty part file."""
         if "due" not in notifications.columns:
             notifications = notifications.withColumn(
                 "due", F.lit(None).cast("timestamp")
@@ -171,9 +181,21 @@ class NotificationSpool:
             .withColumn("sent_at", F.lit(None).cast("timestamp"))
             .select([f.name for f in _SPOOL_SCHEMA.fields])
         )
-        n = fresh.count()
-        if n:
-            fresh.write.mode("append").parquet(self.path)
+        counted = Observation()
+        staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
+        try:
+            fresh.observe(counted, F.count(F.lit(1)).alias("n")).write.parquet(
+                staging
+            )
+            n = counted.get["n"]
+            if n:
+                # Part files and their checksums; not _SUCCESS.
+                for name in os.listdir(staging):
+                    if name.lstrip(".").startswith("part-"):
+                        os.rename(os.path.join(staging, name),
+                                  os.path.join(self.path, name))
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
         return n
 
     def unsent(self) -> DataFrame:
@@ -221,8 +243,6 @@ class NotificationSpool:
         )
         tmp = self.path + ".updating"
         updated.write.mode("overwrite").parquet(tmp)
-        import shutil
-
         shutil.rmtree(self.path)
         os.rename(tmp, self.path)
         return len(rows)
@@ -242,8 +262,6 @@ class NotificationSpool:
         else:
             kept = self.all().filter(F.col("created_at") >= F.lit(before))
             n_kept = kept.count()
-        import shutil
-
         tmp = self.path + ".updating"
         kept.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(self.path)

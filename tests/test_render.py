@@ -286,7 +286,8 @@ def test_rich_golden(spark, tmp_path):
 
 def test_rich_messages_spool_dedup(spark, tmp_path, views):
     """Rich messages flow through the standard spool with idempotent
-    redelivery (same id scheme as flat subscriptions)."""
+    redelivery (same id scheme as flat subscriptions), and a
+    redelivered batch writes nothing."""
     from kcidb_spark.streaming import NotificationSpool
     from kcidb_spark.streaming.render import as_notifications
 
@@ -295,7 +296,10 @@ def test_rich_messages_spool_dedup(spark, tmp_path, views):
     )
     spool = NotificationSpool(spark, str(tmp_path / "spool"))
     assert spool.spool(as_notifications(msgs)) == 1
+    files = sorted((tmp_path / "spool").rglob("*"))
     assert spool.spool(as_notifications(msgs)) == 0  # redelivery
+    # ... which leaves no trace: no empty part file, no staging dir.
+    assert sorted((tmp_path / "spool").rglob("*")) == files
     row = spool.all().collect()[0]
     assert row["obj_type"] == "revision"
     assert row["subject"].startswith("Builds failed for ")
