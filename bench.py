@@ -71,6 +71,17 @@ def _round_stamp() -> int:
     return (max(rounds) + 1) if rounds else 1
 
 
+def _detail_name(rnd: int) -> str:
+    """The per-round detail file: ``BENCH_DETAIL_r{N}.json`` for a run
+    on the default core count, ``BENCH_DETAIL_r{N}_c{cpus}.json`` when
+    ``SPARK_GRAFT_CPUS`` pins another — a reduced-core run must not
+    claim the round's (or the next round's) baseline slot."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if cpus.isdigit() and int(cpus) != (os.cpu_count() or 8):
+        return f"BENCH_DETAIL_r{rnd:02d}_c{int(cpus)}.json"
+    return f"BENCH_DETAIL_r{rnd:02d}.json"
+
+
 def _regressions(
     timings: dict[str, float], sf: float | None, threshold: float = 1.5
 ) -> tuple[dict[str, list[float]], float, int]:
@@ -113,15 +124,17 @@ def _regressions(
         rnd = int(m_round.group(1)) if m_round else 0
         fold(rnd, rec.get("sf"), parsed.get("queries"))
     for path in sorted(REPO.glob("BENCH_DETAIL_r*.json")):
+        # Core-count-suffixed runs (_detail_name) are not baselines.
+        m_round = re.fullmatch(r"BENCH_DETAIL_r(\d+)\.json", path.name)
+        if not m_round:
+            continue
         try:
             rec = json.loads(path.read_text())
         except (OSError, ValueError):
             continue
         if not isinstance(rec, dict):
             continue
-        m_round = re.search(r"BENCH_DETAIL_r(\d+)", path.name)
-        rnd = int(m_round.group(1)) if m_round else 0
-        fold(rnd, rec.get("sf"), rec.get("queries"))
+        fold(int(m_round.group(1)), rec.get("sf"), rec.get("queries"))
     n_with_baseline = sum(1 for name in timings if name in best)
     ratios = {
         name: now / best[name]
@@ -263,8 +276,9 @@ def main() -> None:
     # ALSO committed per round (VERDICT r11 #2): BENCH_DETAIL.json is
     # overwritten in place, so cross-round bests could previously see
     # only the 12-slowest maps inside BENCH_r*.json.  The per-round
-    # copy gives every benched query a baseline next round.
-    (REPO / f"BENCH_DETAIL_r{_round_stamp():02d}.json").write_text(
+    # copy gives every benched query a baseline next round; a run on
+    # a non-default core count gets its own suffixed file.
+    (REPO / _detail_name(_round_stamp())).write_text(
         json.dumps(payload, indent=1)
     )
     slowest = dict(

@@ -65,6 +65,25 @@ def _plain_value(v) -> bool:
 #: call sites, so the cache is tiny and never stale).
 _NAMES_CACHE: dict = {}
 
+#: Request-scale guard (ADVICE r15): the rows a caller collects to
+#: the driver — a probe batch, a query-term set — are request-scale
+#: BY CONTRACT, and a caller violating the contract should fail with
+#: THIS error (and before it, spark.driver.maxResultSize) rather than
+#: an opaque driver OOM.
+_PROBE_COLLECT_CAP = 1 << 20
+
+
+def _check_request_scale(rows: list, what: str) -> list:
+    """``rows`` unchanged, or a ValueError past _PROBE_COLLECT_CAP."""
+    if len(rows) > _PROBE_COLLECT_CAP:
+        raise ValueError(
+            f"{what}: collected {len(rows)} rows — request-scale"
+            f" batches are routed on the driver by contract (cap"
+            f" {_PROBE_COLLECT_CAP}); corpus-scale scoring belongs in"
+            f" the distributed batch entries"
+        )
+    return rows
+
 
 def local_df(sess: SparkSession, rows, schema: str) -> DataFrame:
     """``sess.createDataFrame(rows, schema)`` with the Arrow fast

@@ -732,7 +732,7 @@ def _bm25_base(spark: SparkSession, sf_dir: str):
       sorted distinct term list for InSet restrictions.
     """
     from kcidb_spark.cache import scoped_persist
-    from kcidb_spark.localrel import local_df
+    from kcidb_spark.localrel import _check_request_scale, local_df
 
     docs = table(spark, sf_dir, "documents", spread=True)
     arr = F.split(_norm_text(F.col("text")), " ")
@@ -755,9 +755,12 @@ def _bm25_base(spark: SparkSession, sf_dir: str):
     qterm_rows = sorted(
         {
             (int(r["doc_id"]), r["w"])
-            for r in tf.filter(F.col("doc_id") < _BM25_QUERIES)
-            .select("doc_id", "w")
-            .collect()
+            for r in _check_request_scale(
+                tf.filter(F.col("doc_id") < _BM25_QUERIES)
+                .select("doc_id", "w")
+                .collect(),
+                "_bm25_base",
+            )
         }
     )
     qterms = local_df(spark, qterm_rows, "q_id long, w string")

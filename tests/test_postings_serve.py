@@ -93,7 +93,7 @@ def test_as_of_replays_historical_statistics(spark, tmp_path):
 def test_hybrid_store_publishes_both_modalities_atomically(spark, tmp_path):
     from kcidb_spark.queries.streaming_exec import (
         ingest_vec_batch_txn,
-        probe_visible_topk,
+        probe_tiered_topk,
     )
 
     cents = [(0, [1.0, 0.0], 1.0), (1, [0.0, 1.0], 1.0)]
@@ -114,7 +114,7 @@ def test_hybrid_store_publishes_both_modalities_atomically(spark, tmp_path):
     # One publish made BOTH visible.
     assert read_serve_watermark(store) == 0
     assert {r[2] for r in _probe(spark, store)} == {1}
-    sem = probe_visible_topk(
+    sem = probe_tiered_topk(
         _vecs([(100, (1.0, 0.1))]), store, cents, 5
     ).collect()
     assert {r["n_id"] for r in sem} == {1}
@@ -131,7 +131,7 @@ def test_hybrid_store_publishes_both_modalities_atomically(spark, tmp_path):
     )
     assert read_serve_watermark(store) == 0
     assert {r[2] for r in _probe(spark, store)} == {1}
-    sem = probe_visible_topk(
+    sem = probe_tiered_topk(
         _vecs([(100, (1.0, 0.1))]), store, cents, 5
     ).collect()
     assert {r["n_id"] for r in sem} == {1}
@@ -500,7 +500,7 @@ def test_hybrid_delete_is_atomic_across_legs(spark, tmp_path):
         )
         sem = {
             r["n_id"]
-            for r in se.probe_visible_topk(qv, store, cents, 10).collect()
+            for r in se.probe_tiered_topk(qv, store, cents, 10).collect()
         }
         return lex, sem
 

@@ -22,7 +22,7 @@ from kcidb_spark.queries.streaming_exec import (
     compact_store_txn,
     ingest_postings_batch_txn,
     ingest_pq_batch_txn,
-    ingest_vec_batch_tiered,
+    ingest_vec_batch_txn,
     init_pq_store,
     postings_store_gc,
     probe_pq_topk,
@@ -64,12 +64,12 @@ def _tp(spark, store, as_of=None):
 def test_tiered_as_of_crosses_fold_within_horizon(spark, tmp_path):
     store = str(tmp_path / "store")
     set_store_retention(store, 10)
-    ingest_vec_batch_tiered(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
     live_at_0 = _tp(spark, store)
-    ingest_vec_batch_tiered(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
     live_at_1 = _tp(spark, store)
     compact_store_txn(spark, store, 1)
-    ingest_vec_batch_tiered(_vecs(spark, [(30, (0.97, 0.02))]), store, 2, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(30, (0.97, 0.02))]), store, 2, CENTS)
 
     # Pre-fold snapshots replay exactly (the r13 layout raised here).
     assert _tp(spark, store, as_of=0) == live_at_0
@@ -87,7 +87,7 @@ def test_tiered_as_of_crosses_fold_within_horizon(spark, tmp_path):
     # as_of=2 serves from gen_1 ∪ nothing, identical across GC.
     live_at_2 = _tp(spark, store)
     compact_store_txn(spark, store, 2)
-    ingest_vec_batch_tiered(_vecs(spark, [(40, (0.99, 0.01))]), store, 3, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(40, (0.99, 0.01))]), store, 3, CENTS)
     serve_store_gc(store)
     assert _tp(spark, store, as_of=2) == live_at_2
     assert _tp(spark, store, as_of=0) == live_at_0
@@ -96,16 +96,16 @@ def test_tiered_as_of_crosses_fold_within_horizon(spark, tmp_path):
 def test_tiered_raise_only_past_horizon_then_gc_reclaims(spark, tmp_path):
     store = str(tmp_path / "store")
     set_store_retention(store, 3)
-    ingest_vec_batch_tiered(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
     live_at_0 = _tp(spark, store)
-    ingest_vec_batch_tiered(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
     compact_store_txn(spark, store, 1)  # genesis superseded at wm=1
 
     # Within horizon (wm=1, 1 > 1-3): serves.
     assert _tp(spark, store, as_of=0) == live_at_0
     # Advance the watermark past the horizon: 1 <= 4-3.
     for b in (2, 3, 4):
-        ingest_vec_batch_tiered(
+        ingest_vec_batch_txn(
             _vecs(spark, [(20 + b, (0.9, 0.1))]), store, b, CENTS
         )
     with pytest.raises(ValueError, match="retention horizon"):
@@ -123,8 +123,8 @@ def test_tiered_raise_only_past_horizon_then_gc_reclaims(spark, tmp_path):
 
 def test_retain_zero_keeps_the_refusal_contract(spark, tmp_path):
     store = str(tmp_path / "store")
-    ingest_vec_batch_tiered(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
-    ingest_vec_batch_tiered(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
     compact_store_txn(spark, store, 1)
     man = read_serve_manifest(store)
     assert "history" not in man
@@ -243,9 +243,6 @@ def test_hybrid_as_of_crosses_both_modalities_folds(spark, tmp_path):
     mixing layouts across modalities)."""
     from kcidb_spark.queries.streaming_exec import (
         _store_pb,
-        ingest_postings_batch_txn,
-        ingest_vec_batch_txn,
-        probe_visible_topk,
         publish_visibility,
     )
 
@@ -265,7 +262,7 @@ def test_hybrid_as_of_crosses_both_modalities_folds(spark, tmp_path):
     def vprobe(as_of=None):
         return sorted(
             (r["q_id"], r["n_id"], r["sim"])
-            for r in probe_visible_topk(
+            for r in probe_tiered_topk(
                 _vecs(spark, ((100, (1.0, 0.1)),)), store, CENTS, 5,
                 as_of=as_of,
             ).collect()
@@ -302,14 +299,12 @@ def test_history_as_of_probe_stays_partition_pruned(spark, tmp_path):
     listing (the design claim in SCALE.md's retention note)."""
     import re
 
-    from kcidb_spark.queries.streaming_exec import probe_tiered_topk
-
     store = str(tmp_path / "store")
     set_store_retention(store, 10)
-    ingest_vec_batch_tiered(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
-    ingest_vec_batch_tiered(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
     compact_store_txn(spark, store, 1)
-    ingest_vec_batch_tiered(_vecs(spark, [(30, (0.97, 0.02))]), store, 2, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(30, (0.97, 0.02))]), store, 2, CENTS)
 
     plan = (
         probe_tiered_topk(

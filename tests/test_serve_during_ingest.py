@@ -5,7 +5,7 @@ certified alone, but nothing pinned what a probe observes WHILE an
 ingest batch overwrites its ``batch_id=N`` subtree — a parquet
 directory overwrite is not atomic, so an unmanifested reader can list
 a half-replaced subtree.  These tests drive the transaction bodies
-(streaming_exec.ingest_vec_batch_txn / probe_visible_topk) through
+(streaming_exec.ingest_vec_batch_txn / probe_tiered_topk) through
 every crash window the manifest closes:
 
 * a probe racing an UNPUBLISHED subtree serves the old watermark's
@@ -29,7 +29,7 @@ from pyspark.sql import Row
 
 from kcidb_spark.queries.streaming_exec import (
     ingest_vec_batch_txn,
-    probe_visible_topk,
+    probe_tiered_topk,
     read_serve_watermark,
 )
 
@@ -46,7 +46,7 @@ def _vecs(spark, ids_and_points):
 
 
 def _probe(spark, store, qs=((100, (1.0, 0.1)),), k=5):
-    df = probe_visible_topk(_vecs(spark, qs), store, CENTS, k)
+    df = probe_tiered_topk(_vecs(spark, qs), store, CENTS, k)
     return sorted(
         (r["probe_round"], r["q_id"], r["n_id"], r["sim"])
         for r in df.collect()
@@ -153,7 +153,7 @@ def test_probe_scan_is_partition_pruned(spark, tmp_path):
         _vecs(spark, [(30, (0.5, 0.5))]), store, 1, CENTS,
         fail_before_manifest=True,
     )
-    df = probe_visible_topk(
+    df = probe_tiered_topk(
         _vecs(spark, [(100, (1.0, 0.1))]), store, CENTS, 3, nprobe=1
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -169,8 +169,6 @@ def test_probe_scan_is_partition_pruned(spark, tmp_path):
 
 
 def _tprobe(spark, store, qs=((100, (1.0, 0.1)),), k=5):
-    from kcidb_spark.queries.streaming_exec import probe_tiered_topk
-
     return sorted(
         (r["probe_round"], r["q_id"], r["n_id"], r["sim"])
         for r in probe_tiered_topk(_vecs(spark, qs), store, CENTS, k).collect()
@@ -184,15 +182,14 @@ def test_compaction_is_invisible_to_probes(spark, tmp_path):
     lands and the tiered read serves generation ∪ tail."""
     from kcidb_spark.queries.streaming_exec import (
         compact_store_txn,
-        ingest_vec_batch_tiered,
         read_serve_manifest,
     )
 
     store = str(tmp_path / "store")
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(10, (0.9, 0.1)), (11, (0.1, 0.9))]), store, 0, CENTS
     )
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS
     )
     before = _tprobe(spark, store)
@@ -210,7 +207,7 @@ def test_compaction_is_invisible_to_probes(spark, tmp_path):
     assert _tprobe(spark, store) == before
 
     # A tail batch after the compaction: generation ∪ tail served.
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(30, (0.97, 0.02))]), store, 2, CENTS
     )
     after = _tprobe(spark, store)
@@ -227,16 +224,15 @@ def test_second_generation_folds_first(spark, tmp_path):
 
     from kcidb_spark.queries.streaming_exec import (
         compact_store_txn,
-        ingest_vec_batch_tiered,
         read_serve_manifest,
     )
 
     store = str(tmp_path / "store")
     # vec 10 arrives in batch 0 AND re-arrives in batch 2 (re-crawl).
-    ingest_vec_batch_tiered(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
-    ingest_vec_batch_tiered(_vecs(spark, [(20, (0.1, 0.9))]), store, 1, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(20, (0.1, 0.9))]), store, 1, CENTS)
     compact_store_txn(spark, store, 1)
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(10, (0.9, 0.1)), (30, (0.8, 0.2))]), store, 2, CENTS
     )
     compact_store_txn(spark, store, 2)
@@ -270,23 +266,22 @@ def test_gc_deletes_only_unreferenced_and_probes_unchanged(spark, tmp_path):
 
     from kcidb_spark.queries.streaming_exec import (
         compact_store_txn,
-        ingest_vec_batch_tiered,
         serve_store_gc,
     )
 
     store = str(tmp_path / "store")
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(10, (0.9, 0.1)), (11, (0.1, 0.9))]), store, 0, CENTS
     )
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS
     )
     compact_store_txn(spark, store, 1)
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(30, (0.97, 0.02))]), store, 2, CENTS
     )
     compact_store_txn(spark, store, 2)       # gen_2 supersedes gen_1
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(40, (0.2, 0.8))]), store, 3, CENTS
     )
     before = _tprobe(spark, store)
@@ -317,11 +312,6 @@ def test_t21_stream_restart_mid_run(spark, tmp_path):
     import shutil
     import time
 
-    from kcidb_spark.queries.streaming_exec import (
-        ingest_vec_batch_txn,
-        probe_visible_topk,
-    )
-
     batches = [
         [(10, (0.9, 0.1)), (11, (0.1, 0.9))],
         [(20, (0.95, 0.05))],
@@ -348,7 +338,7 @@ def test_t21_stream_restart_mid_run(spark, tmp_path):
         if epoch_id % 2 == 0:
             ingest_vec_batch_txn(batch_df, store, epoch_id // 2, CENTS)
         else:
-            probe_visible_topk(
+            probe_tiered_topk(
                 batch_df, store, CENTS, 5
             ).write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
 
@@ -387,7 +377,7 @@ def test_t21_stream_restart_mid_run(spark, tmp_path):
         ingest_vec_batch_txn(_vecs(spark, b), ref_store, i, CENTS)
         expected += [
             tuple(r)
-            for r in probe_visible_topk(qdf, ref_store, CENTS, 5)
+            for r in probe_tiered_topk(qdf, ref_store, CENTS, 5)
             .select("probe_round", "q_id", "n_id", "sim")
             .collect()
         ]
@@ -411,12 +401,11 @@ def test_delete_compact_gc_lifecycle(spark, tmp_path):
     from kcidb_spark.queries.streaming_exec import (
         compact_store_txn,
         delete_vec_batch_txn,
-        ingest_vec_batch_tiered,
         serve_store_gc,
     )
 
     store = str(tmp_path / "store")
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(10, (0.9, 0.1)), (11, (0.1, 0.9))]), store, 0, CENTS
     )
     # Delete vec 10 at batch 1 (tombstone rides the same watermark).
@@ -427,7 +416,7 @@ def test_delete_compact_gc_lifecycle(spark, tmp_path):
     assert {r[2] for r in hidden} == {11} and all(r[0] == 1 for r in hidden)
 
     # Re-ingest vec 10 at batch 2: a NEW version, visible again.
-    ingest_vec_batch_tiered(
+    ingest_vec_batch_txn(
         _vecs(spark, [(10, (0.9, 0.1))]), store, 2, CENTS
     )
     back = _tprobe(spark, store)
@@ -458,10 +447,7 @@ def test_delete_compact_gc_lifecycle(spark, tmp_path):
 def test_flat_probe_tombstone_ordering(spark, tmp_path):
     """The flat (t21) probe under the same ordering semantics, plus
     the crash window: an unpublished tombstone is invisible."""
-    from kcidb_spark.queries.streaming_exec import (
-        delete_vec_batch_txn,
-        ingest_vec_batch_txn,
-    )
+    from kcidb_spark.queries.streaming_exec import delete_vec_batch_txn
 
     store = str(tmp_path / "store")
     ingest_vec_batch_txn(
@@ -492,11 +478,7 @@ def test_as_of_probe_replays_history_and_future_raises(spark, tmp_path):
     watermark raises."""
     import pytest as _pytest
 
-    from kcidb_spark.queries.streaming_exec import (
-        delete_vec_batch_txn,
-        ingest_vec_batch_txn,
-        probe_visible_topk,
-    )
+    from kcidb_spark.queries.streaming_exec import delete_vec_batch_txn
 
     store = str(tmp_path / "store")
     live = []
@@ -514,7 +496,7 @@ def test_as_of_probe_replays_history_and_future_raises(spark, tmp_path):
     def as_of(n):
         return sorted(
             (r["probe_round"], r["q_id"], r["n_id"], r["sim"])
-            for r in probe_visible_topk(
+            for r in probe_tiered_topk(
                 _vecs(spark, ((100, (1.0, 0.1)),)), store, CENTS, 5,
                 as_of=n,
             ).collect()
@@ -567,65 +549,34 @@ def test_reingest_changed_vector_serves_newest_once(spark, tmp_path):
 
 
 def test_visibility_manifest_is_layout_agnostic(spark, tmp_path):
-    """One manifest, every layout: a watermark published by the flat
-    ingest path is visible to tiered probes and vice versa, a delete
-    transaction advances the same single file, and a legacy store
-    carrying only the r12 ``_watermark`` file is still readable
-    (read-only fallback)."""
+    """One manifest: every ingest and delete transaction advances the
+    same single ``_manifest.json`` (no second visibility file is ever
+    written), and the probe serves each publish."""
     from kcidb_spark.queries.streaming_exec import (
         delete_vec_batch_txn,
-        ingest_vec_batch_tiered,
         read_serve_manifest,
     )
 
     store = str(tmp_path / "store")
-    ingest_vec_batch_txn(                       # flat publish
+    ingest_vec_batch_txn(                       # first publish
         _vecs(spark, [(10, (0.9, 0.1)), (11, (0.1, 0.9))]), store, 0, CENTS
     )
-    ingest_vec_batch_tiered(                    # tiered publish
+    ingest_vec_batch_txn(                       # second publish
         _vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS
     )
-    # Both paths advanced ONE file; both probe layouts see both batches.
+    # Both publishes advanced ONE file; the probe sees both batches.
     assert not os.path.exists(os.path.join(store, "_watermark"))
     assert read_serve_manifest(store)["wm"] == 1
     assert {r[2] for r in _probe(spark, store)} == {10, 11, 20}
     assert {r[2] for r in _tprobe(spark, store)} == {10, 11, 20}
 
-    # A delete rides the same manifest: visible to BOTH probe layouts.
+    # A delete rides the same manifest.
     delete_vec_batch_txn(
         spark, _vecs(spark, [(20, (0.0, 0.0))]).select("vec_id"), store, 2
     )
     assert read_serve_manifest(store)["wm"] == 2
     assert {r[2] for r in _probe(spark, store)} == {10, 11}
     assert {r[2] for r in _tprobe(spark, store)} == {10, 11}
-
-
-def test_legacy_watermark_file_still_readable(spark, tmp_path):
-    """A store written before the unification (only ``_watermark`` on
-    disk) reads at its legacy watermark; the first new-style
-    transaction migrates it to the json manifest."""
-    from kcidb_spark.queries.streaming_exec import read_serve_manifest
-
-    store = str(tmp_path / "store")
-    ingest_vec_batch_txn(
-        _vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS
-    )
-    ingest_vec_batch_txn(
-        _vecs(spark, [(20, (0.95, 0.05))]), store, 1,
-        CENTS, fail_before_manifest=True,
-    )
-    # Rewrite the store's visibility as the r12 flat layout: no json,
-    # legacy _watermark pointing at batch 1.
-    os.remove(os.path.join(store, "_manifest.json"))
-    with open(os.path.join(store, "_watermark"), "w") as fh:
-        fh.write("1")
-    assert read_serve_watermark(store) == 1
-    assert read_serve_manifest(store)["compacted_upto"] == -1
-    assert {r[2] for r in _probe(spark, store)} == {10, 20}
-    # A new transaction publishes the json; the legacy file is inert.
-    ingest_vec_batch_txn(_vecs(spark, [(30, (0.8, 0.2))]), store, 2, CENTS)
-    assert read_serve_manifest(store)["wm"] == 2
-    assert {r[2] for r in _probe(spark, store)} == {10, 20, 30}
 
 
 def test_tiered_as_of_respects_the_compaction_horizon(spark, tmp_path):
@@ -635,11 +586,7 @@ def test_tiered_as_of_respects_the_compaction_horizon(spark, tmp_path):
     committed watermark."""
     import pytest as _pytest
 
-    from kcidb_spark.queries.streaming_exec import (
-        compact_store_txn,
-        ingest_vec_batch_tiered,
-        probe_tiered_topk,
-    )
+    from kcidb_spark.queries.streaming_exec import compact_store_txn
 
     def tp(as_of=None):
         return sorted(
@@ -651,11 +598,11 @@ def test_tiered_as_of_respects_the_compaction_horizon(spark, tmp_path):
         )
 
     store = str(tmp_path / "store")
-    ingest_vec_batch_tiered(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
-    ingest_vec_batch_tiered(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(10, (0.9, 0.1))]), store, 0, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(20, (0.95, 0.05))]), store, 1, CENTS)
     live_at_1 = tp()
     compact_store_txn(spark, store, 1)
-    ingest_vec_batch_tiered(_vecs(spark, [(30, (0.97, 0.02))]), store, 2, CENTS)
+    ingest_vec_batch_txn(_vecs(spark, [(30, (0.97, 0.02))]), store, 2, CENTS)
 
     assert {r[2] for r in tp()} == {10, 20, 30}
     # as_of == the compacted point: generation only, equals the live

@@ -59,7 +59,7 @@ def main() -> None:
         "ingest_postings_batch_txn",
         "ingest_vec_batch_txn",
         "probe_postings_bm25",
-        "probe_visible_topk",
+        "probe_tiered_topk",
         "publish_visibility",
         "ingest_pq_batch_txn",
         "probe_pq_topk",

@@ -862,7 +862,7 @@ def run_hybrid_split(sf_dir: str, label: str, spark,
         ingest_postings_batch_txn,
         ingest_vec_batch_txn,
         probe_postings_bm25,
-        probe_visible_topk,
+        probe_tiered_topk,
         publish_visibility,
         read_serve_manifest,
     )
@@ -945,7 +945,7 @@ def run_hybrid_split(sf_dir: str, label: str, spark,
         lex = probe_postings_bm25(
             batch_df.select("doc_id", "text"), store, 10, df_cap=200
         )
-        sem = probe_visible_topk(
+        sem = probe_tiered_topk(
             batch_df.select(F.col("doc_id").alias("vec_id"), "v"),
             store, cents, 10,
         )
