@@ -154,17 +154,32 @@ def pq_dt_driver(qrows, books, n_subs: int, subdim: int):
     return rows
 
 
-def inrow_coarse_sql(cents, vec_col: str = "q") -> str:
-    """SQL text: nearest-centroid id as ONE per-row expression over
-    the driver-held centroid list — ``array_min(array(struct(d2,
-    c_id)...)).c``, exactly :func:`coarse_assign`'s ``min_by(c_id,
-    struct(d2, c_id))`` without the crossJoin ×k explode or the
-    id-keyed exchange that collapsed it (guide §2.4).  Centroids are
-    control-plane-sized by contract, so the expression is bounded by
-    k·dim, not data."""
-    from kcidb_spark.operators.clustering import _argmin_centroid_sql
+def subspace_codes_sql(
+    books, n_subs: int, subdim: int, vec_col: str = "q"
+) -> list:
+    """[(s, SQL text)]: each subspace's PQ code of ``vec_col`` as the
+    in-row ``array_min(array(struct(d2, m)...)).m`` argmin over that
+    subspace's literal codewords, ascending s; subspaces absent from
+    the books (or ≥ ``n_subs``) are omitted.  The nearest-centroid
+    twin is clustering._argmin_centroid_sql."""
+    from kcidb_spark.operators.clustering import (
+        _int_array_sql,
+        d2_int_expr,
+    )
 
-    return _argmin_centroid_sql(cents, vec_col)
+    by_s: dict[int, list] = {}
+    for s, m, bq in books:
+        by_s.setdefault(int(s), []).append((int(m), bq))
+    out = []
+    for s in sorted(k for k in by_s if k < n_subs):
+        sub = f"slice({vec_col}, {s * subdim + 1}, {subdim})"
+        entries = [
+            f"struct({d2_int_expr(sub, _int_array_sql(bq))} as d,"
+            f" cast({m} as bigint) as m)"
+            for m, bq in sorted(by_s[s])
+        ]
+        out.append((s, f"array_min(array({', '.join(entries)})).m"))
+    return out
 
 
 def inrow_codes_sql(
@@ -179,26 +194,10 @@ def inrow_codes_sql(
     tie-breaks are min(struct(d2, m)).  Replaces an explode ×S, a
     broadcast join and an (id, s)-keyed exchange with a projection in
     the scan task."""
-    from kcidb_spark.operators.clustering import (
-        _int_array_sql,
-        d2_int_expr,
-    )
-
-    by_s: dict[int, list] = {}
-    for s, m, bq in books:
-        by_s.setdefault(int(s), []).append((int(m), bq))
-    terms = []
-    for s in sorted(k for k in by_s if k < n_subs):
-        sub = f"slice({vec_col}, {s * subdim + 1}, {subdim})"
-        entries = [
-            f"struct({d2_int_expr(sub, _int_array_sql(bq))} as d,"
-            f" cast({m} as bigint) as m)"
-            for m, bq in sorted(by_s[s])
-        ]
-        terms.append(
-            f"struct(cast({s} as bigint) as s,"
-            f" array_min(array({', '.join(entries)})).m as m)"
-        )
+    terms = [
+        f"struct(cast({s} as bigint) as s, {code} as m)"
+        for s, code in subspace_codes_sql(books, n_subs, subdim, vec_col)
+    ]
     if not terms:
         # Empty codebook → zero code rows per input row via a TYPED
         # empty inline (a bare array() is VOID and fails analysis) —

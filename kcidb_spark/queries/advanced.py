@@ -1199,9 +1199,9 @@ def ivf_pq_kmeans_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast books; the only corpus-keyed exchanges are the encode
     partial-agg and the (q,n)-keyed ADC sum after the probed-cluster
     semi-join."""
+    from kcidb_spark.operators.clustering import _argmin_centroid_sql
     from kcidb_spark.operators.ivf import (
         adc_topk,
-        inrow_coarse_sql,
         inrow_codes_sql,
         pq_dt_driver,
         route_int_driver,
@@ -1253,7 +1253,7 @@ def ivf_pq_kmeans_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tie-breaks, subspaces absent from the books omitted).
     n_codes = vecs_plan.select(
         F.col("id").alias("n_id"),
-        F.expr(inrow_coarse_sql(cents)).alias("c_id"),
+        F.expr(_argmin_centroid_sql(cents)).alias("c_id"),
         F.expr(inrow_codes_sql(books, _PQK_SUBS, _PQK_SUBDIM)),
     )
     return adc_topk(n_codes, probes, dt, _IVF_K)
@@ -1356,9 +1356,9 @@ def ivf_pq_rotated_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bit-identical cross-engine.  Scale shape identical to
     ivf_pq_kmeans_adc_topk: the rotation is a per-row projection
     (zero shuffle), everything downstream reuses the shared stages."""
+    from kcidb_spark.operators.clustering import _argmin_centroid_sql
     from kcidb_spark.operators.ivf import (
         adc_topk,
-        inrow_coarse_sql,
         inrow_codes_sql,
         pq_dt_driver,
         route_int_driver,
@@ -1426,7 +1426,7 @@ def ivf_pq_rotated_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tie-breaks, subspaces absent from the books omitted).
     n_codes = vecs_plan.select(
         F.col("id").alias("n_id"),
-        F.expr(inrow_coarse_sql(cents)).alias("c_id"),
+        F.expr(_argmin_centroid_sql(cents)).alias("c_id"),
         F.expr(inrow_codes_sql(books, _PQK_SUBS, _PQK_SUBDIM)),
     )
     return adc_topk(n_codes, probes, dt, _IVF_K)
@@ -1683,11 +1683,13 @@ def ivf_pq_residual_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     residuals map-side; training/encode/search shapes match the
     non-residual entry (driver-held books, probed-cluster semi-join,
     (q,n)-keyed integer ADC sum)."""
-    from kcidb_spark.operators.clustering import _int_array_sql
+    from kcidb_spark.operators.clustering import (
+        _argmin_centroid_sql,
+        _int_array_sql,
+    )
     from kcidb_spark.operators.ivf import (
         adc_topk,
         d2_int,
-        inrow_coarse_sql,
         inrow_codes_sql,
         route_int_driver,
         subvectors,
@@ -1714,7 +1716,7 @@ def ivf_pq_residual_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             + " END"
         ) if cents_t else "cast(null as array<bigint>)"
         res_t = vecs.withColumn(
-            "c_id", F.expr(inrow_coarse_sql(cents_t))
+            "c_id", F.expr(_argmin_centroid_sql(cents_t))
         ).select(
             "id", "c_id",
             F.expr(f"zip_with(q, {case}, (a, b) -> a - b)").alias("r"),
@@ -1772,7 +1774,7 @@ def ivf_pq_residual_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         else "cast(null as array<bigint>)"
     )
     res = vecs_plan.withColumn(
-        "c_id", F.expr(inrow_coarse_sql(cents))
+        "c_id", F.expr(_argmin_centroid_sql(cents))
     ).select(
         "id",
         "c_id",

@@ -1023,12 +1023,8 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import time
 
-    from kcidb_spark.operators.similarity import dot_expr, ivf_rank
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
+    from kcidb_spark.operators.similarity import ivf_rank
+    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     vecs = emb.select(
@@ -1043,12 +1039,7 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store, store_schema = _ivf_session_store(spark, sf_dir)
     # Centroids as driver-held literals: (c_id, cv, cn).
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
 
     # Stage each query as its own parquet file (ordered mtimes): one
     # query per micro-batch — the online arrival pattern.  ONE Spark
@@ -1202,18 +1193,12 @@ def t20_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
 
     # Stage 4 arrival batches by vec_id-hash prefix (deterministic,
     # covers every vector exactly once), ordered mtimes.
@@ -1328,24 +1313,19 @@ def _nearest_centroid_sql(cents: list) -> str:
     return f"array_min(array({', '.join(entries)})).c"
 
 
-def _parallel_writes(*thunks) -> None:
-    """Run one transaction's INDEPENDENT subtree writes as concurrent
-    jobs (guide §2.6 "overlap independent jobs"): actions are only
-    sequential because driver code calls them sequentially, and these
-    micro-batch-bounded writes each leave most executor slots idle —
-    overlapped, the txn's wall approaches max() of its writes instead
-    of their sum.  All threads JOIN before returning (first exception
-    re-raised), so the crash/replay contract is untouched: nothing is
-    published until every subtree write completed, and a failed write
-    still fails the txn before its manifest advance."""
-    if len(thunks) == 1:
-        thunks[0]()
-        return
-    from concurrent.futures import ThreadPoolExecutor
+def _float_cents(vecs: DataFrame) -> list:
+    """The float stores' static model, driver-held: the lowest
+    ``_IVF_CENTROIDS`` vectors of ``vecs`` (vec_id, v) as
+    (c_id, cv, cn)."""
+    from kcidb_spark.operators.similarity import dot_expr
+    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        for f in [pool.submit(t) for t in thunks]:
-            f.result()
+    return [
+        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
+        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
+        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
+        .collect()
+    ]
 
 
 def _layout_by(df: DataFrame, col: str) -> DataFrame:
@@ -1379,23 +1359,9 @@ def _layout_by(df: DataFrame, col: str) -> DataFrame:
     return df.hint("rebalance", col)
 
 
-def ingest_vec_batch_txn(
-    batch_df: DataFrame,
-    store: str,
-    batch_id: int,
-    cents: list,
-    fail_before_manifest: bool = False,
-) -> None:
-    """One serving-tier ingest transaction (the t20 subtree idiom plus
-    the manifest publish that makes it SAFE TO SERVE FROM): assign the
-    batch's vectors to their nearest static centroid (broadcast cross
-    join + map-side min_by — no corpus state), OVERWRITE the batch's
-    own ``batch_id=N`` subtree, then atomically publish the watermark.
-    A crash anywhere before the publish leaves the store readable at
-    the OLD watermark (the new subtree exists but is invisible);
-    replaying the batch overwrites the subtree and publishes — the
-    accept state at every crash point is exactly-once.
-    ``fail_before_manifest`` injects that crash for the tests."""
+def _vec_write(batch_df: DataFrame, batch_id: int, cents: list) -> tuple:
+    """The float ingest write: the batch's vectors assigned to their
+    nearest static centroid, for ``data/batch_id=N`` by c_id."""
     from kcidb_spark.operators.similarity import dot_expr
 
     # Map-side assignment (guide §2.3/§2.4): the argmin runs as one
@@ -1409,13 +1375,27 @@ def ingest_vec_batch_txn(
         .withColumn("c_id", F.expr(_nearest_centroid_sql(cents)))
         .select("vec_id", "v", "nrm", "c_id")
     )
-    assigned = _layout_by(assigned, "c_id")
-    assigned.write.mode("overwrite").partitionBy("c_id").parquet(
-        os.path.join(store, "data", f"batch_id={batch_id}")
+    return _layout_by(assigned, "c_id"), lsm.batch("data", batch_id), "c_id"
+
+
+def ingest_vec_batch_txn(
+    batch_df: DataFrame,
+    store: str,
+    batch_id: int,
+    cents: list,
+    fail_before_manifest: bool = False,
+) -> None:
+    """One serving-tier ingest transaction (the t20 subtree idiom plus
+    the manifest publish that makes it SAFE TO SERVE FROM): assign the
+    batch's vectors to their nearest static centroid (in-row argmin —
+    no corpus state), OVERWRITE the batch's own ``batch_id=N``
+    subtree, then atomically publish the watermark (lsm.commit: a
+    crash before the publish leaves the store at the OLD watermark,
+    a replay overwrites and publishes — exactly-once)."""
+    lsm.commit(
+        store, [_vec_write(batch_df, batch_id, cents)],
+        fail_before_manifest, wm=batch_id,
     )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, wm=batch_id)
 
 
 #: Inlined float routing model bound: len(cents) × dim doubles (e.g.
@@ -1532,12 +1512,10 @@ def delete_vec_batch_txn(
     replaces itself), then advance the SAME watermark ingest uses, so
     a probe that can see batch N's data can also see batch N's
     deletes and never a torn mixture.  ``ids_df``: (vec_id)."""
-    ids_df.select("vec_id").write.mode("overwrite").parquet(
-        os.path.join(store, "tombstones", f"batch_id={batch_id}")
+    lsm.commit(
+        store, [lsm.tombstones(ids_df, "vec", batch_id)],
+        fail_before_manifest, wm=batch_id,
     )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, wm=batch_id)
 
 
 #: Deterministic 3-way arrival split by md5(vec_id) first hex char —
@@ -1744,23 +1722,13 @@ def t21_stream_serve_during_ingest(
     import shutil
     import time
 
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
+    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
 
     # Stage the interleaved arrivals: ingest batch i then a probe of
     # the full query workload, alternating, mtime-ordered.  The TWO
@@ -1931,21 +1899,13 @@ def ivf_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout (the serving-tier accounting of ann_ivf_stored_probe)."""
     import shutil
 
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-
     compacted, built = _session_store_dir(spark, sf_dir, "compactgen")
     if not built:
         emb = table(spark, sf_dir, "embeddings", spread=True)
         vecs = emb.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
-        cents = [
-            (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-            for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-            .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-            .collect()
-        ]
+        cents = _float_cents(vecs)
         store = _scratch_dir("compact_store")
         pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
         for i, chars in enumerate(_COMPACT_RANGES):
@@ -2008,13 +1968,10 @@ def compact_store_txn(
         spark, store, "data", _T21_SCHEMA, ("vec_id", "v", "nrm", "c_id"),
         man, upto,
     )
-    folded.withColumnRenamed("m_batch", "src_batch").write.mode(
-        "overwrite"
-    ).partitionBy("c_id").parquet(os.path.join(store, gen_dir))
-    if fail_before_manifest:
-        return
-    publish_visibility(
-        store, compacted_upto=upto, compacted_dir=gen_dir
+    lsm.commit(
+        store,
+        [(folded.withColumnRenamed("m_batch", "src_batch"), gen_dir, "c_id")],
+        fail_before_manifest, compacted_upto=upto, compacted_dir=gen_dir,
     )
 
 
@@ -2101,23 +2058,13 @@ def t22_stream_compact_while_serving(
     import shutil
     import time
 
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
+    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
     watch = _scratch_dir("t22_in")
     now = time.time()
 
@@ -2294,23 +2241,13 @@ def ann_serve_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     just cannot be returned).  Compaction drops tombstoned rows and
     GC then reclaims fully folded tombstone subtrees (pinned in
     tests/test_serve_during_ingest.py)."""
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
+    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
     store = _t21_session_store(spark, sf_dir, vecs, cents)
     snd = F.substring(F.md5(F.col("vec_id").cast("string")), 2, 1)
     delete_vec_batch_txn(
@@ -2410,23 +2347,13 @@ def ann_probe_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstones), which is exactly what the as_of read is FOR: the
     committed ``batch_id ≤ 1`` prefix is immutable, so the
     historical result is unchanged by later transactions."""
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
+    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
     store = _t21_session_store(spark, sf_dir, vecs, cents)
     assert read_serve_watermark(store) >= 2
     return probe_tiered_topk(
@@ -2455,23 +2382,13 @@ def ann_probe_as_of_retained(spark: SparkSession, sf_dir: str) -> DataFrame:
     refusal, GC protection, and the postings/PQ edition (pb and
     codebooks travel with the snapshot) are pinned in
     tests/test_retention.py."""
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
+    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
     store, built = _session_store_dir(spark, sf_dir, "t21tierret")
     if not built:
         set_store_retention(store, 10)
@@ -2556,13 +2473,11 @@ def ingest_q_batch_txn(
             _argmin_centroid_sql(_q_store_centroids(store))
         ).alias("c_id"),
     )
-    assigned = _layout_by(assigned, "c_id")
-    assigned.write.mode("overwrite").partitionBy("c_id").parquet(
-        os.path.join(store, "data", f"batch_id={batch_id}")
+    lsm.commit(
+        store,
+        [(_layout_by(assigned, "c_id"), lsm.batch("data", batch_id), "c_id")],
+        fail_before_manifest, wm=batch_id,
     )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, wm=batch_id)
 
 
 _Q_SCHEMA = "vec_id long, q array<bigint>, c_id bigint"
@@ -2644,14 +2559,10 @@ def retrain_store_txn(
         F.col("m_batch").alias("src_batch"),
         F.expr(_argmin_centroid_sql(cents)).alias("c_id"),
     )
-    reencoded = _layout_by(reencoded, "c_id")
-    reencoded.write.mode("overwrite").partitionBy("c_id").parquet(
-        os.path.join(store, gen_dir)
-    )
-    if fail_before_manifest:
-        return
-    publish_visibility(
+    lsm.commit(
         store,
+        [(_layout_by(reencoded, "c_id"), gen_dir, "c_id")],
+        fail_before_manifest,
         compacted_upto=wm,
         compacted_dir=gen_dir,
         centroids=[[c, list(q)] for c, q in cents],
@@ -2723,9 +2634,8 @@ def init_q_store(store: str, cents: list) -> None:
     the initial centroid set (and centroid_gen=0) WITHOUT advancing
     the watermark — the store is born empty but routable, the same
     way a FAISS index is trained before the first add()."""
-    os.makedirs(store, exist_ok=True)
-    publish_visibility(
-        store,
+    lsm.commit(
+        store, (),
         centroids=[[int(c), [int(x) for x in q]] for c, q in cents],
         centroid_gen=0,
     )
@@ -2952,6 +2862,50 @@ def _tok_tf_len(docs_df: DataFrame) -> DataFrame:
     )
 
 
+def _stats_writes(post: DataFrame, at) -> list:
+    """The term/corpus statistics partials of postings rows ``post``
+    (doc_id, w, len, wb), as writes at ``at(sub)`` — ONE definition
+    for a batch's partials (ingest) and a generation's exact
+    recompute (the fold)."""
+    return [
+        (
+            post.groupBy("wb", "w").agg(
+                F.count(F.lit(1)).cast("long").alias("df_b")
+            ),
+            at("tstats"), "wb",
+        ),
+        (
+            post.select("doc_id", "len").distinct().agg(
+                F.count(F.lit(1)).cast("long").alias("n_b"),
+                F.coalesce(F.sum("len"), F.lit(0)).cast("long").alias("s_b"),
+            ),
+            at("cstats"), None,
+        ),
+    ]
+
+
+def _postings_writes(batch_df: DataFrame, batch_id: int, pb: int) -> list:
+    """The three writes of a lexical ingest (see
+    ingest_postings_batch_txn), hashed into ``pb`` term buckets."""
+    # NOT persisted: measured at sf0.1 the three small writes
+    # recompute the one-exchange tokenize lineage faster than a cache
+    # materializes it (persist cost 2-10× the recompute on micro-batch
+    # volumes); at 100 TB the batch is micro-batch-bounded, not
+    # corpus-bounded, so the same trade holds.  The writes overlap
+    # (lsm.commit), so the epoch pays max() of them, not the sum.
+    tf = _tok_tf_len(batch_df).withColumn(
+        "wb", F.expr(f"pmod(xxhash64(w), {pb})")
+    )
+
+    def at(sub):
+        return lsm.batch(sub, batch_id)
+
+    return [
+        (tf.select("doc_id", "w", "tf", "len", "wb"), at("postings"), "wb"),
+        *_stats_writes(tf, at),
+    ]
+
+
 def ingest_postings_batch_txn(
     batch_df: DataFrame,
     store: str,
@@ -2972,10 +2926,10 @@ def ingest_postings_batch_txn(
     * ``cstats/batch_id=N``: ONE row (n_docs, sum_len) — corpus
       normalization constants as a visible-batch sum.
 
-    Then one manifest publish (publish_visibility) — the identical
+    Then one manifest publish (lsm.commit) — the identical
     crash/replay contract as ingest_vec_batch_txn, so a vector store
-    and a postings store can share one manifest (hybrid_serve_as_of
-    does exactly that).
+    and a postings store can share one manifest
+    (ingest_hybrid_batch_txn commits both legs in one publish).
 
     The term-bucket count is read FROM THE MANIFEST (recorded at
     first ingest; compiled _PB only seeds new stores), so every
@@ -2984,40 +2938,35 @@ def ingest_postings_batch_txn(
     (rebucket_postings_txn) migrates the store, after which new
     batches land under the new count automatically."""
     pb = _store_pb(store)
-    # NOT persisted: measured at sf0.1 the three small writes
-    # recompute the one-exchange tokenize lineage faster than a cache
-    # materializes it (persist cost 2-10× the recompute on micro-batch
-    # volumes); at 100 TB the batch is micro-batch-bounded, not
-    # corpus-bounded, so the same trade holds.
-    tf = _tok_tf_len(batch_df).withColumn(
-        "wb", F.expr(f"pmod(xxhash64(w), {pb})")
+    lsm.commit(
+        store, _postings_writes(batch_df, batch_id, pb),
+        fail_before_manifest, wm=batch_id, pb=pb,
     )
-    # The three subtree writes are independent until the publish —
-    # overlapped (guide §2.6), the epoch pays max() of them, not the
-    # sum; each still recomputes the one-exchange tokenize lineage
-    # (cheaper than a persist at micro-batch volume, see above).
-    _parallel_writes(
-        lambda: tf.select("doc_id", "w", "tf", "len", "wb")
-        .write.mode("overwrite")
-        .partitionBy("wb")
-        .parquet(os.path.join(store, "postings", f"batch_id={batch_id}")),
-        lambda: tf.groupBy("wb", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("df_b"))
-        .write.mode("overwrite")
-        .partitionBy("wb")
-        .parquet(os.path.join(store, "tstats", f"batch_id={batch_id}")),
-        lambda: tf.select("doc_id", "len")
-        .distinct()
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_b"),
-            F.coalesce(F.sum("len"), F.lit(0)).cast("long").alias("s_b"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(store, "cstats", f"batch_id={batch_id}")),
+
+
+def ingest_hybrid_batch_txn(
+    docs_df: DataFrame,
+    vecs_df: DataFrame,
+    store: str,
+    batch_id: int,
+    cents: list,
+) -> None:
+    """One HYBRID ingest transaction — the twin of
+    delete_hybrid_batch_txn: the batch's documents (postings, tstats,
+    cstats) and vectors (the inverted file) are written under the
+    SAME store, then ONE publish makes text and vectors visible
+    together and records ``pb``, so the two legs never serve torn
+    snapshots of each other.  The legs' subtrees are disjoint, so all
+    four writes overlap (lsm.commit)."""
+    pb = _store_pb(store)
+    lsm.commit(
+        store,
+        [
+            *_postings_writes(docs_df, batch_id, pb),
+            _vec_write(vecs_df, batch_id, cents),
+        ],
+        wm=batch_id, pb=pb,
     )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, wm=batch_id, pb=pb)
 
 
 def _store_pb(store: str) -> int:
@@ -3546,89 +3495,63 @@ def _hybrid_serve_oracle() -> str:
     """)
 
 
-@register(
-    "hybrid_serve_as_of",
-    oracle=_hybrid_serve_oracle(),
-    tags=("similarity", "ivf", "ranking", "pipeline", "index"),
-)
-def hybrid_serve_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HYBRID retrieval served ONLINE from one store: the postings
-    index (t23's transactions) and the vector inverted file (t21's)
-    live under the SAME manifest — one ingest batch commits both
-    subtrees, then ONE publish makes text and vectors visible
-    together, so the two legs can never serve torn snapshots of each
-    other.  The probe here reads at ``as_of=1`` while the store's
-    committed watermark is 2: BOTH legs replay watermark-1 visibility
-    (statistics included — the BM25 leg's df/N/S are watermark-1
-    sums), and the fused ranking must equal the batch
-    hybrid-over-groups-0-1 recompute.  Fusion is the certified
-    integer-exact RRF of hybrid_rrf_topk: one correctly-rounded
-    division per candidate, ranks only — which is exactly why a
-    manifest-gated IVF probe can stand in as the semantic leg at any
-    corpus size.
-
-    Scale shape: each leg is its own partition-pruned,
-    broadcast-routed probe (documented on probe_postings_bm25 /
-    probe_tiered_topk); the fusion joins two ≤ queries×{_HYB_LEG_K}
-    frames — control-plane sized."""
-    from pyspark.sql import Window as W  # noqa: F811 — batch scope
-
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-    from kcidb_spark.queries.ranking import _RRF_C
-
+def _hybrid_session_store(spark: SparkSession, sf_dir: str) -> tuple:
+    """(docs, vecs, cents, store): the session-keyed hybrid store both
+    hybrid entries serve from — the corpus in the standard three
+    md5-prefix batches, each committed by ONE hybrid ingest
+    transaction (text and vectors visible together)."""
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
+    vecs = table(spark, sf_dir, "embeddings", spread=True).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
     store, built = _session_store_dir(spark, sf_dir, "hybrid")
     if not built:
         dpfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
         vpfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
         for i, chars in enumerate(_T21_RANGES):
-            # One batch = both modalities; BOTH txns defer their
-            # publish so ONE explicit publish covers both subtrees —
-            # and carries ``pb``, so readers adapt to the hybrid
-            # store's bucket layout too (ADVICE r13 medium: the
-            # vector txn's wm-only publish left pb unrecorded).  The
-            # two legs touch disjoint subtrees, so they overlap
-            # (guide §2.6) — the publish still waits for both.
-            _parallel_writes(
-                lambda: ingest_postings_batch_txn(
-                    docs.filter(dpfx.isin(*list(chars))), store, i,
-                    fail_before_manifest=True,
-                ),
-                lambda: ingest_vec_batch_txn(
-                    vecs.filter(vpfx.isin(*list(chars))), store, i,
-                    cents, fail_before_manifest=True,
-                ),
+            ingest_hybrid_batch_txn(
+                docs.filter(dpfx.isin(*list(chars))),
+                vecs.filter(vpfx.isin(*list(chars))),
+                store, i, cents,
             )
-            publish_visibility(store, wm=i, pb=_store_pb(store))
         _mark_store_built(spark, store)
+    return docs, vecs, cents, store
 
-    # Overlap the two legs' construction jobs (guide §2.6) — each runs
-    # one request-scale routing job.
+
+def _hybrid_topk(
+    docs_q: DataFrame,
+    vecs_q: DataFrame,
+    store: str,
+    cents: list,
+    as_of: int = None,
+) -> DataFrame:
+    """The hybrid probe of a shared store: the BM25 leg and the IVF
+    leg (each top-``_HYB_LEG_K`` at the same visibility), fused by the
+    certified integer-exact RRF of hybrid_rrf_topk — (q_id, n_id,
+    r_lex, r_sem, rrf, rk), rk ≤ ``_HYB_FINAL_K``.
+
+    The two legs' construction each runs one request-scale routing
+    job (term buckets / probed clusters), so they overlap (guide
+    §2.6).  CONSTRAINT (ADVICE r15): pooled legs are read-only — they
+    must stay free of the module's shared mutable state
+    (scoped_persist's cache._PERSISTED, _trainer_cache_put) or the
+    overlap races."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import Window as W  # noqa: F811 — batch scope
+
+    from kcidb_spark.queries.ranking import _RRF_C
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_lex = pool.submit(
-            probe_postings_bm25,
-            docs.filter(F.col("doc_id") < _HYB_QUERIES),
-            store, _HYB_LEG_K, as_of=1,
+            probe_postings_bm25, docs_q, store, _HYB_LEG_K, as_of=as_of
         )
         f_sem = pool.submit(
-            probe_tiered_topk,
-            vecs.filter(F.col("vec_id") < _HYB_QUERIES),
-            store, cents, _HYB_LEG_K, as_of=1,
+            probe_tiered_topk, vecs_q, store, cents, _HYB_LEG_K,
+            as_of=as_of,
         )
         lex_raw, sem_raw = f_lex.result(), f_sem.result()
     lex = lex_raw.select("q_id", "n_id", F.col("rk").alias("r_lex"))
@@ -3657,6 +3580,39 @@ def hybrid_serve_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@register(
+    "hybrid_serve_as_of",
+    oracle=_hybrid_serve_oracle(),
+    tags=("similarity", "ivf", "ranking", "pipeline", "index"),
+)
+def hybrid_serve_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HYBRID retrieval served ONLINE from one store: the postings
+    index (t23's transactions) and the vector inverted file (t21's)
+    live under the SAME manifest — one ingest batch commits both
+    subtrees, then ONE publish makes text and vectors visible
+    together, so the two legs can never serve torn snapshots of each
+    other.  The probe here reads at ``as_of=1`` while the store's
+    committed watermark is 2: BOTH legs replay watermark-1 visibility
+    (statistics included — the BM25 leg's df/N/S are watermark-1
+    sums), and the fused ranking must equal the batch
+    hybrid-over-groups-0-1 recompute.  Fusion is the certified
+    integer-exact RRF of hybrid_rrf_topk: one correctly-rounded
+    division per candidate, ranks only — which is exactly why a
+    manifest-gated IVF probe can stand in as the semantic leg at any
+    corpus size.
+
+    Scale shape: each leg is its own partition-pruned,
+    broadcast-routed probe (documented on probe_postings_bm25 /
+    probe_tiered_topk); the fusion joins two ≤ queries×{_HYB_LEG_K}
+    frames — control-plane sized."""
+    docs, vecs, cents, store = _hybrid_session_store(spark, sf_dir)
+    return _hybrid_topk(
+        docs.filter(F.col("doc_id") < _HYB_QUERIES),
+        vecs.filter(F.col("vec_id") < _HYB_QUERIES),
+        store, cents, as_of=1,
+    )
+
+
 # ---------------------------------------------------------------------------
 # Lexical lifecycle symmetry (round 13): DELETE + COMPACT + GC for the
 # postings store, same grammar as the vector side
@@ -3677,12 +3633,10 @@ def delete_docs_batch_txn(
     leave the CANDIDATE set immediately, but remain in df/N/S until a
     compaction folds them out (recomputing exact statistics) — the
     same score-staleness trade every segment-merge engine ships."""
-    ids_df.select("doc_id").write.mode("overwrite").parquet(
-        os.path.join(store, "ptombstones", f"batch_id={batch_id}")
+    lsm.commit(
+        store, [lsm.tombstones(ids_df, "postings", batch_id)],
+        fail_before_manifest, wm=batch_id,
     )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, wm=batch_id)
 
 
 def compact_postings_txn(
@@ -3692,16 +3646,17 @@ def compact_postings_txn(
     fail_before_manifest: bool = False,
     pb: int | None = None,
 ) -> None:
-    """One postings COMPACTION transaction: fold batch subtrees ≤
-    ``upto`` (plus the previous postings generation) into a fresh
-    ``pgen_<upto>`` generation — tombstones with batch ≤ ``upto``
+    """One postings COMPACTION transaction: fold the previous postings
+    generation (if any) and the batch subtrees in ``(postings_upto,
+    upto]`` into a fresh ``pgen_<upto>`` generation — tombstones with batch ≤ ``upto``
     applied, last-write-wins per doc_id (lsm.latest_rows: the newest
     batch keeps ALL its rows; earlier copies' rows go) — and
     RECOMPUTE the generation's term/corpus statistics from the folded
     postings, so df/N/S are exact again after the fold (the Lucene
     segment-merge contract).  One atomic manifest swap flips readers
     to {generation ∪ tail}; crash-before-swap leaves the old layout;
-    replay overwrites and re-swaps.
+    replay overwrites and re-swaps (a same-``upto`` replay reads only
+    the generation it rewrites — see lsm.commit).
 
     ``pb`` rewrites the generation under a NEW term-bucket count (the
     REBUCKET migration — VERDICT r13 "Next round" #2): folded posting
@@ -3713,55 +3668,30 @@ def compact_postings_txn(
     man = read_serve_manifest(store)
     out_pb = int(pb) if pb is not None else _store_pb(store)
     gen_dir = f"pgen_{upto}"
-    _, pgen = lsm.layout(man, "postings")
+    pupto, pgen = lsm.layout(man, "postings")
     merged = lsm.tiers(
         spark, store, "postings", _POSTINGS_SCHEMA,
-        ("doc_id", "w", "tf", "len"), -1, upto,
+        ("doc_id", "w", "tf", "len"), pupto, upto,
         gen=pgen and os.path.join(pgen, "postings"),
     )
     folded = lsm.latest_rows(
         lsm.drop_tombstoned(merged, store, "postings", upto), "doc_id"
-    ).withColumnRenamed("m_batch", "src_batch")
-    # Replay safety: a re-run after a successful publish unions the
-    # previous generation with the very batch subtrees it was folded
-    # from (they are GC'd lazily), so every surviving row appears
-    # TWICE at the same src_batch and the max-filter keeps both —
-    # doubling postings and therefore df/N/S.  Legitimate postings
-    # are unique per (doc, term, src_batch) by construction (they are
-    # per-batch aggregates), so exact-duplicate elimination restores
-    # idempotent replay (the vector side gets this for free from its
-    # groupBy(vec_id)).
-    folded = folded.dropDuplicates(["doc_id", "w", "src_batch"])
-    folded = folded.withColumn(
+    ).withColumnRenamed("m_batch", "src_batch").withColumn(
         "wb", F.expr(f"pmod(xxhash64(w), {out_pb})")
     )
-    folded.write.mode("overwrite").partitionBy("wb").parquet(
-        os.path.join(store, gen_dir, "postings")
-    )
+
+    def at(sub):
+        return os.path.join(gen_dir, sub)
+
+    # The statistics derive from the written generation, so the
+    # postings write comes first; tstats/cstats then overlap.
+    lsm.write(store, [(folded, at("postings"), "wb")])
     gen = spark.read.schema(
         _POSTINGS_SCHEMA + ", src_batch bigint"
-    ).parquet(os.path.join(store, gen_dir, "postings"))
-    # tstats/cstats both derive from the just-written generation —
-    # independent of each other, so they overlap (guide §2.6).
-    _parallel_writes(
-        lambda: gen.groupBy("wb", "w")
-        .agg(F.count(F.lit(1)).cast("long").alias("df_b"))
-        .write.mode("overwrite")
-        .partitionBy("wb")
-        .parquet(os.path.join(store, gen_dir, "tstats")),
-        lambda: gen.select("doc_id", "len")
-        .distinct()
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_b"),
-            F.coalesce(F.sum("len"), F.lit(0)).cast("long").alias("s_b"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(store, gen_dir, "cstats")),
-    )
-    if fail_before_manifest:
-        return
-    publish_visibility(
-        store, postings_upto=upto, postings_gen=gen_dir, pb=out_pb
+    ).parquet(os.path.join(store, at("postings")))
+    lsm.commit(
+        store, _stats_writes(gen, at), fail_before_manifest,
+        postings_upto=upto, postings_gen=gen_dir, pb=out_pb,
     )
 
 
@@ -4406,12 +4336,6 @@ def t25_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import time
 
-    from pyspark.sql import Window as W  # noqa: F811 — batch scope
-
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-    from kcidb_spark.queries.ranking import _RRF_C
-
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
@@ -4419,12 +4343,7 @@ def t25_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
+    cents = _float_cents(vecs)
     both = docs.join(
         vecs.withColumnRenamed("vec_id", "doc_id"), on="doc_id"
     )
@@ -4467,90 +4386,18 @@ def t25_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = _scratch_dir("t25_store")
     out_dir = _scratch_dir("t25_out")
     shutil.rmtree(out_dir)
-    rrf = (
-        f"CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN"
-        f" CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)"
-        f" / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))"
-        f" WHEN r_lex IS NOT NULL THEN"
-        f" CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)"
-        f" ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem) END"
-    )
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
+        docs_b = batch_df.select("doc_id", "text")
+        vecs_b = batch_df.select(F.col("doc_id").alias("vec_id"), "v")
         if epoch_id % 2 == 0:                      # ingest epoch
-            bid = epoch_id // 2
-            # Both txns defer; ONE publish covers both subtrees AND
-            # records pb (ADVICE r13 medium — see hybrid_serve_as_of).
-            # Disjoint subtrees → overlapped jobs (guide §2.6); the
-            # publish still waits for both legs.
-            _parallel_writes(
-                lambda: ingest_postings_batch_txn(
-                    batch_df.select("doc_id", "text"), store, bid,
-                    fail_before_manifest=True,
-                ),
-                lambda: ingest_vec_batch_txn(
-                    batch_df.select(
-                        F.col("doc_id").alias("vec_id"), "v"
-                    ),
-                    store, bid, cents,
-                    fail_before_manifest=True,
-                ),
+            ingest_hybrid_batch_txn(
+                docs_b, vecs_b, store, epoch_id // 2, cents
             )
-            publish_visibility(store, wm=bid, pb=_store_pb(store))
         else:                                      # probe epoch
-            # The two legs' construction each runs one request-scale
-            # routing job (term buckets / probed clusters) — overlap
-            # them (guide §2.6), same idiom as _parallel_writes.
-            # CONSTRAINT (ADVICE r15): pooled legs are read-only —
-            # they must stay free of the module's shared mutable
-            # state (scoped_persist's cache._PERSISTED,
-            # _trainer_cache_put) or the overlap races.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_lex = pool.submit(
-                    probe_postings_bm25,
-                    batch_df.select("doc_id", "text"),
-                    store, _HYB_LEG_K,
-                )
-                f_sem = pool.submit(
-                    probe_tiered_topk,
-                    batch_df.select(
-                        F.col("doc_id").alias("vec_id"), "v"
-                    ),
-                    store, cents, _HYB_LEG_K,
-                )
-                lex_raw, sem_raw = f_lex.result(), f_sem.result()
-            lex = lex_raw.select(
-                "q_id", "n_id", F.col("rk").alias("r_lex")
-            )
-            w_sem = W.partitionBy("q_id").orderBy(
-                F.desc("sim"), F.asc("n_id")
-            )
-            sem = (
-                sem_raw
-                .select("q_id", "n_id", "sim")
-                .withColumn(
-                    "r_sem", F.row_number().over(w_sem).cast("long")
-                )
-                .select("q_id", "n_id", "r_sem")
-            )
-            w_rrf = W.partitionBy("q_id").orderBy(
-                F.desc("rrf"), F.asc("n_id")
-            )
-            (
-                lex.join(sem, on=["q_id", "n_id"], how="full_outer")
-                .withColumn("rrf", F.expr(rrf))
-                .withColumn(
-                    "rk", F.row_number().over(w_rrf).cast("long")
-                )
-                .filter(F.col("rk") <= _HYB_FINAL_K)
-                .select(
-                    F.lit(epoch_id // 2).cast("long").alias(
-                        "probe_round"
-                    ),
-                    "q_id", "n_id", "r_lex", "r_sem", "rrf", "rk",
-                )
+            _hybrid_topk(docs_b, vecs_b, store, cents).select(
+                F.lit(epoch_id // 2).cast("long").alias("probe_round"),
+                "q_id", "n_id", "r_lex", "r_sem", "rrf", "rk",
             ).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(
@@ -4600,18 +4447,23 @@ def t25_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONLY codes (the compressed domain); the raw tier exists for retrains
 # (re-encode source) and is never scanned at query time — at 100 TB it
 # lives on cold object storage.
+#
+# OPQ is this store with a ROTATION in the model (``pq_rot``, FAISS's
+# pre-transform): every verb rotates + quantizes its float ``x`` input
+# under the same manifest snapshot's rotation, the cold tier keeps the
+# UNROTATED floats (``rawx``, the rotation re-solve source; its
+# retrain generation is ``gen_opq_<wm>``), and a retrain re-solves the
+# rotation first.  Without a rotation the verbs are the plain PQ store.
 # ---------------------------------------------------------------------------
 
 
-def _pqc_model(store: str, man: dict | None = None) -> tuple[list, list, int, int]:
-    """(centroids, books, n_subs, subdim) from the manifest — the
-    probe/ingest routing + encoding model, read under the same atomic
-    snapshot as the visibility fields.  ``man`` overrides the live
-    manifest with a retained history snapshot, so a pre-retrain
-    ``as_of`` probe decodes with the model its codes were encoded
-    under — model and layout travel together or not at all."""
-    if man is None:
-        man = read_serve_manifest(store)
+def _pqc_model(man: dict) -> tuple[list, list, int, int]:
+    """(centroids, books, n_subs, subdim) of one manifest snapshot —
+    the probe/ingest routing + encoding model, read under the same
+    atomic snapshot as the visibility fields and the rotation (a
+    retained history snapshot for a pre-retrain ``as_of`` probe, so
+    old codes decode with the model they were encoded under — model
+    and layout travel together or not at all)."""
     cents = [(int(c), [int(x) for x in q]) for c, q in man["centroids"]]
     books = [
         (int(s), int(m), [int(x) for x in bq])
@@ -4621,15 +4473,19 @@ def _pqc_model(store: str, man: dict | None = None) -> tuple[list, list, int, in
 
 
 def init_pq_store(
-    store: str, cents: list, books: list, n_subs: int, subdim: int
+    store: str, cents: list, books: list, n_subs: int, subdim: int,
+    rot: list | None = None,
 ) -> None:
     """Create the PQ store's generation-0 model: coarse centroids AND
     per-subspace codebooks published together (centroid_gen=0) without
     advancing the watermark — born empty but routable AND encodable,
-    the FAISS train-before-add contract for both quantizers."""
-    os.makedirs(store, exist_ok=True)
-    publish_visibility(
-        store,
+    the FAISS train-before-add contract for both quantizers.  ``rot``
+    (d×d) makes it an OPQ store: the rotation is a model parameter
+    exactly like a codebook, so it joins the same publish and is
+    never seen torn from the model it was trained with."""
+    lsm.commit(
+        store, (),
+        **({} if rot is None else {"pq_rot": _rot_json(rot)}),
         centroids=[[int(c), [int(x) for x in q]] for c, q in cents],
         pq_books=[
             [int(s), int(m), [int(x) for x in bq]] for s, m, bq in books
@@ -4660,42 +4516,14 @@ def _pqc_encode(
     # payload, groupBy(id, s) code argmin, groupBy(id) code-pack) plus
     # an id-keyed join to reassemble — all to compute values each row
     # already determines alone.  Tie-breaks replicated exactly:
-    # coarse = min(struct(d2, c_id)), code = min(struct(d2, m)).
-    from kcidb_spark.operators.clustering import d2_int_expr
+    # coarse = min(struct(d2, c_id)), code = min(struct(d2, m)) — the
+    # operators' own builders.  An empty book → a TYPED empty array
+    # (bare array() is VOID and fails analysis).
+    from kcidb_spark.operators.clustering import _argmin_centroid_sql
+    from kcidb_spark.operators.ivf import subspace_codes_sql
 
-    def _iarr(vals) -> str:
-        return (
-            "array("
-            + ", ".join(f"cast({int(x)} as bigint)" for x in vals)
-            + ")"
-        )
-
-    c_entries = [
-        f"struct({d2_int_expr('q', _iarr(cq))} as d,"
-        f" cast({int(c_id)} as bigint) as c)"
-        for c_id, cq in cents
-    ]
-    # Empty-model guards: TYPED empty forms (bare array() is VOID and
-    # fails analysis) — reachable only alongside empty data, where the
-    # old broadcast-join shape also produced nothing.
-    c_sql = (
-        f"array_min(array({', '.join(c_entries)})).c"
-        if c_entries
-        else "array_min(cast(array() as"
-        " array<struct<d: bigint, c: bigint>>)).c"
-    )
-    by_s: dict[int, list] = {}
-    for s, m, bq in books:
-        by_s.setdefault(int(s), []).append((int(m), bq))
-    code_terms = []
-    for s in sorted(k for k in by_s if k < n_subs):
-        sub = f"slice(q, {s * subdim + 1}, {subdim})"
-        entries = [
-            f"struct({d2_int_expr(sub, _iarr(bq))} as d,"
-            f" cast({m} as bigint) as m)"
-            for m, bq in sorted(by_s[s])
-        ]
-        code_terms.append(f"array_min(array({', '.join(entries)})).m")
+    c_sql = _argmin_centroid_sql(cents)
+    code_terms = [c for _, c in subspace_codes_sql(books, n_subs, subdim)]
     codes_sql = (
         "array(" + ", ".join(code_terms) + ")"
         if code_terms
@@ -4718,65 +4546,112 @@ def ingest_pq_batch_txn(
 ) -> None:
     """One COMPRESSED-DOMAIN ingest transaction: encode the batch
     under the MANIFEST's current model (coarse assign + PQ codes, all
-    broadcast argmins on the integer grid), overwrite the hot
+    in-row argmins on the integer grid), overwrite the hot
     ``data/batch_id=N`` codes subtree (partitioned by c_id) and the
-    cold ``raw/batch_id=N`` subtree (the retrain re-encode source),
-    then ONE manifest publish.  ``batch_df``: (vec_id,
-    q array<bigint>) on the _KM_SCALE grid.  Crash/replay contract
-    identical to ingest_q_batch_txn: both subtrees are invisible until
-    the publish, replay overwrites them."""
-    cents, books, n_subs, subdim = _pqc_model(store)
-    enc = _pqc_encode(batch_df, cents, books, n_subs, subdim)
-    _parallel_writes(
-        lambda: _layout_by(enc.select("vec_id", "codes", "c_id"), "c_id")
-        .write.mode("overwrite")
-        .partitionBy("c_id")
-        .parquet(os.path.join(store, "data", f"batch_id={batch_id}")),
-        lambda: batch_df.select("vec_id", "q")
-        .write.mode("overwrite")
-        .parquet(os.path.join(store, "raw", f"batch_id={batch_id}")),
+    cold subtree (the retrain re-encode source), then ONE manifest
+    publish (lsm.commit: both subtrees are invisible until the
+    publish, replay overwrites them).  ``batch_df``: (vec_id,
+    q array<bigint>) on the _KM_SCALE grid, cold tier ``raw`` — or,
+    on a rotated store, (vec_id, x array<double>), rotated +
+    quantized under the SAME manifest snapshot's rotation, with the
+    unrotated floats kept in the cold ``rawx`` tier."""
+    man = read_serve_manifest(store)
+    cold, _, col = _pq_cold(man)
+    raw = batch_df.select("vec_id", col)
+    enc = _pqc_encode(_pq_grid(raw, man.get("pq_rot")), *_pqc_model(man))
+    lsm.commit(
+        store,
+        [
+            (
+                _layout_by(enc.select("vec_id", "codes", "c_id"), "c_id"),
+                lsm.batch("data", batch_id), "c_id",
+            ),
+            (raw, lsm.batch(cold, batch_id), None),
+        ],
+        fail_before_manifest, wm=batch_id,
     )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, wm=batch_id)
 
 
 #: Row schemas of the PQ store's subtrees, batch column aside.
 _PQC_CODES_SCHEMA = "vec_id long, codes array<bigint>, c_id bigint"
 _PQC_RAW_SCHEMA = "vec_id long, q array<bigint>"
+_OPQ_RAWX_SCHEMA = "vec_id long, x array<double>"
+
+
+def _pq_cold(man: dict) -> tuple[str, str, str]:
+    """(subtree, schema, column) of the cold tier the model names: a
+    rotated store keeps the UNROTATED floats (``rawx``, x) because its
+    retrain re-SOLVES the rotation (orthogonal Procrustes needs the
+    original space; a rotated-then-quantized copy cannot recover it);
+    a plain store keeps its grid (``raw``, q)."""
+    if man.get("pq_rot") is None:
+        return "raw", _PQC_RAW_SCHEMA, "q"
+    return "rawx", _OPQ_RAWX_SCHEMA, "x"
+
+
+def _rot_json(rot: list) -> list:
+    return [[float(v) for v in row] for row in rot]
+
+
+def _opq_quantize(df: DataFrame, rot: list, x_col: str = "x") -> DataFrame:
+    """Rotate ``x_col`` by the d×d matrix and quantize onto the store's
+    integer grid — the rotated store's one pre-encode projection
+    (per-row JVM compute against a broadcast matrix, zero shuffle;
+    FAISS's pre-transform chain).  All other columns ride through;
+    ``x_col`` is replaced by ``q array<bigint>``."""
+    from kcidb_spark.operators.opq import rotate
+    from kcidb_spark.queries.advanced import _KM_SCALE
+
+    return (
+        rotate(df, rot, x_col, "_xr")
+        .withColumn(
+            "q",
+            F.expr(
+                "transform(_xr, v -> cast(floor((v + 1.0D)"
+                f" * {_KM_SCALE}.0D) as bigint))"
+            ),
+        )
+        .drop("_xr", x_col)
+    )
+
+
+def _pq_grid(df: DataFrame, rot: list | None) -> DataFrame:
+    """Cold-tier rows on the store's integer grid: ``x`` rotated and
+    quantized under ``rot``, or the ``q`` rows as they are."""
+    return df if rot is None else _opq_quantize(df, rot)
 
 
 def _pqc_visible_codes(
     spark: SparkSession,
     store: str,
     wm: int,
+    man: dict,
     clusters: list | None = None,
-    man: dict | None = None,
 ) -> DataFrame:
-    """Manifest-visible CODES: {generation ∪ tail}, partition-pruned
-    to ``clusters`` when given (both tiers), tombstone-folded,
-    last-write-wins (lsm.visible) — (vec_id, codes, c_id).  ``man``
-    substitutes a retained history snapshot for pre-fold ``as_of``
-    reads (generation dir and fold point rebind together)."""
+    """Manifest-visible CODES of the snapshot ``man``: {generation ∪
+    tail}, partition-pruned to ``clusters`` when given (both tiers),
+    tombstone-folded, last-write-wins (lsm.visible) — (vec_id, codes,
+    c_id)."""
     return lsm.visible(
         spark, store, "data", _PQC_CODES_SCHEMA,
-        ("vec_id", "codes", "c_id"),
-        read_serve_manifest(store) if man is None else man, wm,
-        gen_sub="codes",
+        ("vec_id", "codes", "c_id"), man, wm, gen_sub="codes",
         pred=None if clusters is None else F.col("c_id").isin(clusters),
     ).select("vec_id", "codes", "c_id")
 
 
-def _pqc_visible_raw(spark: SparkSession, store: str) -> DataFrame:
-    """Manifest-visible RAW vectors from the cold tier — the retrain
-    re-encode source: {generation raw ∪ tail raw}, tombstone-folded,
-    last-write-wins; (vec_id, q, m_batch).  Never read at probe
+def _pqc_visible_cold(
+    spark: SparkSession, store: str, man: dict
+) -> DataFrame:
+    """Manifest-visible COLD tier of the snapshot ``man`` — the
+    retrain's re-encode (and rotation re-solve) source: {generation ∪
+    tail} of the tier the model names (_pq_cold), tombstone-folded,
+    last-write-wins; (vec_id, q or x, m_batch).  Never read at probe
     time."""
-    man = read_serve_manifest(store)
+    cold, schema, col = _pq_cold(man)
     return lsm.visible(
-        spark, store, "raw", _PQC_RAW_SCHEMA, ("vec_id", "q"),
-        man, man["wm"], gen_sub="raw",
-    ).select("vec_id", "q", "m_batch")
+        spark, store, cold, schema, ("vec_id", col), man, man["wm"],
+        gen_sub=cold,
+    ).select("vec_id", col, "m_batch")
 
 
 def _pq_route_driver(
@@ -4810,15 +4685,18 @@ def probe_pq_topk(
     {generation ∪ tail} — the corpus side moves n_subs BIGINT codes
     per candidate, never a raw vector.  Tombstone-folded,
     version-resolved, partition-pruned on (batch_id, c_id).  Returns
-    (probe_round, q_id, n_id, adc_micro, rk).
+    (probe_round, q_id, n_id, adc_micro, rk).  On a rotated store
+    the queries are (vec_id, x) and rotate + quantize under the
+    snapshot's rotation — the store never knows it serves a learned
+    space (FAISS pre-transform).
 
-    ``as_of`` replays a historical watermark (same contract as
-    probe_tiered_topk).  Reads BEFORE the fold point resolve through
-    the retention history (VERDICT r13 #9): the snapshot carries the
-    WHOLE pre-fold manifest, so the probe rebinds generation, fold
-    point, centroids AND codebooks together — a pre-retrain read
-    decodes old codes with the old model, never a mixed pair; past
-    the horizon it raises."""
+    ONE manifest read: ``as_of`` replays a historical watermark (same
+    contract as probe_tiered_topk), and reads BEFORE the fold point
+    resolve through the retention history (VERDICT r13 #9): the
+    snapshot carries the WHOLE pre-fold manifest, so the probe
+    rebinds generation, fold point, centroids, codebooks AND rotation
+    together — a pre-retrain read decodes old codes with the old
+    model, never a mixed pair; past the horizon it raises."""
     from pyspark.sql import Window as W  # noqa: F811 — batch scope
 
     sess = batch_df.sparkSession
@@ -4828,7 +4706,10 @@ def probe_pq_topk(
             [], "probe_round long, q_id long, n_id long,"
                 " adc_micro long, rk long"
         )
-    cents, books, n_subs, subdim = _pqc_model(store, man=snap)
+    cents, books, n_subs, subdim = _pqc_model(snap)
+    grid = _pq_grid(
+        batch_df.select("vec_id", _pq_cold(snap)[2]), snap.get("pq_rot")
+    )
     # Driver-side routing + ADC tables (guide §2.4/§5): the query
     # batch is request-scale by the serve contract and the model is
     # ALREADY driver-held in the manifest, so collect the batch once
@@ -4843,7 +4724,7 @@ def probe_pq_topk(
     qrows = [
         (int(r["vec_id"]), [int(x) for x in r["q"]])
         for r in _check_request_scale(
-            batch_df.select("vec_id", "q").collect(), "probe_pq_topk"
+            grid.select("vec_id", "q").collect(), "probe_pq_topk"
         )
     ]
     probe_pairs, dtrows = _pq_route_driver(
@@ -4854,7 +4735,7 @@ def probe_pq_topk(
     dt = local_df(
         sess, dtrows, "q_id long, s bigint, m bigint, d bigint"
     )
-    members = _pqc_visible_codes(sess, store, wm, clusters=probed, man=snap)
+    members = _pqc_visible_codes(sess, store, wm, snap, clusters=probed)
     n_codes = members.select(
         F.col("vec_id").alias("n_id"), "c_id",
         F.posexplode("codes").alias("s", "m"),
@@ -4881,6 +4762,7 @@ def retrain_pq_store_txn(
     n_centroids: int,
     n_codes: int,
     rounds: int,
+    iters: int = 3,
     fail_before_manifest: bool = False,
 ) -> None:
     """One PQ RETRAIN transaction — BOTH quantizers retrained under
@@ -4897,9 +4779,18 @@ def retrain_pq_store_txn(
     overwrites the generation and re-swaps; an OLDER replay is
     rejected wholesale by publish_visibility's torn-replay guard.
 
+    On a rotated store the rotation is re-solved FIRST (alternating
+    Procrustes/Lloyd, ``iters`` rounds, on the sample of unrotated
+    cold floats, keep-best initialized from the CURRENT manifest
+    rotation — operators/opq.py's never-worse guarantee applied
+    in-store), the integer trainers then run on the newly-rotated
+    grid, the generation is ``gen_opq_<wm>`` (codes + rawx), and the
+    rotation joins the same publish: all three model parameters swap
+    together.
+
     Scale shape: training touches only the sample (driver-held
     k·dim + S·M·subdim BIGINTs between rounds); the re-encode is one
-    cold-tier scan + broadcast argmins + one partitioned write — a
+    cold-tier scan + in-row argmins + one partitioned write — a
     compaction epoch's cost class.  The raw tier is the price of
     exact re-encoding (FAISS reconstructs lossily or keeps originals;
     at 100 TB this tier is cold object storage, never probed)."""
@@ -4908,19 +4799,32 @@ def retrain_pq_store_txn(
         pq_codebooks_exact,
     )
     from kcidb_spark.operators.ivf import subvectors
+    from kcidb_spark.operators.opq import opq_train
 
     from kcidb_spark.cache import scoped_persist
 
     man = read_serve_manifest(store)
     wm = man["wm"]
-    _cents0, _books0, n_subs, subdim = _pqc_model(store)
-    raw = _pqc_visible_raw(spark, store)
-    # Persisted for BOTH trainers' round scans (see retrain_store_txn).
+    _cents0, _books0, n_subs, subdim = _pqc_model(man)
+    rot = man.get("pq_rot")
+    cold, _, col = _pq_cold(man)
+    raw = _pqc_visible_cold(spark, store, man)
+    # Persisted for every trainer's round scans (see retrain_store_txn).
     sample = scoped_persist(
         _retrain_sample(raw, n_centroids).select(
-            F.col("vec_id").alias("id"), "q"
+            F.col("vec_id").alias("id"), col
         )
     )
+    if rot is not None:
+        rot, _books_f, _hist = opq_train(
+            sample, n_subs, subdim, n_codes,
+            lloyd_rounds=rounds, iters=iters, r_init=rot,
+        )
+        sample = scoped_persist(
+            _opq_quantize(
+                sample.select(F.col("id").alias("vec_id"), "x"), rot
+            ).select(F.col("vec_id").alias("id"), "q")
+        )
     cents = kmeans_centroids_exact(sample, n_centroids, rounds)
     books = pq_codebooks_exact(
         subvectors(sample, ("id",), "q", n_subs, subdim),
@@ -4944,31 +4848,29 @@ def retrain_pq_store_txn(
             f" from vec_id < k — ingest ids 0..k-1 or lower"
             f" n_centroids/n_codes"
         )
-    gen_dir = f"gen_pq_{wm}"
+    gen_dir = f"gen_{'pq' if rot is None else 'opq'}_{wm}"
+    src = raw.select("vec_id", col, F.col("m_batch").alias("src_batch"))
     enc = _pqc_encode(
-        raw.withColumn("src_batch", F.col("m_batch"))
-        .select("vec_id", "q", "src_batch"),
+        _pq_grid(src, rot).select("vec_id", "q", "src_batch"),
         cents, books, n_subs, subdim, carry=("src_batch",),
     )
     # SEQUENTIAL by necessity (not a missed §2.6 overlap): on an
-    # idempotent replay the visible raw tier IS this generation's
-    # ``raw`` subtree, so the codes re-encode must finish READING it
-    # before the raw rewrite overwrites it — overlapping the two
+    # idempotent replay the visible cold tier IS this generation's
+    # cold subtree, so the codes re-encode must finish READING it
+    # before the cold rewrite overwrites it — overlapping the two
     # races a reader against a delete (FileNotFound mid-scan).
-    _layout_by(
-        enc.select("vec_id", "codes", "src_batch", "c_id"), "c_id"
-    ).write.mode("overwrite").partitionBy("c_id").parquet(
-        os.path.join(store, gen_dir, "codes")
-    )
-    raw.select(
-        "vec_id", "q", F.col("m_batch").alias("src_batch")
-    ).write.mode("overwrite").parquet(os.path.join(store, gen_dir, "raw"))
-    if fail_before_manifest:
-        return
-    publish_visibility(
-        store,
+    lsm.write(store, [(
+        _layout_by(
+            enc.select("vec_id", "codes", "src_batch", "c_id"), "c_id"
+        ),
+        os.path.join(gen_dir, "codes"), "c_id",
+    )])
+    lsm.commit(
+        store, [(src, os.path.join(gen_dir, cold), None)],
+        fail_before_manifest,
         compacted_upto=wm,
         compacted_dir=gen_dir,
+        **({} if rot is None else {"pq_rot": _rot_json(rot)}),
         centroids=[[c, list(q)] for c, q in cents],
         pq_books=[[s, m, list(bq)] for s, m, bq in books],
         centroid_gen=int(man.get("centroid_gen", 0)) + 1,
@@ -5667,17 +5569,16 @@ def delete_hybrid_batch_txn(
     readable at the old watermark with the document visible in BOTH
     legs — never hidden in one and served by the other.  ``ids_df``:
     (doc_id) — the hybrid store keys both modalities by one id."""
-    _parallel_writes(
-        lambda: ids_df.select(F.col("doc_id").alias("vec_id"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(store, "tombstones", f"batch_id={batch_id}")),
-        lambda: ids_df.select("doc_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(store, "ptombstones", f"batch_id={batch_id}")),
+    lsm.commit(
+        store,
+        [
+            lsm.tombstones(
+                ids_df.withColumnRenamed("doc_id", "vec_id"), "vec", batch_id
+            ),
+            lsm.tombstones(ids_df, "postings", batch_id),
+        ],
+        fail_before_manifest, wm=batch_id,
     )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, wm=batch_id)
 
 
 def _hybrid_deletes_oracle() -> str:
@@ -5844,42 +5745,7 @@ def hybrid_serve_with_deletes(
     historical visibility — pinned by both entries certifying against
     their own oracles in one session.  The delete transaction replays
     idempotently on every invocation (overwrite + monotone publish)."""
-    from pyspark.sql import Window as W  # noqa: F811 — batch scope
-
-    from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-    from kcidb_spark.queries.ranking import _RRF_C
-
-    docs = table(spark, sf_dir, "documents", spread=True).select(
-        "doc_id", "text"
-    )
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    cents = [
-        (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
-        for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
-        .withColumn("nrm", F.expr(f"sqrt({dot_expr('v', 'v')})"))
-        .collect()
-    ]
-    store, built = _session_store_dir(spark, sf_dir, "hybrid")
-    if not built:
-        dpfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-        vpfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            _parallel_writes(
-                lambda: ingest_postings_batch_txn(
-                    docs.filter(dpfx.isin(*list(chars))), store, i,
-                    fail_before_manifest=True,
-                ),
-                lambda: ingest_vec_batch_txn(
-                    vecs.filter(vpfx.isin(*list(chars))), store, i,
-                    cents, fail_before_manifest=True,
-                ),
-            )
-            publish_visibility(store, wm=i, pb=_store_pb(store))
-        _mark_store_built(spark, store)
+    docs, vecs, cents, store = _hybrid_session_store(spark, sf_dir)
     snd = F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)
     delete_hybrid_batch_txn(
         spark,
@@ -5887,46 +5753,12 @@ def hybrid_serve_with_deletes(
         store,
         len(_T21_RANGES),
     )
+    return _hybrid_topk(
+        docs.filter(F.col("doc_id") < _HYB_QUERIES),
+        vecs.filter(F.col("vec_id") < _HYB_QUERIES),
+        store, cents,
+    )
 
-    # Overlap the two legs' construction jobs (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_lex = pool.submit(
-            probe_postings_bm25,
-            docs.filter(F.col("doc_id") < _HYB_QUERIES),
-            store, _HYB_LEG_K,
-        )
-        f_sem = pool.submit(
-            probe_tiered_topk,
-            vecs.filter(F.col("vec_id") < _HYB_QUERIES),
-            store, cents, _HYB_LEG_K,
-        )
-        lex_raw, sem_raw = f_lex.result(), f_sem.result()
-    lex = lex_raw.select("q_id", "n_id", F.col("rk").alias("r_lex"))
-    w_sem = W.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    sem = (
-        sem_raw
-        .select("q_id", "n_id", "sim")
-        .withColumn("r_sem", F.row_number().over(w_sem).cast("long"))
-        .select("q_id", "n_id", "r_sem")
-    )
-    rrf = (
-        f"CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN"
-        f" CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)"
-        f" / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))"
-        f" WHEN r_lex IS NOT NULL THEN"
-        f" CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)"
-        f" ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem) END"
-    )
-    w_rrf = W.partitionBy("q_id").orderBy(F.desc("rrf"), F.asc("n_id"))
-    return (
-        lex.join(sem, on=["q_id", "n_id"], how="full_outer")
-        .withColumn("rrf", F.expr(rrf))
-        .withColumn("rk", F.row_number().over(w_rrf).cast("long"))
-        .filter(F.col("rk") <= _HYB_FINAL_K)
-        .select("q_id", "n_id", "r_lex", "r_sem", "rrf", "rk")
-    )
 
 def compact_pq_store_txn(
     spark: SparkSession,
@@ -5936,8 +5768,9 @@ def compact_pq_store_txn(
 ) -> None:
     """One COMPACTION transaction in the COMPRESSED domain: fold the
     previous generation (if any) and the committed batch subtrees in
-    ``(compacted_upto, upto]`` of BOTH tiers — hot codes AND cold raw
-    — into one fresh generation directory, dropping tombstone-hidden
+    ``(compacted_upto, upto]`` of BOTH tiers — hot codes AND the cold
+    tier the model names (``raw``, or a rotated store's ``rawx``) —
+    into one fresh generation directory, dropping tombstone-hidden
     copies and resolving re-ingests last-write-wins (lsm.visible),
     then ONE manifest swap.
 
@@ -5968,25 +5801,24 @@ def compact_pq_store_txn(
     ):
         return
 
-    def _fold(sub, tail, schema, cols):
-        return lsm.visible(
+    def _fold(sub, tail, schema, cols, part=None):
+        folded = lsm.visible(
             spark, store, tail, schema, cols, man, upto, gen_sub=sub
         ).withColumnRenamed("m_batch", "src_batch")
+        return folded, os.path.join(gen_dir, sub), part
 
-    codes = _fold(
-        "codes", "data", _PQC_CODES_SCHEMA, ("vec_id", "codes", "c_id")
+    cold, schema, col = _pq_cold(man)
+    lsm.commit(
+        store,
+        [
+            _fold(
+                "codes", "data", _PQC_CODES_SCHEMA,
+                ("vec_id", "codes", "c_id"), "c_id",
+            ),
+            _fold(cold, cold, schema, ("vec_id", col)),
+        ],
+        fail_before_manifest, compacted_upto=upto, compacted_dir=gen_dir,
     )
-    raw = _fold("raw", "raw", _PQC_RAW_SCHEMA, ("vec_id", "q"))
-    _parallel_writes(
-        lambda: codes.write.mode("overwrite")
-        .partitionBy("c_id")
-        .parquet(os.path.join(store, gen_dir, "codes")),
-        lambda: raw.write.mode("overwrite")
-        .parquet(os.path.join(store, gen_dir, "raw")),
-    )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, compacted_upto=upto, compacted_dir=gen_dir)
 
 
 def _pqc_deletes_oracle() -> str:
@@ -6050,239 +5882,6 @@ def ivfpq_store_serve_with_deletes(
         store, _IVF_K, nprobe=_KM_NPROBE,
     )
 
-# --- OPQ serving store: the LEARNED rotation in the manifest ---
-
-_OPQ_RAWX_SCHEMA = "vec_id long, x array<double>"
-
-
-def _opq_quantize(df: DataFrame, rot: list, x_col: str = "x") -> DataFrame:
-    """Rotate ``x_col`` by the d×d matrix and quantize onto the store's
-    integer grid — the OPQ store's one pre-encode projection (per-row
-    JVM compute against a broadcast matrix, zero shuffle; FAISS's
-    pre-transform chain).  All other columns ride through; ``x_col``
-    is replaced by ``q array<bigint>``."""
-    from kcidb_spark.operators.opq import rotate
-    from kcidb_spark.queries.advanced import _KM_SCALE
-
-    return (
-        rotate(df, rot, x_col, "_xr")
-        .withColumn(
-            "q",
-            F.expr(
-                "transform(_xr, v -> cast(floor((v + 1.0D)"
-                f" * {_KM_SCALE}.0D) as bigint))"
-            ),
-        )
-        .drop("_xr", x_col)
-    )
-
-
-def init_opq_store(
-    store: str, rot: list, cents: list, books: list,
-    n_subs: int, subdim: int,
-) -> None:
-    """Create the OPQ store's generation-0 model: the LEARNED (or
-    fixed-control) rotation matrix joins the coarse centroids and
-    per-subspace codebooks in ONE manifest publish (VERDICT r14 "Next
-    round" #2 — the codebook precedent: model parameters that must
-    never be seen torn live in the manifest, and the rotation is a
-    model parameter exactly like a codebook).  Born empty but
-    routable, encodable, AND rotatable."""
-    os.makedirs(store, exist_ok=True)
-    publish_visibility(
-        store,
-        pq_rot=[[float(v) for v in row] for row in rot],
-        centroids=[[int(c), [int(x) for x in q]] for c, q in cents],
-        pq_books=[
-            [int(s), int(m), [int(x) for x in bq]] for s, m, bq in books
-        ],
-        pq_subs=int(n_subs),
-        pq_subdim=int(subdim),
-        centroid_gen=0,
-    )
-
-
-def ingest_opq_batch_txn(
-    batch_df: DataFrame,
-    store: str,
-    batch_id: int,
-    fail_before_manifest: bool = False,
-) -> None:
-    """One OPQ ingest transaction: rotate the batch by the MANIFEST's
-    rotation, quantize, encode under the manifest's model (the
-    certified ingest_pq_batch_txn arithmetic), overwrite the hot
-    ``data/batch_id=N`` codes subtree — and keep the UNROTATED floats
-    in the cold ``rawx/batch_id=N`` subtree, because the retrain
-    re-SOLVES the rotation (orthogonal Procrustes needs the original
-    space; a rotated-then-quantized copy cannot recover it), then ONE
-    manifest publish.  ``batch_df``: (vec_id, x array<double>).
-    Crash/replay contract identical to ingest_pq_batch_txn."""
-    man = read_serve_manifest(store)
-    cents, books, n_subs, subdim = _pqc_model(store, man=man)
-    enc = _pqc_encode(
-        _opq_quantize(batch_df.select("vec_id", "x"), man["pq_rot"]),
-        cents, books, n_subs, subdim,
-    )
-    _parallel_writes(
-        lambda: _layout_by(enc.select("vec_id", "codes", "c_id"), "c_id")
-        .write.mode("overwrite")
-        .partitionBy("c_id")
-        .parquet(os.path.join(store, "data", f"batch_id={batch_id}")),
-        lambda: batch_df.select("vec_id", "x")
-        .write.mode("overwrite")
-        .parquet(os.path.join(store, "rawx", f"batch_id={batch_id}")),
-    )
-    if fail_before_manifest:
-        return
-    publish_visibility(store, wm=batch_id)
-
-
-def _opq_visible_rawx(spark: SparkSession, store: str) -> DataFrame:
-    """Manifest-visible UNROTATED floats from the OPQ cold tier —
-    the rotation re-solve + re-encode source: {generation rawx ∪ tail
-    rawx}, tombstone-folded, last-write-wins; (vec_id, x, m_batch).
-    Never read at probe time (the probe-plan pin covers ``rawx`` via
-    the same substring)."""
-    man = read_serve_manifest(store)
-    return lsm.visible(
-        spark, store, "rawx", _OPQ_RAWX_SCHEMA, ("vec_id", "x"),
-        man, man["wm"], gen_sub="rawx",
-    ).select("vec_id", "x", "m_batch")
-
-
-def probe_opq_topk(
-    batch_df: DataFrame,
-    store: str,
-    k: int,
-    nprobe: int = 2,
-    as_of: int = None,
-) -> DataFrame:
-    """OPQ probe: rotate + quantize the queries under the SAME
-    manifest snapshot's rotation the codes were encoded with, then the
-    certified compressed-domain probe (probe_pq_topk) end-to-end —
-    the store never knows it serves a learned space (FAISS
-    pre-transform).  For a pre-fold ``as_of`` the rotation rebinds
-    through the SAME retained history snapshot as the model — codes,
-    codebooks, centroids, and rotation travel together or not at
-    all."""
-    rot = lsm.snapshot(read_serve_manifest(store), as_of, "vec")[0].get(
-        "pq_rot"
-    )
-    if rot is None:
-        return batch_df.sparkSession.createDataFrame(
-            [], "probe_round long, q_id long, n_id long,"
-                " adc_micro long, rk long"
-        )
-    return probe_pq_topk(
-        _opq_quantize(batch_df.select("vec_id", "x"), rot),
-        store, k, nprobe=nprobe, as_of=as_of,
-    )
-
-
-def retrain_opq_store_txn(
-    spark: SparkSession,
-    store: str,
-    n_centroids: int,
-    n_codes: int,
-    rounds: int,
-    iters: int = 3,
-    fail_before_manifest: bool = False,
-) -> None:
-    """One OPQ RETRAIN transaction — ALL THREE model parameters
-    re-solved under one atomic swap: the rotation (alternating
-    Procrustes/Lloyd on the bounded deterministic sample of unrotated
-    cold floats, keep-best initialized from the CURRENT manifest
-    rotation so the new rotation never quantizes worse than the one
-    it replaces — operators/opq.py's guarantee applied in-store), the
-    coarse centroids, and the per-subspace codebooks (the certified
-    integer trainers on the newly-rotated grid), then re-encode EVERY
-    visible member into ``gen_opq_<wm>`` (codes + rawx) and publish
-    (generation, rotation, centroids, books, fold point, model
-    generation) in ONE manifest swap.  Probes racing the swap serve
-    the old generation with the old rotation AND old model — the
-    retrain_pq_store_txn crash-window argument extended to three
-    quantizer parameters.  Replay/degenerate/empty contracts
-    identical to retrain_pq_store_txn."""
-    from kcidb_spark.operators.clustering import (
-        kmeans_centroids_exact,
-        pq_codebooks_exact,
-    )
-    from kcidb_spark.operators.ivf import subvectors
-    from kcidb_spark.operators.opq import opq_train
-
-    from kcidb_spark.cache import scoped_persist
-
-    man = read_serve_manifest(store)
-    wm = man["wm"]
-    _c0, _b0, n_subs, subdim = _pqc_model(store, man=man)
-    rawx = _opq_visible_rawx(spark, store)
-    # Persisted: the OPQ alternation re-scans the sample iters×rounds
-    # times, then both integer trainers re-scan the rotated grid per
-    # round (see retrain_store_txn).
-    sample_x = scoped_persist(
-        _retrain_sample(rawx, n_centroids).select(
-            F.col("vec_id").alias("id"), "x"
-        )
-    )
-    rot, _books_f, _hist = opq_train(
-        sample_x, n_subs, subdim, n_codes,
-        lloyd_rounds=rounds, iters=iters, r_init=man["pq_rot"],
-    )
-    sample_q = scoped_persist(
-        _opq_quantize(
-            sample_x.select(F.col("id").alias("vec_id"), "x"), rot
-        ).select(F.col("vec_id").alias("id"), "q")
-    )
-    cents = kmeans_centroids_exact(sample_q, n_centroids, rounds)
-    books = pq_codebooks_exact(
-        subvectors(sample_q, ("id",), "q", n_subs, subdim),
-        n_codes, rounds,
-    )
-    if not cents or not books:
-        if rawx.isEmpty():
-            return
-        raise ValueError(
-            f"retrain sample is degenerate (cents={len(cents)},"
-            f" books={len(books)}): the integer trainers initialize"
-            f" from vec_id < k — ingest ids 0..k-1 or lower"
-            f" n_centroids/n_codes"
-        )
-    gen_dir = f"gen_opq_{wm}"
-    enc = _pqc_encode(
-        _opq_quantize(
-            rawx.select(
-                "vec_id", "x", F.col("m_batch").alias("src_batch")
-            ),
-            rot,
-        ).select("vec_id", "q", "src_batch"),
-        cents, books, n_subs, subdim, carry=("src_batch",),
-    )
-    # SEQUENTIAL by necessity — see retrain_pq_store_txn: on replay
-    # the codes re-encode reads the very ``rawx`` subtree the second
-    # write overwrites.
-    _layout_by(
-        enc.select("vec_id", "codes", "src_batch", "c_id"), "c_id"
-    ).write.mode("overwrite").partitionBy("c_id").parquet(
-        os.path.join(store, gen_dir, "codes")
-    )
-    rawx.select(
-        "vec_id", "x", F.col("m_batch").alias("src_batch")
-    ).write.mode("overwrite").parquet(
-        os.path.join(store, gen_dir, "rawx")
-    )
-    if fail_before_manifest:
-        return
-    publish_visibility(
-        store,
-        compacted_upto=wm,
-        compacted_dir=gen_dir,
-        pq_rot=[[float(v) for v in row] for row in rot],
-        centroids=[[c, list(q)] for c, q in cents],
-        pq_books=[[s, m, list(bq)] for s, m, bq in books],
-        centroid_gen=int(man.get("centroid_gen", 0)) + 1,
-    )
-
-
 @register(
     "opq_store_serve",
     tags=("similarity", "ivf", "index", "opq", "streaming"),
@@ -6299,7 +5898,7 @@ def opq_store_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codebooks; ingest rotates + quantizes + encodes each batch
     under it, probes rotate their queries under the same snapshot, and
     retrain re-solves it atomically with both quantizers
-    (retrain_opq_store_txn).  The serving machinery downstream of the
+    (retrain_pq_store_txn on a rotated store).  The serving machinery downstream of the
     rotation is byte-identical to the certified ivfpq store — pinned
     by the fixed-rotation control in tests/test_opq_store.py: an OPQ
     store whose manifest rotation is the fixed Givens matrix probes
@@ -6350,14 +5949,16 @@ def opq_store_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ("id",), "q", _PQK_SUBS, _PQK_SUBDIM,
             ).collect()
         )
-        init_opq_store(store, rot, cents, books, _PQK_SUBS, _PQK_SUBDIM)
+        init_pq_store(
+            store, cents, books, _PQK_SUBS, _PQK_SUBDIM, rot=rot
+        )
         pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
         for i, chars in enumerate(_T21_RANGES):
-            ingest_opq_batch_txn(
+            ingest_pq_batch_txn(
                 vecs.filter(pfx.isin(*list(chars))), store, i
             )
         _mark_store_built(spark, store)
-    return probe_opq_topk(
+    return probe_pq_topk(
         vecs.filter(F.col("vec_id") < _IVF_QUERIES),
         store, _IVF_K, nprobe=_KM_NPROBE,
     )
@@ -6375,10 +5976,10 @@ def opq_store_serve_fixed_rotation(
     (VERDICT r15 "Next round" #6): opq_store_serve itself is
     oracle-less by design (its LEARNED rotation is a float
     alternation with no static SQL replay), which left the
-    manifest-rotation seam — init_opq_store, ingest_opq_batch_txn's
-    rotate-at-ingest, probe_opq_topk's rotate-at-probe under the same
-    manifest snapshot — certified only by pytest.  This twin runs the
-    EXACT same OPQ verbs with the manifest rotation pinned to the
+    manifest-rotation seam — init_pq_store's rotation,
+    ingest_pq_batch_txn's rotate-at-ingest, probe_pq_topk's
+    rotate-at-probe under the same manifest snapshot — certified only
+    by pytest.  This twin runs the EXACT same verbs with the manifest rotation pinned to the
     certified fixed two-layer 3-4-5 Givens matrix, where the oracle
     exists: the rotated grid is bit-identical to the certified
     _pqc_vecs_rot_q form (verified on every SF), so the expected
@@ -6405,14 +6006,16 @@ def opq_store_serve_fixed_rotation(
         rot = givens_rotation(_PQK_SUBS * _PQK_SUBDIM)
         vq = _opq_quantize(vecs, rot)
         cents, books = _pqc_static_model(spark, vq)
-        init_opq_store(store, rot, cents, books, _PQK_SUBS, _PQK_SUBDIM)
+        init_pq_store(
+            store, cents, books, _PQK_SUBS, _PQK_SUBDIM, rot=rot
+        )
         pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
         for i, chars in enumerate(_T21_RANGES):
-            ingest_opq_batch_txn(
+            ingest_pq_batch_txn(
                 vecs.filter(pfx.isin(*list(chars))), store, i
             )
         _mark_store_built(spark, store)
-    return probe_opq_topk(
+    return probe_pq_topk(
         vecs.filter(F.col("vec_id") < _IVF_QUERIES),
         store, _IVF_K, nprobe=_KM_NPROBE,
     )

@@ -1,13 +1,22 @@
 """The serving store's log-structured layout — ONE implementation of
-the read, fold and GC rules every store kind (float IVF, int-q, PQ,
-OPQ, postings) shares.
+the write, read, fold and GC rules every store kind (float IVF, int-q,
+PQ — with or without a rotation —, postings) shares.
 
 A store is append-only batch subtrees (``<sub>/batch_id=N``), an
 optional folded generation directory, tombstone subtrees, and one
-``_manifest.json`` that gates visibility.  Every read answers "the
-latest version of each id over append-only data" — the rule the
-reference gets from its dedup view over ``_<table>``
-(bigquery/v04_00.py:619-666):
+``_manifest.json`` that gates visibility.  Every write goes through
+one path, the reference's "load, then acknowledge" (bigquery
+v04_00.py:1183-1225, main.py:322-325):
+
+* :func:`commit` — overwrite each subtree a transaction writes
+  (independent writes overlap), then ONE :func:`publish_visibility`;
+  every ingest, delete, fold and retrain ends in it;
+* :func:`batch` / :func:`tombstones` — the paths a batch transaction
+  writes, so no verb names a ``batch_id=N`` or tombstone subtree.
+
+Every read answers "the latest version of each id over append-only
+data" — the rule the reference gets from its dedup view over
+``_<table>`` (bigquery/v04_00.py:619-666):
 
 * :func:`tiers` — generation ∪ tail (``lo < batch_id <= hi``), both
   stamped ``m_batch``;
@@ -172,8 +181,7 @@ def set_store_retention(store: str, retain: int) -> None:
     watermarks after a compaction/retrain supersedes them.  Takes
     effect on folds published AFTER the call — retention cannot
     resurrect a snapshot whose superseded copies are already gone."""
-    os.makedirs(store, exist_ok=True)
-    publish_visibility(store, retain=int(retain))
+    commit(store, (), retain=int(retain))
 
 
 def _asof_snapshot(man: dict, as_of: int) -> dict:
@@ -285,6 +293,83 @@ def snapshot(man: dict, as_of: int | None, side: str) -> tuple[dict, int]:
     if as_of < fold_point(man, side):
         return _asof_snapshot(man, as_of), as_of
     return man, as_of
+
+
+# ---------------------------------------------------------------------------
+# Write: overwrite the subtrees, then one publish
+# ---------------------------------------------------------------------------
+
+def batch(sub: str, batch_id: int) -> str:
+    """The path, under the store, of batch ``batch_id``'s ``sub``
+    subtree."""
+    return os.path.join(sub, f"batch_id={int(batch_id)}")
+
+
+def tombstones(ids_df: DataFrame, side: str, batch_id: int) -> tuple:
+    """The write of a tombstone set: ``ids_df``'s key column of the
+    side, under the side's tombstone subtree at ``batch_id``."""
+    s = SIDES[side]
+    return ids_df.select(s.key), batch(s.tombs, batch_id), None
+
+
+def _parallel_writes(*thunks) -> None:
+    """Run one transaction's INDEPENDENT subtree writes as concurrent
+    jobs (guide §2.6 "overlap independent jobs"): actions are only
+    sequential because driver code calls them sequentially, and these
+    micro-batch-bounded writes each leave most executor slots idle —
+    overlapped, the txn's wall approaches max() of its writes instead
+    of their sum.  All threads JOIN before returning (first exception
+    re-raised), so the crash/replay contract is untouched: nothing is
+    published until every subtree write completed, and a failed write
+    still fails the txn before its manifest advance."""
+    if len(thunks) <= 1:
+        for t in thunks:
+            t()
+        return
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        for f in [pool.submit(t) for t in thunks]:
+            f.result()
+
+
+def write(store: str, writes) -> None:
+    """Overwrite each ``(df, path under store, partition column or
+    None)``; independent writes overlap (:func:`_parallel_writes`).
+    Nothing becomes visible: that is :func:`commit`'s publish."""
+
+    def _one(df, path, part):
+        w = df.write.mode("overwrite")
+        if part is not None:
+            w = w.partitionBy(part)
+        w.parquet(os.path.join(store, path))
+
+    _parallel_writes(*[lambda w=w: _one(*w) for w in writes])
+
+
+def commit(
+    store: str, writes, fail_before_manifest: bool = False, **publish
+) -> None:
+    """THE write path of every store transaction: :func:`write` the
+    ``writes``, then ONE :func:`publish_visibility` of ``publish``.  A
+    crash anywhere before the publish leaves the store readable at
+    its old manifest (the new subtrees exist but nothing references
+    them); replaying the transaction overwrites the same paths and
+    publishes — exactly-once at every crash point.
+    ``fail_before_manifest`` injects that crash for tests.  With no
+    writes, commit only publishes (a store's initial model).
+
+    A write may overwrite a path its own plan reads — the replay of a
+    published fold reads the generation it rewrites — only if the
+    plan has a shuffle between the scan and the write (the folds'
+    :func:`latest` / :func:`latest_rows`): without one, the overwrite
+    deletes files the scan still has to open and the job fails with
+    ``FAILED_READ_FILE.FILE_NOT_EXIST``."""
+    write(store, writes)
+    if fail_before_manifest:
+        return
+    os.makedirs(store, exist_ok=True)
+    publish_visibility(store, **publish)
 
 
 # ---------------------------------------------------------------------------

@@ -23,14 +23,11 @@ from kcidb_spark.queries.streaming_exec import (
     _opq_quantize,
     _pqc_static_model,
     _T21_RANGES,
-    ingest_opq_batch_txn,
     ingest_pq_batch_txn,
-    init_opq_store,
     init_pq_store,
-    probe_opq_topk,
     probe_pq_topk,
     read_serve_manifest,
-    retrain_opq_store_txn,
+    retrain_pq_store_txn,
 )
 
 SUBS, SUBDIM = 2, 1
@@ -65,17 +62,17 @@ def _toy_store(spark, store, rot):
         for r in vq.filter(F.col("vec_id") < 2).collect()
         for s in range(SUBS)
     )
-    init_opq_store(store, rot, cents, books, SUBS, SUBDIM)
+    init_pq_store(store, cents, books, SUBS, SUBDIM, rot=rot)
     items = sorted(XPOINTS.items())
-    ingest_opq_batch_txn(_xvecs(spark, items[:3]), store, 0)
-    ingest_opq_batch_txn(_xvecs(spark, items[3:]), store, 1)
+    ingest_pq_batch_txn(_xvecs(spark, items[:3]), store, 0)
+    ingest_pq_batch_txn(_xvecs(spark, items[3:]), store, 1)
     return store
 
 
 def _probe(spark, store, qs=((100, (0.93, 0.07)),), k=6, as_of=None):
     return sorted(
         (r["probe_round"], r["q_id"], r["n_id"], r["adc_micro"], r["rk"])
-        for r in probe_opq_topk(
+        for r in probe_pq_topk(
             _xvecs(spark, qs), store, k, as_of=as_of
         ).collect()
     )
@@ -110,12 +107,12 @@ def test_opq_fixed_rotation_control_equals_pq_store(spark, tmp_path):
 
         init_pq_store(pq, cents, books, _PQK_SUBS, _PQK_SUBDIM)
         opq = str(tmp_path / "opq")
-        init_opq_store(opq, rot, cents, books, _PQK_SUBS, _PQK_SUBDIM)
+        init_pq_store(opq, cents, books, _PQK_SUBS, _PQK_SUBDIM, rot=rot)
         for i, chars in enumerate(_T21_RANGES):
             ingest_pq_batch_txn(
                 vq.filter(pfx.isin(*list(chars))), pq, i
             )
-            ingest_opq_batch_txn(
+            ingest_pq_batch_txn(
                 vecs.filter(pfx.isin(*list(chars))), opq, i
             )
         want = sorted(
@@ -125,7 +122,7 @@ def test_opq_fixed_rotation_control_equals_pq_store(spark, tmp_path):
             ).collect())
         )
         got = sorted(
-            map(tuple, probe_opq_topk(
+            map(tuple, probe_pq_topk(
                 vecs.filter(F.col("vec_id") < _IVF_QUERIES),
                 opq, _IVF_K, nprobe=_KM_NPROBE,
             ).collect())
@@ -163,7 +160,7 @@ def test_opq_probe_never_reads_unrotated_tier(spark, tmp_path):
     store = _toy_store(
         spark, str(tmp_path / "store"), givens_rotation(D)
     )
-    df = probe_opq_topk(_xvecs(spark, [(100, (0.9, 0.1))]), store, 4)
+    df = probe_pq_topk(_xvecs(spark, [(100, (0.9, 0.1))]), store, 4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert f"{os.sep}rawx" not in plan
 
@@ -179,8 +176,8 @@ def test_opq_retrain_swaps_rotation_model_and_layout_atomically(
 
     # Crash before the publish: generation dir exists, probes serve
     # the OLD rotation + model + codes byte-identically.
-    retrain_opq_store_txn(spark, store, 2, 2, 2, iters=2,
-                          fail_before_manifest=True)
+    retrain_pq_store_txn(spark, store, 2, 2, 2, iters=2,
+                         fail_before_manifest=True)
     assert os.path.isdir(os.path.join(store, "gen_opq_1", "codes"))
     assert os.path.isdir(os.path.join(store, "gen_opq_1", "rawx"))
     assert _probe(spark, store) == before
@@ -192,7 +189,7 @@ def test_opq_retrain_swaps_rotation_model_and_layout_atomically(
     # Replay completes: rotation, model generation, and fold point
     # advance TOGETHER; the probe serves the re-encoded generation
     # under the re-solved rotation.
-    retrain_opq_store_txn(spark, store, 2, 2, 2, iters=2)
+    retrain_pq_store_txn(spark, store, 2, 2, 2, iters=2)
     man = read_serve_manifest(store)
     assert man["centroid_gen"] == 1
     assert man["compacted_upto"] == 1
@@ -214,10 +211,62 @@ def test_opq_tail_ingest_after_retrain_uses_new_rotation(spark, tmp_path):
     store = _toy_store(
         spark, str(tmp_path / "store"), givens_rotation(D)
     )
-    retrain_opq_store_txn(spark, store, 2, 2, 2, iters=2)
-    ingest_opq_batch_txn(_xvecs(spark, [(7, (0.85, 0.15))]), store, 2)
+    retrain_pq_store_txn(spark, store, 2, 2, 2, iters=2)
+    ingest_pq_batch_txn(_xvecs(spark, [(7, (0.85, 0.15))]), store, 2)
     rows = _probe(spark, store, k=7)
     assert 7 in {r[2] for r in rows}
     ids = spark.createDataFrame([Row(vec_id=0)], "vec_id long")
     delete_vec_batch_txn(spark, ids, store, 3)
     assert 0 not in {r[2] for r in _probe(spark, store, k=7)}
+
+
+def test_opq_compact_gc_retrain_keeps_the_cold_tier(spark, tmp_path):
+    """The fold folds the cold tier the model names: a rotated store's
+    compaction carries ``rawx`` into the generation, so GC of the
+    folded batches leaves the retrain its re-solve source; the probe
+    is unchanged across compaction and GC."""
+    from kcidb_spark.queries.streaming_exec import (
+        compact_pq_store_txn,
+        serve_store_gc,
+    )
+
+    store = _toy_store(
+        spark, str(tmp_path / "store"), givens_rotation(D)
+    )
+    before = _probe(spark, store)
+    compact_pq_store_txn(spark, store, 1)
+    assert _probe(spark, store) == before
+    serve_store_gc(store)
+    assert _probe(spark, store) == before
+    assert not os.path.exists(os.path.join(store, "rawx", "batch_id=0"))
+    assert os.path.isdir(os.path.join(store, "gen_pqc_1", "rawx"))
+    retrain_pq_store_txn(spark, store, 2, 2, 2, iters=2)
+    man = read_serve_manifest(store)
+    assert man["centroid_gen"] == 1
+    assert man["compacted_dir"] == "gen_opq_1"
+    assert {r[2] for r in _probe(spark, store)} == set(XPOINTS)
+
+
+def test_rotated_probe_reads_one_manifest_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    """Rotation, model, codes and generation come from ONE manifest
+    read, so a retrain publishing mid-probe cannot pair the old
+    rotation with the new model."""
+    from kcidb_spark.queries import streaming_exec as se
+    from kcidb_spark.serve import lsm
+
+    store = _toy_store(
+        spark, str(tmp_path / "store"), givens_rotation(D)
+    )
+    reads = []
+    real = lsm.read_serve_manifest
+
+    def counting(path):
+        reads.append(path)
+        return real(path)
+
+    monkeypatch.setattr(se, "read_serve_manifest", counting)
+    monkeypatch.setattr(lsm, "read_serve_manifest", counting)
+    rows = _probe(spark, store)
+    assert rows and len(reads) == 1

@@ -247,10 +247,12 @@ def test_delete_compact_gc_lifecycle_lexical(spark, tmp_path):
 def test_postings_compaction_replay_is_idempotent(spark, tmp_path):
     """Replay of a postings compaction after a successful publish
     (crash between publish and the caller's bookkeeping) must not
-    change the generation: the fold unions the previous generation
-    with the very batch subtrees it came from (GC is lazy), so
-    without exact-duplicate elimination every row — and therefore
-    df/N/S — doubled (r13 review finding, empirically confirmed)."""
+    change the generation: the fold reads only the previous
+    generation and the batches in ``(postings_upto, upto]``, so a
+    same-``upto`` replay reads the generation it rewrites and none of
+    the batch subtrees it was folded from (GC is lazy) — re-reading
+    them doubled every row, and therefore df/N/S (r13 review
+    finding, empirically confirmed)."""
     from kcidb_spark.queries.streaming_exec import compact_postings_txn
 
     store = str(tmp_path / "store")

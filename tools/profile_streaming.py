@@ -54,13 +54,16 @@ def main() -> None:
     DataStreamWriter.foreachBatch = feb
 
     import kcidb_spark.queries.streaming_exec as se
+    from kcidb_spark.serve import lsm
 
+    # Every store transaction publishes through lsm.commit.
+    _wrap(lsm, "publish_visibility")
     for fname in (
+        "ingest_hybrid_batch_txn",
         "ingest_postings_batch_txn",
         "ingest_vec_batch_txn",
         "probe_postings_bm25",
         "probe_tiered_topk",
-        "publish_visibility",
         "ingest_pq_batch_txn",
         "probe_pq_topk",
         "retrain_pq_store_txn",

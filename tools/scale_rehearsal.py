@@ -858,12 +858,9 @@ def run_hybrid_split(sf_dir: str, label: str, spark,
     from kcidb_spark.operators.similarity import dot_expr
     from kcidb_spark.queries.advanced import _IVF_CENTROIDS
     from kcidb_spark.queries.streaming_exec import (
-        _store_pb,
-        ingest_postings_batch_txn,
-        ingest_vec_batch_txn,
+        ingest_hybrid_batch_txn,
         probe_postings_bm25,
         probe_tiered_topk,
-        publish_visibility,
         read_serve_manifest,
     )
 
@@ -922,15 +919,11 @@ def run_hybrid_split(sf_dir: str, label: str, spark,
     def handle_ingest(batch_df, epoch_id):
         t0 = time.perf_counter()
         n = batch_df.count()
-        ingest_postings_batch_txn(
-            batch_df.select("doc_id", "text"), store, int(epoch_id),
-            fail_before_manifest=True,
-        )
-        ingest_vec_batch_txn(
+        ingest_hybrid_batch_txn(
+            batch_df.select("doc_id", "text"),
             batch_df.select(F.col("doc_id").alias("vec_id"), "v"),
-            store, int(epoch_id), cents, fail_before_manifest=True,
+            store, int(epoch_id), cents,
         )
-        publish_visibility(store, wm=int(epoch_id), pb=_store_pb(store))
         ingest_walls.append(
             {"epoch": int(epoch_id), "rows": n,
              "wall_s": round(time.perf_counter() - t0, 3)}
