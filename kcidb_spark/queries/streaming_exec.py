@@ -13,9 +13,12 @@ external gate of record.
 
 from __future__ import annotations
 
+import glob
 import math
 import os
+import shutil
 import tempfile
+import time
 import uuid
 from textwrap import dedent
 
@@ -53,8 +56,6 @@ def _scratch_dir(name: str) -> str:
     from an empty tree, because a reused Structured Streaming
     checkpoint would resume the previous invocation's offsets and
     silently skip the new invocation's input files."""
-    import shutil
-
     if not _SCRATCH_ROOT:
         _SCRATCH_ROOT.append(tempfile.mkdtemp(prefix="kcidb_stream_"))
     path = os.path.join(_SCRATCH_ROOT[0], name)
@@ -132,28 +133,30 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     path = os.path.join(sf_dir, "events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(path).schema
-    reader = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-    )
     if os.path.isdir(path):
-        return reader.parquet(path)
-    return reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+        return _file_stream(spark, schema, path)
+    return _file_stream(
+        spark, schema, sf_dir, pathGlobFilter="events.parquet"
+    )
 
 
 class _scoped_shuffle_partitions:
     """Temporarily set spark.sql.shuffle.partitions while a bounded
     streaming query drains (the setting is read at stream start; the
-    drain is synchronous, so restoring after is race-free here)."""
+    drain is synchronous, so restoring after is race-free here).
+    ``n=None`` leaves the session's setting alone."""
 
-    def __init__(self, spark: SparkSession, n: int):
+    def __init__(self, spark: SparkSession, n: int | None):
         self.spark, self.n = spark, n
 
     def __enter__(self):
-        self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
+        if self.n is not None:
+            self.saved = self.spark.conf.get("spark.sql.shuffle.partitions")
+            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
 
     def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
+        if self.n is not None:
+            self.spark.conf.set("spark.sql.shuffle.partitions", self.saved)
 
 
 def _restores_nanos_conf(fn):
@@ -180,6 +183,71 @@ def _restores_nanos_conf(fn):
             spark.conf.set(key, saved)
 
     return wrapper
+
+
+def _file_stream(spark: SparkSession, schema, path: str, **options):
+    """File-source stream over the parquet files under ``path``: one
+    micro-batch per file (T1's pull cap), in modification-time
+    order."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .options(**options)
+        .parquet(path)
+    )
+
+
+def _stage_arrivals(watch: str, files) -> None:
+    """Copy each ``(src, name)`` of ``files`` into ``watch`` with
+    strictly increasing past modification times, in list order — the
+    file source reads oldest first and ``maxFilesPerTrigger=1`` makes
+    each file its own micro-batch, so list order IS epoch order."""
+    now = time.time()
+    for order, (src, name) in enumerate(files):
+        dst = os.path.join(watch, f"{order:04d}_{name}.parquet")
+        shutil.copyfile(src, dst)
+        ts = now - 10 * (len(files) - order)
+        os.utime(dst, (ts, ts))
+
+
+def _drain(
+    spark: SparkSession, name: str, writer,
+    partitions: int | None = None, done=(),
+) -> None:
+    """Run a configured stream writer to completion under
+    ``Trigger.AvailableNow`` on a fresh checkpoint, record its
+    micro-batch progress as ``LAST_PROGRESS[name]``, then remove the
+    checkpoint and the scratch dirs in ``done``.  ``partitions``
+    scopes ``spark.sql.shuffle.partitions`` to the drain (the
+    stateful operators' partition count, frozen at stream start)."""
+    ckpt = _scratch_dir(f"{name}_ckpt")
+    with _scoped_shuffle_partitions(spark, partitions):
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    _record_progress(name, q)
+    for d in (ckpt, *done):
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _drain_to_memory(
+    name: str, stream: DataFrame, mode: str, partitions: int, done=()
+) -> DataFrame:
+    """:func:`_drain` into a memory sink; returns the sink table (the
+    committed rows live in the driver, so no checkpoint outlives the
+    drain)."""
+    spark = stream.sparkSession
+    qname = f"{name}_sink_{uuid.uuid4().hex[:8]}"
+    _drain(
+        spark, name,
+        stream.writeStream.format("memory").queryName(qname)
+        .outputMode(mode),
+        partitions, done,
+    )
+    return spark.table(qname)
 
 
 @register(
@@ -230,26 +298,10 @@ def t11_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             as_money(F.col("_sv"), 100).alias("sum_value"),
         )
     )
-    qname = f"t11_sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("t11_ckpt")
-    with _scoped_shuffle_partitions(spark, _state_partitions(spark, sf_dir)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_progress("t11_stream_tumbling", q)
-    # The sink rows live in memory; the checkpoint is only needed by
-    # the (now finished) run — don't leak tempdirs across a long
-    # session.
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    return _drain_to_memory(
+        "t11_stream_tumbling", agg, "complete",
+        _state_partitions(spark, sf_dir),
+    )
 
 
 @register(
@@ -282,23 +334,10 @@ def t12_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_distinct"))
     )
-    qname = f"t12_sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("t12_ckpt")
-    with _scoped_shuffle_partitions(spark, _state_partitions(spark, sf_dir)):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_progress("t12_stream_dedup", q)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    return _drain_to_memory(
+        "t12_stream_dedup", stream, "complete",
+        _state_partitions(spark, sf_dir),
+    )
 
 
 _SSJOIN_WINDOW = "6 hours"
@@ -340,23 +379,9 @@ def _ssjoin_drain(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         F.col("click_id"),
         F.col("view_user").alias("user_id"),
     )
-    qname = f"{name}_sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir(f"{name}_ckpt")
-    with _scoped_shuffle_partitions(spark, _state_partitions(spark, sf_dir)):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_progress(name, q)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    return _drain_to_memory(
+        name, joined, "append", _state_partitions(spark, sf_dir)
+    )
 
 
 @register(
@@ -444,25 +469,16 @@ def _sentineled_events_dir(
     watermark is emitted while sentinel-2's batch runs — no reliance
     on the engine scheduling a no-data micro-batch after the last
     file."""
-    import shutil
-    import time
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "events.parquet")
-    tmp = _scratch_dir("t16_src")
-    parts = []
+    parts = [src]
     if os.path.isdir(src):
-        for name in sorted(os.listdir(src)):
-            if name.endswith(".parquet"):
-                dst = os.path.join(tmp, f"data_{name}")
-                shutil.copyfile(os.path.join(src, name), dst)
-                parts.append(dst)
-    else:
-        dst = os.path.join(tmp, "data_events.parquet")
-        shutil.copyfile(src, dst)
-        parts.append(dst)
+        parts = [
+            os.path.join(src, name) for name in sorted(os.listdir(src))
+            if name.endswith(".parquet")
+        ]
     schema = pq.read_schema(parts[0])
     ts_type = schema.field("ts").type
     # Sentinels sit 30/60/… days past the last real event (max taken
@@ -479,9 +495,8 @@ def _sentineled_events_dir(
         )
         if m.is_valid:
             max_us = max(max_us, m.value)
-    now = time.time()
-    for dp in parts:
-        os.utime(dp, (now - 600, now - 600))
+    arrivals = [(dp, f"data_{i}") for i, dp in enumerate(parts)]
+    sentinels = _scratch_dir("t16_sentinels")
     for k in range(n_future_batches):
         ts_us = max_us + (k + 1) * 30 * 86_400_000_000
         uid = -(2 * k + 1)
@@ -498,9 +513,12 @@ def _sentineled_events_dir(
                 "props": pa.array(["{}", "{}"], pa.string()),
             }
         ).select([f.name for f in schema])
-        path = os.path.join(tmp, f"sentinel_{k}.parquet")
+        path = os.path.join(sentinels, f"sentinel_{k}.parquet")
         pq.write_table(rows.cast(schema), path)
-        os.utime(path, (now - 300 + k, now - 300 + k))
+        arrivals.append((path, f"sentinel_{k}"))
+    tmp = _scratch_dir("t16_src")
+    _stage_arrivals(tmp, arrivals)
+    shutil.rmtree(sentinels, ignore_errors=True)
     return tmp
 
 
@@ -518,11 +536,8 @@ def _outer_join_drain(
     def side(event_type: str, prefix: str):
         if src_dir is not None:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            schema = spark.read.parquet(src_dir).schema
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src_dir)
+            stream = _file_stream(
+                spark, spark.read.parquet(src_dir).schema, src_dir
             )
         else:
             stream = _events_stream(spark, sf_dir)
@@ -553,26 +568,13 @@ def _outer_join_drain(
         F.col("click_id"),
         F.col("view_user").alias("user_id"),
     )
-    qname = f"t16_sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("t16_ckpt")
-    with _scoped_shuffle_partitions(spark, _state_partitions(spark, sf_dir)):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_progress("t16_stream_outer_join", q)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    if src_dir is not None:
-        shutil.rmtree(src_dir, ignore_errors=True)
+    sink = _drain_to_memory(
+        "t16_stream_outer_join", joined, "append",
+        _state_partitions(spark, sf_dir),
+        done=() if src_dir is None else (src_dir,),
+    )
     # Sentinel view rows carry negative user ids; real ids are ≥ 0.
-    return spark.table(qname).filter(F.col("user_id") >= 0)
+    return sink.filter(F.col("user_id") >= 0)
 
 
 @register(
@@ -639,25 +641,10 @@ def t15_stream_status_transitions(spark: SparkSession, sf_dir: str) -> DataFrame
     _utc(spark)
     stream = _normalize_ts(_events_stream(spark, sf_dir))
     out = status_transitions(stream)
-    qname = f"t15_sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("t15_ckpt")
-    with _scoped_shuffle_partitions(
-        spark, _state_partitions(spark, sf_dir, python_stateful=True)
-    ):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_progress("t15_stream_status_transitions", q)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(qname)
+    return _drain_to_memory(
+        "t15_stream_status_transitions", out, "append",
+        _state_partitions(spark, sf_dir, python_stateful=True),
+    )
 
 
 #: Reserved index key standing in for a NULL fingerprint — real th
@@ -819,10 +806,6 @@ def t17_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus index.  At 100 TB each iteration reads only the row
     groups whose blooms fire, and the index grows by one
     range-partitioned file per cycle (compaction = fpindex_build)."""
-    import glob
-    import shutil
-    import time
-
     from kcidb_spark.operators.bucketing import write_fingerprint_index
     from kcidb_spark.queries.mixing import _fp_split
 
@@ -831,7 +814,7 @@ def t17_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Session-staged fixtures (the t21-t26 staging-split precedent,
     # VERDICT r14 #4): the base corpus index and the four day-batch
     # files are identical for every invocation in a session, so the
-    # five coalesce(1) Spark writes run ONCE per (session, sf_dir);
+    # two staging writes run ONCE per (session, sf_dir);
     # per-invocation cost is hard file copies.  The LIVE index dir is
     # still per-invocation (the stream appends to it) — only its
     # immutable batch_id=0 seed is staged.  Harness-only: at 100 TB
@@ -841,63 +824,45 @@ def t17_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_fingerprint_index(
             corpus, os.path.join(stage, "base_index"), key="th"
         )
-        for gch in batches:
-            (
-                new.filter(
-                    F.substring(
-                        F.md5(F.col("doc_id").cast("string")), 1, 1
-                    )
-                    == gch
-                )
-                .select("doc_id", "th")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(stage, f"b{gch}"))
-            )
+        pfx = _md5_prefix("doc_id")
+        _write_groups(
+            new.filter(pfx.isin(*batches)).select("doc_id", "th"), pfx,
+            os.path.join(stage, "batches"),
+        )
 
     stage_dir = _session_stage(spark, sf_dir, "t17", _write_stage)
     idx_dir = _scratch_dir("t17_idx")
     # Transactional layout: base corpus index is batch 0, stream
     # batches own batch_id=N≥1 dirs (see ingest_dedup_batch_txn).
-    shutil.rmtree(idx_dir, ignore_errors=True)
     shutil.copytree(
         os.path.join(stage_dir, "base_index"),
         os.path.join(idx_dir, "batch_id=0"),
     )
     watch_dir = _scratch_dir("t17_in")
-    now = time.time()
     schema_df = spark.range(0).selectExpr(
         "id as doc_id", "cast(null as string) as th"
     )
-    for i, gch in enumerate(batches):
-        src_part = _staged_file(stage_dir, f"b{gch}", schema_df)
-        dst = os.path.join(watch_dir, f"batch_{gch}.parquet")
-        shutil.copyfile(src_part, dst)
-        os.utime(dst, (now - 400 + 10 * i, now - 400 + 10 * i))
-
+    _stage_arrivals(watch_dir, [
+        (
+            _staged_file(
+                os.path.join(stage_dir, "batches"), f"_g={gch}", schema_df
+            ),
+            f"batch_{gch}",
+        )
+        for gch in batches
+    ])
     out_dir = _scratch_dir("t17_out")
-    shutil.rmtree(out_dir)  # foreachBatch appends; start absent
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         ingest_dedup_batch_txn(batch_df, idx_dir, out_dir, batch_id + 1)
 
-    schema = "doc_id long, th string"
-    ckpt = _scratch_dir("t17_ckpt")
-    with _scoped_shuffle_partitions(spark, _state_partitions(spark, sf_dir)):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(watch_dir)
-            .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_progress("t17_stream_incremental_dedup", q)
     # NOT stage_dir: it is the session-owned staged fixture.
-    for d in (ckpt, idx_dir, watch_dir):
-        shutil.rmtree(d, ignore_errors=True)
+    _drain(
+        spark, "t17_stream_incremental_dedup",
+        _file_stream(spark, "doc_id long, th string", watch_dir)
+        .writeStream.foreachBatch(ingest),
+        _state_partitions(spark, sf_dir), done=(idx_dir, watch_dir),
+    )
     # out_dir stays: the returned frame reads it lazily (the accepted
     # set is corpus-sized — never driver-collected); one small tmp dir
     # per invocation, reclaimed by tmp cleaning.
@@ -935,24 +900,11 @@ def t14_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "365 days")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    qname = f"t14_sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_dir("t14_ckpt")
-    with _scoped_shuffle_partitions(spark, _state_partitions(spark, sf_dir)):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _record_progress("t14_stream_dedup_watermarked", q)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
     return (
-        spark.table(qname)
+        _drain_to_memory(
+            "t14_stream_dedup_watermarked", stream, "append",
+            _state_partitions(spark, sf_dir),
+        )
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_distinct"))
     )
@@ -966,8 +918,6 @@ def _staged_file(stage: str, rel: str, schema_df: DataFrame) -> str:
     drives), so arrival staging falls back to one empty parquet per
     stage dir — the stream still sees every scheduled arrival, each
     carrying zero rows."""
-    import glob
-
     parts = glob.glob(os.path.join(stage, rel, "part-*.parquet"))
     if parts:
         return parts[0]
@@ -1019,24 +969,19 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     over |batch|·|centroids| rows, and the store scan reads ONLY the
     probed clusters' directories (same PartitionFilters pin as
     ann_ivf_stored_probe)."""
-    import glob
-    import shutil
-    import time
-
     from kcidb_spark.operators.similarity import ivf_rank
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
-
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    from kcidb_spark.queries.advanced import (
+        _IVF_K,
+        _IVF_QUERIES,
+        _ivf_session_store,
     )
+
+    vecs = _float_vecs(spark, sf_dir)
     # The session-keyed inverted file (shared with ann_ivf_stored_probe
     # and built/certified by t19_store_build): VERDICT r11 #5 — the
     # one-off build no longer rides the serve wall; a cold session's
     # first caller still pays it, attributed to whichever entry runs
     # first (t19_store_build in the bench ordering).
-    from kcidb_spark.queries.advanced import _ivf_session_store
-
     store, store_schema = _ivf_session_store(spark, sf_dir)
     # Centroids as driver-held literals: (c_id, cv, cn).
     cents = _float_cents(vecs)
@@ -1048,18 +993,14 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (vec_id, v) schema the stream reads).
     watch = _scratch_dir("t19_in")
     stage = _scratch_dir("t19_stage")
-    now = time.time()
-    vecs.filter(F.col("vec_id") < _IVF_QUERIES).withColumn(
-        "_q", F.col("vec_id")
-    ).coalesce(1).write.mode("overwrite").partitionBy("_q").parquet(stage)
-    for i in range(_IVF_QUERIES):
-        part = _staged_file(stage, f"_q={i}", vecs)
-        dst = os.path.join(watch, f"q{i:04d}.parquet")
-        shutil.copyfile(part, dst)
-        os.utime(dst, (now - 300 + 10 * i, now - 300 + 10 * i))
-
+    _write_groups(
+        vecs.filter(F.col("vec_id") < _IVF_QUERIES), F.col("vec_id"), stage
+    )
+    _stage_arrivals(watch, [
+        (_staged_file(stage, f"_g={i}", vecs), f"q{i}")
+        for i in range(_IVF_QUERIES)
+    ])
     out_dir = _scratch_dir("t19_out")
-    shutil.rmtree(out_dir)
 
     def serve(batch_df: DataFrame, epoch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -1082,21 +1023,13 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
 
-    ckpt = _scratch_dir("t19_ckpt")
-    q_stream = (
-        spark.readStream.schema("vec_id long, v array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch)
-        .writeStream.foreachBatch(serve)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_stream.awaitTermination()
-    _record_progress("t19_stream_ann_probe", q_stream)
     # NOT the store: it is the session-owned shared index.
-    for d in (ckpt, watch, stage):
-        shutil.rmtree(d, ignore_errors=True)
+    _drain(
+        spark, "t19_stream_ann_probe",
+        _file_stream(spark, vecs.schema, watch).writeStream
+        .foreachBatch(serve),
+        done=(watch, stage),
+    )
     return spark.read.parquet(out_dir).select("q_id", "n_id", "sim")
 
 
@@ -1171,93 +1104,54 @@ def t19_store_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def t20_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WRITE side of the ANN serving tier (t19 is the read side):
-    new corpus vectors arrive as micro-batches, each batch assigns
-    against the broadcast centroid literal and writes its rows into
-    the inverted file under ``batch_id=N/c_id=K`` directories — the
-    t17 transactional idiom one level up (a replayed batch overwrites
-    only its own subtree, so the store holds exactly-once assignments
-    at any crash point), and the double partitioning keeps t19-style
-    probes pruned (c_id stays a partition column) while ingest stays
-    append-shaped (each batch owns a directory; compaction is the
-    fpindex_build analog).  The drained store, read back WHOLE, must
-    equal the batch nearest-centroid assignment row-for-row — the
-    oracle certifies the full assign → partitioned write → read
-    round trip, not just the argmin.
+    new corpus vectors arrive as micro-batches and each batch is one
+    serving-store ingest transaction (ingest_vec_batch_txn): in-row
+    argmin against the literal centroids, rows written under the
+    batch's own ``batch_id=N/c_id=K`` subtree, then the manifest
+    publish — the t17 transactional idiom one level up (a replayed
+    batch overwrites only its own subtree, so the store holds
+    exactly-once assignments at any crash point), and the double
+    partitioning keeps t19-style probes pruned (c_id stays a
+    partition column) while ingest stays append-shaped (each batch
+    owns a directory; compaction is the fpindex_build analog).  The
+    drained store, read back WHOLE as (vec_id, c_id), must equal the
+    batch nearest-centroid assignment row-for-row — the oracle
+    certifies the full assign → partitioned write → read round trip,
+    not just the argmin.
 
-    Scale shape per batch: one broadcast cross join + map-side
-    min_by; no corpus-sized state anywhere (the state-free ingest
-    end of the spectrum, like t19's serve end — the stateful middles
-    are t11-t18)."""
-    import glob
-    import shutil
-    import time
-
-    from kcidb_spark.operators.similarity import dot_expr
-
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    Scale shape per batch: one map-side argmin, zero exchanges; no
+    corpus-sized state anywhere (the state-free ingest end of the
+    spectrum, like t19's serve end — the stateful middles are
+    t11-t18)."""
+    vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
 
     # Stage 4 arrival batches by vec_id-hash prefix (deterministic,
-    # covers every vector exactly once), ordered mtimes.
+    # covers every vector exactly once), ordered mtimes — ONE staging
+    # job: all four arrival batches in one partitioned write.
+    ranges = ("0123", "4567", "89ab", "cdef")
     watch = _scratch_dir("t20_in")
     stage = _scratch_dir("t20_stage")
-    now = time.time()
-    pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-    ranges = ("0123", "4567", "89ab", "cdef")
-    # ONE staging job: all four arrival batches in one partitioned
-    # write (the _g partition column is directory-only).
-    grp = F.when(pfx.isin(*list(ranges[0])), 0).when(
-        pfx.isin(*list(ranges[1])), 1
-    ).when(pfx.isin(*list(ranges[2])), 2).otherwise(3)
-    vecs.withColumn("_g", grp).coalesce(1).write.mode(
-        "overwrite"
-    ).partitionBy("_g").parquet(stage)
-    for i in range(len(ranges)):
-        part = _staged_file(stage, f"_g={i}", vecs)
-        dst = os.path.join(watch, f"batch_{i}.parquet")
-        shutil.copyfile(part, dst)
-        os.utime(dst, (now - 300 + 10 * i, now - 300 + 10 * i))
-
+    _write_groups(vecs, _range_group("vec_id", ranges), stage)
+    _stage_arrivals(watch, [
+        (_staged_file(stage, f"_g={i}", vecs), f"batch_{i}")
+        for i in range(len(ranges))
+    ])
     store = _scratch_dir("t20_store")
-    shutil.rmtree(store)
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        # In-row literal-centroid argmin (_nearest_centroid_sql): the
-        # same min_by over the broadcast table, with zero exchanges
-        # (guide §2.4) — assignment happens in the scan task.
-        assigned = (
-            batch_df.withColumn(
-                "nrm", F.expr(f"sqrt({dot_expr('v', 'v')})")
-            )
-            .withColumn("c_id", F.expr(_nearest_centroid_sql(cents)))
-            .select("vec_id", "c_id")
-        )
-        assigned.write.mode("overwrite").partitionBy("c_id").parquet(
-            os.path.join(store, f"batch_id={epoch_id}")
-        )
+        ingest_vec_batch_txn(batch_df, store, epoch_id, cents)
 
-    ckpt = _scratch_dir("t20_ckpt")
-    q = (
-        spark.readStream.schema("vec_id long, v array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark, "t20_stream_ivf_ingest",
+        _file_stream(spark, vecs.schema, watch).writeStream
+        .foreachBatch(ingest),
+        done=(watch, stage),
     )
-    q.awaitTermination()
-    _record_progress("t20_stream_ivf_ingest", q)
-    for d in (ckpt, watch, stage):
-        shutil.rmtree(d, ignore_errors=True)
-    return (
-        spark.read.schema("vec_id long, batch_id long, c_id long")
-        .parquet(store)
-        .select("vec_id", "c_id")
-    )
+    return lsm.tiers(
+        spark, store, "data", _T21_SCHEMA, ("vec_id", "c_id"),
+        -1, read_serve_watermark(store),
+    ).select("vec_id", "c_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1311,6 +1205,14 @@ def _nearest_centroid_sql(cents: list) -> str:
             " array<struct<s: double, c: bigint>>)).c"
         )
     return f"array_min(array({', '.join(entries)})).c"
+
+
+def _float_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings as (vec_id, v array<double>) — the float
+    stores' corpus."""
+    return table(spark, sf_dir, "embeddings", spread=True).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
 
 
 def _float_cents(vecs: DataFrame) -> list:
@@ -1523,6 +1425,38 @@ def delete_vec_batch_txn(
 _T21_RANGES = ("012345", "6789ab", "cdef")
 
 
+def _md5_prefix(id_col: str, pos: int = 1):
+    """The ``pos``-th hex char of md5(id) — the deterministic split
+    key of the staged arrivals, store builds and tombstone sets."""
+    return F.substring(F.md5(F.col(id_col).cast("string")), pos, 1)
+
+
+def _range_group(id_col: str, ranges=_T21_RANGES):
+    """Index of the range of ``ranges`` holding md5(id)'s first hex
+    char (the last range takes every other char)."""
+    pfx = _md5_prefix(id_col)
+    grp = F.lit(len(ranges) - 1)
+    for i in reversed(range(len(ranges) - 1)):
+        grp = F.when(pfx.isin(*ranges[i]), i).otherwise(grp)
+    return grp
+
+
+def _md5_batches(df: DataFrame, id_col: str, ranges=_T21_RANGES) -> list:
+    """``[(i, rows of df in range i)]`` — batch i of a store built
+    from ``ranges`` (disjoint ranges cover every row once)."""
+    pfx = _md5_prefix(id_col)
+    return [(i, df.filter(pfx.isin(*chars))) for i, chars in enumerate(ranges)]
+
+
+def _write_groups(df: DataFrame, grp, path: str) -> None:
+    """ONE staging job: ``df`` written under ``path/_g=<grp>``, one
+    file per group (``_g`` is directory-only, so each file keeps
+    ``df``'s schema); :func:`_staged_file` finds a group's file."""
+    df.withColumn("_g", grp).coalesce(1).write.mode(
+        "overwrite"
+    ).partitionBy("_g").parquet(path)
+
+
 #: (applicationId, path) pairs built THIS session — the
 #: _ivf_session_store idiom (ADVICE r9/r12): batch entries that stage
 #: a corpus-sized serving store build it ONCE per (session, sf_dir)
@@ -1581,6 +1515,65 @@ def _session_stage(spark: SparkSession, sf_dir: str, tag: str, writer) -> str:
     return stage
 
 
+def _serve_interleaved(
+    name: str, sf_dir: str, staged: DataFrame, id_col: str,
+    n_queries: int, tag: str, store: str, ingest, probe, cols,
+) -> DataFrame:
+    """THE serve-during-ingest drain of t21–t26: ``staged`` (the
+    entry's corpus, keyed by ``id_col``) arrives as ONE interleaved
+    stream I0, P0, I1, P1, I2, P2 — ingest batch i is md5-range i of
+    ``_T21_RANGES``, every probe batch is the query workload
+    (``id_col < n_queries``) — one mtime-ordered file per trigger, so
+    ingest epochs are even, probe epochs odd, and probe round r runs
+    right after ingest batch r commits.
+
+    The two staging Spark jobs run once per (session, sf_dir, ``tag``)
+    (_session_stage); per invocation only file copies remain.  Each
+    ingest epoch calls ``ingest(batch_df, bid)``; each probe epoch
+    OVERWRITES ``probe(batch_df, round)`` into its own ``epoch=N``
+    output dir, so a replayed epoch replaces itself.  The drain's
+    progress is ``LAST_PROGRESS[name]``; the watch dir and the
+    entry's scratch ``store`` are removed after it.  Returns the
+    probe outputs as ``cols``."""
+    spark = staged.sparkSession
+
+    def write_stage(stage: str) -> None:
+        _write_groups(
+            staged, _range_group(id_col), os.path.join(stage, "ingest")
+        )
+        staged.filter(F.col(id_col) < n_queries).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(stage, "probe"))
+
+    stage = _session_stage(spark, sf_dir, tag, write_stage)
+    probe_part = glob.glob(os.path.join(stage, "probe", "part-*.parquet"))[0]
+    arrivals = []
+    for i in range(len(_T21_RANGES)):
+        ingest_part = _staged_file(
+            os.path.join(stage, "ingest"), f"_g={i}", staged
+        )
+        arrivals += [(ingest_part, f"i{i}"), (probe_part, f"p{i}")]
+    watch = _scratch_dir(f"{name}_in")
+    _stage_arrivals(watch, arrivals)
+    out_dir = _scratch_dir(f"{name}_out")
+
+    def handle(batch_df: DataFrame, epoch_id: int) -> None:
+        if epoch_id % 2 == 0:
+            ingest(batch_df, epoch_id // 2)
+        else:
+            probe(batch_df, epoch_id // 2).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
+
+    _drain(
+        spark, name,
+        _file_stream(spark, staged.schema, watch).writeStream
+        .foreachBatch(handle),
+        done=(watch, store),
+    )
+    return spark.read.parquet(out_dir).select(*cols)
+
+
 def _t21_session_store(
     spark: SparkSession, sf_dir: str, vecs: DataFrame, cents: list
 ) -> str:
@@ -1594,11 +1587,8 @@ def _t21_session_store(
     built on."""
     store, built = _session_store_dir(spark, sf_dir, "t21flat")
     if not built:
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_vec_batch_txn(
-                vecs.filter(pfx.isin(*list(chars))), store, i, cents
-            )
+        for i, batch in _md5_batches(vecs, "vec_id"):
+            ingest_vec_batch_txn(batch, store, i, cents)
         _mark_store_built(spark, store)
     return store
 
@@ -1718,93 +1708,17 @@ def t21_stream_serve_during_ingest(
     plus the manifest read — ONE tiny file per probe, ONE atomic
     rename per ingest batch; at 100 TB the rename becomes a manifest
     table / conditional put, the filter is unchanged."""
-    import glob
-    import shutil
-    import time
-
     from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
-
-    # Stage the interleaved arrivals: ingest batch i then a probe of
-    # the full query workload, alternating, mtime-ordered.  The TWO
-    # staging Spark jobs (all ingest groups in one partitioned
-    # coalesce(1) write; the probe workload written once) run once
-    # per session (_session_stage); this wall measures the serve
-    # loop plus cheap file copies.
-    watch = _scratch_dir("t21_in")
-    now = time.time()
-
-    def _write_stage(stage: str) -> None:
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        grp = F.when(pfx.isin(*list(_T21_RANGES[0])), 0).when(
-            pfx.isin(*list(_T21_RANGES[1])), 1
-        ).otherwise(2)
-        vecs.withColumn("_g", grp).coalesce(1).write.mode(
-            "overwrite"
-        ).partitionBy("_g").parquet(os.path.join(stage, "ingest"))
-        vecs.filter(
-            F.col("vec_id") < _IVF_QUERIES
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, "probe")
-        )
-
-    stage = _session_stage(spark, sf_dir, "t21", _write_stage)
-    probe_part = glob.glob(
-        os.path.join(stage, "probe", "part-*.parquet")
-    )[0]
-
-    def _arrive(src: str, name: str, order: int) -> None:
-        dst = os.path.join(watch, f"{order:02d}_{name}.parquet")
-        shutil.copyfile(src, dst)
-        ts = now - 600 + 10 * order
-        os.utime(dst, (ts, ts))
-
-    for i in range(len(_T21_RANGES)):
-        ingest_part = _staged_file(
-            os.path.join(stage, "ingest"), f"_g={i}", vecs
-        )
-        _arrive(ingest_part, f"i{i}", 2 * i)
-        _arrive(probe_part, f"p{i}", 2 * i + 1)
-
     store = _scratch_dir("t21_store")
-    out_dir = _scratch_dir("t21_out")
-    shutil.rmtree(out_dir)
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id % 2 == 0:                      # ingest epoch
-            ingest_vec_batch_txn(
-                batch_df, store, epoch_id // 2, cents
-            )
-        else:                                      # probe epoch
-            probe_tiered_topk(
-                batch_df, store, cents, _IVF_K
-            ).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-
-    ckpt = _scratch_dir("t21_ckpt")
-    q = (
-        spark.readStream.schema("vec_id long, v array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_progress("t21_stream_serve_during_ingest", q)
-    for d in (ckpt, watch, store):
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
-        "probe_round", "q_id", "n_id", "sim"
+    return _serve_interleaved(
+        "t21_stream_serve_during_ingest", sf_dir, vecs, "vec_id",
+        _IVF_QUERIES, "t21", store,
+        lambda b, bid: ingest_vec_batch_txn(b, store, bid, cents),
+        lambda b, _r: probe_tiered_topk(b, store, cents, _IVF_K),
+        ("probe_round", "q_id", "n_id", "sim"),
     )
 
 
@@ -1897,21 +1811,13 @@ def ivf_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     per bench/correctness run); the first invocation pays the
     build + compaction wall, later invocations read the compacted
     layout (the serving-tier accounting of ann_ivf_stored_probe)."""
-    import shutil
-
     compacted, built = _session_store_dir(spark, sf_dir, "compactgen")
     if not built:
-        emb = table(spark, sf_dir, "embeddings", spread=True)
-        vecs = emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
+        vecs = _float_vecs(spark, sf_dir)
         cents = _float_cents(vecs)
         store = _scratch_dir("compact_store")
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_COMPACT_RANGES):
-            ingest_vec_batch_txn(
-                vecs.filter(pfx.isin(*list(chars))), store, i, cents
-            )
+        for i, batch in _md5_batches(vecs, "vec_id", _COMPACT_RANGES):
+            ingest_vec_batch_txn(batch, store, i, cents)
         latest = lsm.latest(
             lsm.tiers(
                 spark, store, "data", _T21_SCHEMA,
@@ -2054,91 +1960,26 @@ def t22_stream_compact_while_serving(
     a live generation swap; probes stay query-sized (the t21/serve
     rehearsal measured the flat-probe wall at 1.13× for 100× data,
     and the tiered read adds one more pruned directory tree)."""
-    import glob
-    import shutil
-    import time
-
     from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
-    watch = _scratch_dir("t22_in")
-    now = time.time()
+    store = _scratch_dir("t22_store")
+
+    def ingest(batch_df: DataFrame, bid: int) -> None:
+        ingest_vec_batch_txn(batch_df, store, bid, cents)
+        if bid == 1:
+            # Fold batches 0-1 into a generation MID-STREAM: the next
+            # probe (epoch 3) serves across the swap.
+            compact_store_txn(batch_df.sparkSession, store, 1)
 
     # Staged arrivals are byte-identical to t21's — share its
     # session-keyed stage (one staging pass serves both entries).
-    def _write_stage(stage: str) -> None:
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        grp = F.when(pfx.isin(*list(_T21_RANGES[0])), 0).when(
-            pfx.isin(*list(_T21_RANGES[1])), 1
-        ).otherwise(2)
-        vecs.withColumn("_g", grp).coalesce(1).write.mode(
-            "overwrite"
-        ).partitionBy("_g").parquet(os.path.join(stage, "ingest"))
-        vecs.filter(
-            F.col("vec_id") < _IVF_QUERIES
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, "probe")
-        )
-
-    stage = _session_stage(spark, sf_dir, "t21", _write_stage)
-    probe_part = glob.glob(
-        os.path.join(stage, "probe", "part-*.parquet")
-    )[0]
-
-    def _arrive(src: str, name: str, order: int) -> None:
-        dst = os.path.join(watch, f"{order:02d}_{name}.parquet")
-        shutil.copyfile(src, dst)
-        ts = now - 600 + 10 * order
-        os.utime(dst, (ts, ts))
-
-    for i in range(len(_T21_RANGES)):
-        _arrive(
-            _staged_file(os.path.join(stage, "ingest"), f"_g={i}", vecs),
-            f"i{i}", 2 * i,
-        )
-        _arrive(probe_part, f"p{i}", 2 * i + 1)
-
-    store = _scratch_dir("t22_store")
-    out_dir = _scratch_dir("t22_out")
-    shutil.rmtree(out_dir)
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id % 2 == 0:                      # ingest epoch
-            bid = epoch_id // 2
-            ingest_vec_batch_txn(batch_df, store, bid, cents)
-            if bid == 1:
-                # Fold batches 0-1 into a generation MID-STREAM: the
-                # next probe (epoch 3) serves across the swap.
-                compact_store_txn(batch_df.sparkSession, store, 1)
-        else:                                      # probe epoch
-            probe_tiered_topk(
-                batch_df, store, cents, _IVF_K
-            ).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-
-    ckpt = _scratch_dir("t22_ckpt")
-    q = (
-        spark.readStream.schema("vec_id long, v array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_progress("t22_stream_compact_while_serving", q)
-    for d in (ckpt, watch, store):
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
-        "probe_round", "q_id", "n_id", "sim"
+    return _serve_interleaved(
+        "t22_stream_compact_while_serving", sf_dir, vecs, "vec_id",
+        _IVF_QUERIES, "t21", store, ingest,
+        lambda b, _r: probe_tiered_topk(b, store, cents, _IVF_K),
+        ("probe_round", "q_id", "n_id", "sim"),
     )
 
 
@@ -2243,13 +2084,10 @@ def ann_serve_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_serve_during_ingest.py)."""
     from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store = _t21_session_store(spark, sf_dir, vecs, cents)
-    snd = F.substring(F.md5(F.col("vec_id").cast("string")), 2, 1)
+    snd = _md5_prefix("vec_id", 2)
     delete_vec_batch_txn(
         spark,
         vecs.filter(snd.isin("0", "1", "2", "3")).select("vec_id"),
@@ -2349,10 +2187,7 @@ def ann_probe_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     historical result is unchanged by later transactions."""
     from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store = _t21_session_store(spark, sf_dir, vecs, cents)
     assert read_serve_watermark(store) >= 2
@@ -2384,19 +2219,13 @@ def ann_probe_as_of_retained(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_retention.py."""
     from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store, built = _session_store_dir(spark, sf_dir, "t21tierret")
     if not built:
         set_store_retention(store, 10)
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_vec_batch_txn(
-                vecs.filter(pfx.isin(*list(chars))), store, i, cents
-            )
+        for i, batch in _md5_batches(vecs, "vec_id"):
+            ingest_vec_batch_txn(batch, store, i, cents)
             if i >= 1:
                 compact_store_txn(spark, store, i)
         _mark_store_built(spark, store)
@@ -2439,12 +2268,12 @@ def _retrain_sample(members: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _q_store_centroids(store: str) -> list:
+def _q_store_centroids(man: dict) -> list:
     """The centroid set probes and ingest route against, FROM THE
-    MANIFEST — the atomic swap covers (generation, centroids, wm)
-    together, so no reader can pair a new generation with old
-    centroids or vice versa."""
-    man = read_serve_manifest(store)
+    MANIFEST snapshot ``man`` — the atomic swap covers (generation,
+    centroids, wm) together, so a reader that takes the centroids and
+    the members from ONE snapshot can never pair a new generation with
+    old centroids or vice versa."""
     return [(int(c), [int(x) for x in q]) for c, q in man["centroids"]]
 
 
@@ -2470,7 +2299,9 @@ def ingest_q_batch_txn(
         "vec_id",
         "q",
         F.expr(
-            _argmin_centroid_sql(_q_store_centroids(store))
+            _argmin_centroid_sql(
+                _q_store_centroids(read_serve_manifest(store))
+            )
         ).alias("c_id"),
     )
     lsm.commit(
@@ -2484,15 +2315,16 @@ _Q_SCHEMA = "vec_id long, q array<bigint>, c_id bigint"
 
 
 def _q_visible_members(
-    spark: SparkSession, store: str, clusters: list | None = None
+    spark: SparkSession, store: str, man: dict,
+    clusters: list | None = None,
 ) -> DataFrame:
-    """Manifest-visible members of the integer store — generation ∪
-    tail, tombstone-folded, last-write-wins (lsm.visible), as
-    (vec_id, m_batch, q, c_id).  Retrain reads it whole; probes pass
-    ``clusters`` to prune both tiers to the probed partition
-    directories.  An empty store (born routable, nothing ingested)
-    reads as an empty frame, not a crash."""
-    man = read_serve_manifest(store)
+    """Members of the integer store visible in the caller's manifest
+    snapshot ``man`` — generation ∪ tail, tombstone-folded,
+    last-write-wins (lsm.visible), as (vec_id, m_batch, q, c_id).
+    Retrain reads it whole; probes pass ``clusters`` to prune both
+    tiers to the probed partition directories.  An empty store (born
+    routable, nothing ingested) reads as an empty frame, not a
+    crash."""
     return lsm.visible(
         spark, store, "data", _Q_SCHEMA, ("vec_id", "q", "c_id"),
         man, man["wm"],
@@ -2533,7 +2365,7 @@ def retrain_store_txn(
 
     man = read_serve_manifest(store)
     wm = man["wm"]
-    members = _q_visible_members(spark, store).select(
+    members = _q_visible_members(spark, store, man).select(
         "vec_id", "q", "m_batch"
     )
     # The sample PERSISTS for the trainer (guide §5): every Lloyd
@@ -2591,7 +2423,11 @@ def probe_q_topk(
     # in-plan row_number() ≤ nprobe), so the probe pays ONE tiny
     # collect instead of a crossJoin+window job plus the broadcast
     # subtree the action re-executed.
-    cents = _q_store_centroids(store)
+    # ONE manifest snapshot routes AND selects members, so a retrain
+    # publishing mid-probe cannot pair old centroids with the new
+    # generation's c_id layout.
+    man = read_serve_manifest(store)
+    cents = _q_store_centroids(man)
     qrows = [
         (int(r["vec_id"]), [int(x) for x in r["q"]])
         for r in _check_request_scale(
@@ -2610,7 +2446,9 @@ def probe_q_topk(
     q_probe = local_df(
         sess, probe_rows, "q_id long, c_id bigint, qq array<bigint>"
     )
-    members = _q_visible_members(sess, store, clusters=probed).select(
+    members = _q_visible_members(
+        sess, store, man, clusters=probed
+    ).select(
         F.col("vec_id").alias("n_id"),
         "c_id",
         F.col("q").alias("nq"),
@@ -2786,31 +2624,14 @@ def ivf_store_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         _IVF_QUERIES,
         _KM_NPROBE,
         _KM_ROUNDS,
-        _KM_SCALE,
     )
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs_q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(cast(embedding as array<double>),"
-            f" x -> cast(floor((x + 1.0D) * {_KM_SCALE}.0D) as bigint))"
-        ).alias("q"),
-    )
+    vecs_q = _pqc_vecs_q(spark, sf_dir)
     store, built = _session_store_dir(spark, sf_dir, "retrainq")
     if not built:
-        init_cents = sorted(
-            (int(r["vec_id"]), [int(x) for x in r["q"]])
-            for r in vecs_q.filter(
-                F.col("vec_id") < _IVF_CENTROIDS
-            ).collect()
-        )
-        init_q_store(store, init_cents)
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_q_batch_txn(
-                vecs_q.filter(pfx.isin(*list(chars))), store, i
-            )
+        init_q_store(store, _lowest_q_cents(vecs_q))
+        for i, batch in _md5_batches(vecs_q, "vec_id"):
+            ingest_q_batch_txn(batch, store, i)
         retrain_store_txn(spark, store, _IVF_CENTROIDS, _KM_ROUNDS)
         _mark_store_built(spark, store)
     return probe_q_topk(
@@ -3270,82 +3091,18 @@ def t23_stream_postings_serve(
     manifest is ONE tiny file per transaction — identical discipline,
     and identical code (publish_visibility), as the vector store, so
     the two can share a store (hybrid_serve_as_of)."""
-    import glob
-    import shutil
-    import time
-
     from kcidb_spark.queries.ranking import _BM25_K, _BM25_QUERIES
 
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
-    watch = _scratch_dir("t23_in")
-    now = time.time()
-
-    def _write_stage(stage: str) -> None:
-        pfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-        grp = F.when(pfx.isin(*list(_T21_RANGES[0])), 0).when(
-            pfx.isin(*list(_T21_RANGES[1])), 1
-        ).otherwise(2)
-        docs.withColumn("_g", grp).coalesce(1).write.mode(
-            "overwrite"
-        ).partitionBy("_g").parquet(os.path.join(stage, "ingest"))
-        docs.filter(
-            F.col("doc_id") < _BM25_QUERIES
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, "probe")
-        )
-
-    stage = _session_stage(spark, sf_dir, "t23", _write_stage)
-    probe_part = glob.glob(
-        os.path.join(stage, "probe", "part-*.parquet")
-    )[0]
-
-    def _arrive(src: str, name: str, order: int) -> None:
-        dst = os.path.join(watch, f"{order:02d}_{name}.parquet")
-        shutil.copyfile(src, dst)
-        ts = now - 600 + 10 * order
-        os.utime(dst, (ts, ts))
-
-    for i in range(len(_T21_RANGES)):
-        _arrive(
-            _staged_file(os.path.join(stage, "ingest"), f"_g={i}", docs),
-            f"i{i}", 2 * i,
-        )
-        _arrive(probe_part, f"p{i}", 2 * i + 1)
-
     store = _scratch_dir("t23_store")
-    out_dir = _scratch_dir("t23_out")
-    shutil.rmtree(out_dir)
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id % 2 == 0:                      # ingest epoch
-            ingest_postings_batch_txn(batch_df, store, epoch_id // 2)
-        else:                                      # probe epoch
-            probe_postings_bm25(
-                batch_df, store, _BM25_K
-            ).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-
-    ckpt = _scratch_dir("t23_ckpt")
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_progress("t23_stream_postings_serve", q)
-    for d in (ckpt, watch, store):
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
-        "probe_round", "q_id", "n_id", "score_micro", "rk"
+    return _serve_interleaved(
+        "t23_stream_postings_serve", sf_dir, docs, "doc_id",
+        _BM25_QUERIES, "t23", store,
+        lambda b, bid: ingest_postings_batch_txn(b, store, bid),
+        lambda b, _r: probe_postings_bm25(b, store, _BM25_K),
+        ("probe_round", "q_id", "n_id", "score_micro", "rk"),
     )
 
 
@@ -3503,20 +3260,14 @@ def _hybrid_session_store(spark: SparkSession, sf_dir: str) -> tuple:
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
-    vecs = table(spark, sf_dir, "embeddings", spread=True).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store, built = _session_store_dir(spark, sf_dir, "hybrid")
     if not built:
-        dpfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-        vpfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_hybrid_batch_txn(
-                docs.filter(dpfx.isin(*list(chars))),
-                vecs.filter(vpfx.isin(*list(chars))),
-                store, i, cents,
-            )
+        for (i, d), (_, v) in zip(
+            _md5_batches(docs, "doc_id"), _md5_batches(vecs, "vec_id")
+        ):
+            ingest_hybrid_batch_txn(d, v, store, i, cents)
         _mark_store_built(spark, store)
     return docs, vecs, cents, store
 
@@ -3827,12 +3578,9 @@ def bm25_serve_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store, built = _session_store_dir(spark, sf_dir, "pdel")
     if not built:
-        pfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_postings_batch_txn(
-                docs.filter(pfx.isin(*list(chars))), store, i
-            )
-        snd = F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)
+        for i, batch in _md5_batches(docs, "doc_id"):
+            ingest_postings_batch_txn(batch, store, i)
+        snd = _md5_prefix("doc_id", 2)
         delete_docs_batch_txn(
             spark,
             docs.filter(snd.isin("0", "1", "2", "3")).select("doc_id"),
@@ -4030,110 +3778,36 @@ def t24_stream_retrain_while_serving(
     manifest rename per transaction); the retrain epoch pays one
     visible-store scan + re-encode — the compaction cost class,
     in-stream here only so the read path crosses a live swap."""
-    import glob
-    import shutil
-    import time
-
     from kcidb_spark.queries.advanced import (
         _IVF_CENTROIDS,
         _IVF_K,
         _IVF_QUERIES,
         _KM_NPROBE,
         _KM_ROUNDS,
-        _KM_SCALE,
     )
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs_q = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(cast(embedding as array<double>),"
-            f" x -> cast(floor((x + 1.0D) * {_KM_SCALE}.0D) as bigint))"
-        ).alias("q"),
-    )
-    init_cents = sorted(
-        (int(r["vec_id"]), [int(x) for x in r["q"]])
-        for r in vecs_q.filter(F.col("vec_id") < _IVF_CENTROIDS).collect()
-    )
+    vecs_q = _pqc_vecs_q(spark, sf_dir)
+    store = _scratch_dir("t24_store")
+    init_q_store(store, _lowest_q_cents(vecs_q))
 
-    watch = _scratch_dir("t24_in")
-    now = time.time()
+    def ingest(batch_df: DataFrame, bid: int) -> None:
+        ingest_q_batch_txn(batch_df, store, bid)
+        if bid == 1:
+            retrain_store_txn(
+                batch_df.sparkSession, store, _IVF_CENTROIDS, _KM_ROUNDS
+            )
+
+    def probe(batch_df: DataFrame, rnd: int) -> DataFrame:
+        return probe_q_topk(
+            batch_df, store, _IVF_K, nprobe=_KM_NPROBE
+        ).withColumn("probe_round", F.lit(rnd).cast("long"))
 
     # The staged integer-grid arrivals are byte-identical to t26's —
     # one session stage serves both entries.
-    def _write_stage(stage: str) -> None:
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        grp = F.when(pfx.isin(*list(_T21_RANGES[0])), 0).when(
-            pfx.isin(*list(_T21_RANGES[1])), 1
-        ).otherwise(2)
-        vecs_q.withColumn("_g", grp).coalesce(1).write.mode(
-            "overwrite"
-        ).partitionBy("_g").parquet(os.path.join(stage, "ingest"))
-        vecs_q.filter(
-            F.col("vec_id") < _IVF_QUERIES
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, "probe")
-        )
-
-    stage = _session_stage(spark, sf_dir, "t24q", _write_stage)
-    probe_part = glob.glob(
-        os.path.join(stage, "probe", "part-*.parquet")
-    )[0]
-
-    def _arrive(src: str, name: str, order: int) -> None:
-        dst = os.path.join(watch, f"{order:02d}_{name}.parquet")
-        shutil.copyfile(src, dst)
-        ts = now - 600 + 10 * order
-        os.utime(dst, (ts, ts))
-
-    for i in range(len(_T21_RANGES)):
-        _arrive(
-            _staged_file(os.path.join(stage, "ingest"), f"_g={i}", vecs_q),
-            f"i{i}", 2 * i,
-        )
-        _arrive(probe_part, f"p{i}", 2 * i + 1)
-
-    store = _scratch_dir("t24_store")
-    init_q_store(store, init_cents)
-    out_dir = _scratch_dir("t24_out")
-    shutil.rmtree(out_dir)
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id % 2 == 0:                      # ingest epoch
-            bid = epoch_id // 2
-            ingest_q_batch_txn(batch_df, store, bid)
-            if bid == 1:
-                retrain_store_txn(
-                    batch_df.sparkSession, store,
-                    _IVF_CENTROIDS, _KM_ROUNDS,
-                )
-        else:                                      # probe epoch
-            probe_q_topk(
-                batch_df, store, _IVF_K, nprobe=_KM_NPROBE
-            ).withColumn(
-                "probe_round", F.lit(epoch_id // 2).cast("long")
-            ).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-
-    ckpt = _scratch_dir("t24_ckpt")
-    q = (
-        spark.readStream.schema("vec_id long, q array<bigint>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_progress("t24_stream_retrain_while_serving", q)
-    for d in (ckpt, watch, store):
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
-        "probe_round", "q_id", "n_id", "d2"
+    return _serve_interleaved(
+        "t24_stream_retrain_while_serving", sf_dir, vecs_q, "vec_id",
+        _IVF_QUERIES, "t24q", store, ingest, probe,
+        ("probe_round", "q_id", "n_id", "d2"),
     )
 
 
@@ -4332,96 +4006,34 @@ def t25_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings probe, t21's vector probe, the control-plane fusion);
     the manifest cost is unchanged — ONE rename per ingest epoch now
     covers two subtree families."""
-    import glob
-    import shutil
-    import time
-
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     both = docs.join(
         vecs.withColumnRenamed("vec_id", "doc_id"), on="doc_id"
     )
-
-    watch = _scratch_dir("t25_in")
-    now = time.time()
-
-    def _write_stage(stage: str) -> None:
-        pfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-        grp = F.when(pfx.isin(*list(_T21_RANGES[0])), 0).when(
-            pfx.isin(*list(_T21_RANGES[1])), 1
-        ).otherwise(2)
-        both.withColumn("_g", grp).coalesce(1).write.mode(
-            "overwrite"
-        ).partitionBy("_g").parquet(os.path.join(stage, "ingest"))
-        both.filter(
-            F.col("doc_id") < _HYB_QUERIES
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, "probe")
-        )
-
-    stage = _session_stage(spark, sf_dir, "t25", _write_stage)
-    probe_part = glob.glob(
-        os.path.join(stage, "probe", "part-*.parquet")
-    )[0]
-
-    def _arrive(src: str, name: str, order: int) -> None:
-        dst = os.path.join(watch, f"{order:02d}_{name}.parquet")
-        shutil.copyfile(src, dst)
-        ts = now - 600 + 10 * order
-        os.utime(dst, (ts, ts))
-
-    for i in range(len(_T21_RANGES)):
-        _arrive(
-            _staged_file(os.path.join(stage, "ingest"), f"_g={i}", both),
-            f"i{i}", 2 * i,
-        )
-        _arrive(probe_part, f"p{i}", 2 * i + 1)
-
     store = _scratch_dir("t25_store")
-    out_dir = _scratch_dir("t25_out")
-    shutil.rmtree(out_dir)
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        docs_b = batch_df.select("doc_id", "text")
-        vecs_b = batch_df.select(F.col("doc_id").alias("vec_id"), "v")
-        if epoch_id % 2 == 0:                      # ingest epoch
-            ingest_hybrid_batch_txn(
-                docs_b, vecs_b, store, epoch_id // 2, cents
-            )
-        else:                                      # probe epoch
-            _hybrid_topk(docs_b, vecs_b, store, cents).select(
-                F.lit(epoch_id // 2).cast("long").alias("probe_round"),
-                "q_id", "n_id", "r_lex", "r_sem", "rrf", "rk",
-            ).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-
-    ckpt = _scratch_dir("t25_ckpt")
-    q = (
-        spark.readStream.schema(
-            "doc_id long, text string, v array<double>"
+    def legs(batch_df: DataFrame) -> tuple:
+        return (
+            batch_df.select("doc_id", "text"),
+            batch_df.select(F.col("doc_id").alias("vec_id"), "v"),
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_progress("t25_stream_hybrid_serve", q)
-    for d in (ckpt, watch, store):
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
-        "probe_round", "q_id", "n_id", "r_lex", "r_sem", "rrf", "rk"
+
+    def probe(batch_df: DataFrame, rnd: int) -> DataFrame:
+        return _hybrid_topk(*legs(batch_df), store, cents).select(
+            F.lit(rnd).cast("long").alias("probe_round"),
+            "q_id", "n_id", "r_lex", "r_sem", "rrf", "rk",
+        )
+
+    return _serve_interleaved(
+        "t25_stream_hybrid_serve", sf_dir, both, "doc_id",
+        _HYB_QUERIES, "t25", store,
+        lambda b, bid: ingest_hybrid_batch_txn(*legs(b), store, bid, cents),
+        probe,
+        ("probe_round", "q_id", "n_id", "r_lex", "r_sem", "rrf", "rk"),
     )
 
 
@@ -5089,6 +4701,18 @@ def _pqc_vecs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lowest_q_cents(vecs_q: DataFrame) -> list:
+    """The integer stores' generation-0 routing table: the lowest
+    ``_IVF_CENTROIDS`` vectors of ``vecs_q`` (vec_id, q) as sorted
+    (c_id, q) — the init every trained entry starts from."""
+    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
+
+    return sorted(
+        (int(r["vec_id"]), [int(x) for x in r["q"]])
+        for r in vecs_q.filter(F.col("vec_id") < _IVF_CENTROIDS).collect()
+    )
+
+
 def _pqc_static_model(
     spark: SparkSession, vecs_q: DataFrame
 ) -> tuple[list, list]:
@@ -5098,16 +4722,12 @@ def _pqc_static_model(
     testable on the store."""
     from kcidb_spark.operators.ivf import subvectors
     from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
         _PQK_CODES,
         _PQK_SUBDIM,
         _PQK_SUBS,
     )
 
-    cents = sorted(
-        (int(r["vec_id"]), [int(x) for x in r["q"]])
-        for r in vecs_q.filter(F.col("vec_id") < _IVF_CENTROIDS).collect()
-    )
+    cents = _lowest_q_cents(vecs_q)
     books = sorted(
         (int(r["s"]), int(r["id"]), [int(x) for x in r["q"]])
         for r in subvectors(
@@ -5174,11 +4794,8 @@ def _pqc_build_store(
     if not built:
         cents, books = _pqc_static_model(spark, vecs_q)
         init_pq_store(store, cents, books, _PQK_SUBS, _PQK_SUBDIM)
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_pq_batch_txn(
-                vecs_q.filter(pfx.isin(*list(chars))), store, i
-            )
+        for i, batch in _md5_batches(vecs_q, "vec_id"):
+            ingest_pq_batch_txn(batch, store, i)
         if retrain:
             retrain_pq_store_txn(
                 spark, store, _IVF_CENTROIDS, _PQK_CODES, _KM_ROUNDS
@@ -5354,10 +4971,6 @@ def t26_stream_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed-cluster CODES (n_subs BIGINTs per candidate).  At 100 TB
     ingest and probe run as separate streams against the same
     manifest (SCALE.md's split-stream rehearsal)."""
-    import glob
-    import shutil
-    import time
-
     from kcidb_spark.queries.advanced import (
         _IVF_K,
         _IVF_QUERIES,
@@ -5367,78 +4980,17 @@ def t26_stream_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     vecs_q = _pqc_vecs_q(spark, sf_dir)
-    watch = _scratch_dir("t26_in")
-    now = time.time()
-
-    # Byte-identical staged content to t24's — share its session
-    # stage (the integer-grid corpus + query workload).
-    def _write_stage(stage: str) -> None:
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        grp = F.when(pfx.isin(*list(_T21_RANGES[0])), 0).when(
-            pfx.isin(*list(_T21_RANGES[1])), 1
-        ).otherwise(2)
-        vecs_q.withColumn("_g", grp).coalesce(1).write.mode(
-            "overwrite"
-        ).partitionBy("_g").parquet(os.path.join(stage, "ingest"))
-        vecs_q.filter(
-            F.col("vec_id") < _IVF_QUERIES
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, "probe")
-        )
-
-    stage = _session_stage(spark, sf_dir, "t24q", _write_stage)
-    probe_part = glob.glob(
-        os.path.join(stage, "probe", "part-*.parquet")
-    )[0]
-
-    def _arrive(src: str, name: str, order: int) -> None:
-        dst = os.path.join(watch, f"{order:02d}_{name}.parquet")
-        shutil.copyfile(src, dst)
-        ts = now - 600 + 10 * order
-        os.utime(dst, (ts, ts))
-
-    for i in range(len(_T21_RANGES)):
-        _arrive(
-            _staged_file(os.path.join(stage, "ingest"), f"_g={i}",
-                         vecs_q),
-            f"i{i}", 2 * i,
-        )
-        _arrive(probe_part, f"p{i}", 2 * i + 1)
-
     store = _scratch_dir("t26_store")
     cents, books = _pqc_static_model(spark, vecs_q)
     init_pq_store(store, cents, books, _PQK_SUBS, _PQK_SUBDIM)
-    out_dir = _scratch_dir("t26_out")
-    shutil.rmtree(out_dir)
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id % 2 == 0:                      # ingest epoch
-            ingest_pq_batch_txn(batch_df, store, epoch_id // 2)
-        else:                                      # probe epoch
-            probe_pq_topk(
-                batch_df, store, _IVF_K, nprobe=_KM_NPROBE
-            ).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-
-    ckpt = _scratch_dir("t26_ckpt")
-    q = (
-        spark.readStream.schema("vec_id long, q array<bigint>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(watch)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_progress("t26_stream_pq_serve", q)
-    for d in (ckpt, watch, store):
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(out_dir).select(
-        "probe_round", "q_id", "n_id", "adc_micro", "rk"
+    # Byte-identical staged content to t24's — share its session
+    # stage (the integer-grid corpus + query workload).
+    return _serve_interleaved(
+        "t26_stream_pq_serve", sf_dir, vecs_q, "vec_id",
+        _IVF_QUERIES, "t24q", store,
+        lambda b, bid: ingest_pq_batch_txn(b, store, bid),
+        lambda b, _r: probe_pq_topk(b, store, _IVF_K, nprobe=_KM_NPROBE),
+        ("probe_round", "q_id", "n_id", "adc_micro", "rk"),
     )
 
 
@@ -5538,11 +5090,8 @@ def postings_rebucket_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     store, built = _session_store_dir(spark, sf_dir, "prebucket")
     if not built:
-        pfx = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_postings_batch_txn(
-                docs.filter(pfx.isin(*list(chars))), store, i
-            )
+        for i, batch in _md5_batches(docs, "doc_id"):
+            ingest_postings_batch_txn(batch, store, i)
         rebucket_postings_txn(spark, store, _PB * 2)
         _mark_store_built(spark, store)
     assert read_serve_manifest(store)["pb"] == _PB * 2
@@ -5746,7 +5295,7 @@ def hybrid_serve_with_deletes(
     their own oracles in one session.  The delete transaction replays
     idempotently on every invocation (overwrite + monotone publish)."""
     docs, vecs, cents, store = _hybrid_session_store(spark, sf_dir)
-    snd = F.substring(F.md5(F.col("doc_id").cast("string")), 2, 1)
+    snd = _md5_prefix("doc_id", 2)
     delete_hybrid_batch_txn(
         spark,
         docs.filter(snd.isin("0", "1", "2", "3")).select("doc_id"),
@@ -5870,7 +5419,7 @@ def ivfpq_store_serve_with_deletes(
 
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store = _pqc_build_store(spark, sf_dir, "pqdeletes", retrain=False)
-    snd = F.substring(F.md5(F.col("vec_id").cast("string")), 2, 1)
+    snd = _md5_prefix("vec_id", 2)
     delete_vec_batch_txn(
         spark,
         vecs_q.filter(snd.isin("0", "1", "2", "3")).select("vec_id"),
@@ -5911,52 +5460,28 @@ def opq_store_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrain-swap invariance.  Training runs once per session on the
     bounded sample (the FAISS posture); the store build is
     session-keyed like every serving entry."""
-    from kcidb_spark.operators.ivf import subvectors
     from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
         _IVF_K,
         _IVF_QUERIES,
         _KM_NPROBE,
         _opq_trained,
-        _PQK_CODES,
         _PQK_SUBDIM,
         _PQK_SUBS,
     )
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.expr("cast(embedding as array<double>)").alias("x")
-    )
+    vecs = _float_vecs(spark, sf_dir).withColumnRenamed("v", "x")
     store, built = _session_store_dir(spark, sf_dir, "opqserve")
     if not built:
         rot, _books_f, _hist = _opq_trained(
             spark, sf_dir,
             vecs.select(F.col("vec_id").alias("id"), "x"),
         )
-        vq = _opq_quantize(vecs, rot)
-        cents = sorted(
-            (int(r["vec_id"]), [int(v) for v in r["q"]])
-            for r in vq.filter(
-                F.col("vec_id") < _IVF_CENTROIDS
-            ).collect()
-        )
-        books = sorted(
-            (int(r["s"]), int(r["id"]), [int(v) for v in r["q"]])
-            for r in subvectors(
-                vq.filter(F.col("vec_id") < _PQK_CODES).select(
-                    F.col("vec_id").alias("id"), "q"
-                ),
-                ("id",), "q", _PQK_SUBS, _PQK_SUBDIM,
-            ).collect()
-        )
+        cents, books = _pqc_static_model(spark, _opq_quantize(vecs, rot))
         init_pq_store(
             store, cents, books, _PQK_SUBS, _PQK_SUBDIM, rot=rot
         )
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_pq_batch_txn(
-                vecs.filter(pfx.isin(*list(chars))), store, i
-            )
+        for i, batch in _md5_batches(vecs, "vec_id"):
+            ingest_pq_batch_txn(batch, store, i)
         _mark_store_built(spark, store)
     return probe_pq_topk(
         vecs.filter(F.col("vec_id") < _IVF_QUERIES),
@@ -5997,10 +5522,7 @@ def opq_store_serve_fixed_rotation(
         _PQK_SUBS,
     )
 
-    emb = table(spark, sf_dir, "embeddings", spread=True)
-    vecs = emb.select(
-        "vec_id", F.expr("cast(embedding as array<double>)").alias("x")
-    )
+    vecs = _float_vecs(spark, sf_dir).withColumnRenamed("v", "x")
     store, built = _session_store_dir(spark, sf_dir, "opqfixed")
     if not built:
         rot = givens_rotation(_PQK_SUBS * _PQK_SUBDIM)
@@ -6009,11 +5531,8 @@ def opq_store_serve_fixed_rotation(
         init_pq_store(
             store, cents, books, _PQK_SUBS, _PQK_SUBDIM, rot=rot
         )
-        pfx = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
-        for i, chars in enumerate(_T21_RANGES):
-            ingest_pq_batch_txn(
-                vecs.filter(pfx.isin(*list(chars))), store, i
-            )
+        for i, batch in _md5_batches(vecs, "vec_id"):
+            ingest_pq_batch_txn(batch, store, i)
         _mark_store_built(spark, store)
     return probe_pq_topk(
         vecs.filter(F.col("vec_id") < _IVF_QUERIES),
@@ -6048,7 +5567,7 @@ def ivfpq_store_compact_serve(
 
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store = _pqc_build_store(spark, sf_dir, "pqcompact", retrain=False)
-    snd = F.substring(F.md5(F.col("vec_id").cast("string")), 2, 1)
+    snd = _md5_prefix("vec_id", 2)
     delete_vec_batch_txn(
         spark,
         vecs_q.filter(snd.isin("0", "1", "2", "3")).select("vec_id"),

@@ -149,6 +149,11 @@ def sessionize_stateful(
     horizontally with keys.  Sessions close when a new event arrives
     more than ``gap_minutes`` after the last one, or when the key goes
     idle for ``timeout_ms`` of processing time.
+
+    Drain a bounded input with ``trigger(once=True)``, not
+    ``availableNow``: under a processing-time timeout an
+    ``availableNow`` query keeps scheduling no-data batches (to fire
+    the timeouts) and never terminates.
     """
     ensure_package_shipped(events.sparkSession)
     return events.groupBy("user_id").applyInPandasWithState(

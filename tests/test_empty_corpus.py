@@ -45,6 +45,35 @@ def test_every_query_survives_empty_corpus(spark, empty_sf):
         finally:
             release_persisted()
     assert not failures, "\n".join(failures)
+    _assert_drains_recorded()
+
+
+def _assert_drains_recorded():
+    """Every stream entry's drain recorded its progress under its
+    registry name; the file-fed drains ran one micro-batch per staged
+    arrival file, even when every file is empty."""
+    from kcidb_spark.queries.advanced import _IVF_QUERIES
+    from kcidb_spark.queries.streaming_exec import LAST_PROGRESS
+
+    stateful = (
+        "t11_stream_tumbling", "t12_stream_dedup",
+        "t13_stream_stream_join", "t14_stream_dedup_watermarked",
+        "t15_stream_status_transitions", "t16_stream_outer_join",
+        "t18_stream_join_rocksdb",
+    )
+    batches = {
+        "t17_stream_incremental_dedup": 4,
+        "t19_stream_ann_probe": _IVF_QUERIES,
+        "t20_stream_ivf_ingest": 4,
+        "t21_stream_serve_during_ingest": 6,
+        "t22_stream_compact_while_serving": 6,
+        "t23_stream_postings_serve": 6,
+        "t24_stream_retrain_while_serving": 6,
+        "t25_stream_hybrid_serve": 6,
+        "t26_stream_pq_serve": 6,
+    }
+    assert all(LAST_PROGRESS.get(n) for n in stateful), sorted(LAST_PROGRESS)
+    assert {n: len(LAST_PROGRESS.get(n, ())) for n in batches} == batches
 
 
 def test_empty_corpus_schema_matches_declaration(spark, empty_sf):

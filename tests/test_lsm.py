@@ -320,11 +320,10 @@ def test_fold_replay_at_the_same_upto_is_idempotent(spark, tmp_path, kind):
 # ---------------------------------------------------------------------------
 
 #: Functions outside the serving store that write their own batch
-#: subtrees: the t17 dedup store and the t20 stream's inverted file
-#: (no manifest, read back whole).
+#: subtrees: the t17 dedup store (no manifest, read back whole).
 _NOT_SERVING = {
     "ingest_dedup_batch", "ingest_dedup_batch_txn",
-    "t17_stream_incremental_dedup", "t20_stream_ivf_ingest",
+    "t17_stream_incremental_dedup",
 }
 
 
@@ -381,3 +380,36 @@ def test_store_writes_and_publishes_go_through_lsm():
                 if s in ("tombstones", "ptombstones") or "batch_id=" in s:
                     bad.append(f"{rel}: {fn.name} formats {s!r}")
     assert bad == []
+
+
+#: streaming_exec's drain harness: the only functions that start or
+#: await a stream (``_drain``) or set arrival-file mtimes
+#: (``_stage_arrivals``).
+_DRAIN_CALLS = {
+    "_drain": {"start", "awaitTermination"},
+    "_stage_arrivals": {"utime"},
+}
+
+
+def test_streams_drain_only_through_the_harness():
+    import ast
+
+    from kcidb_spark.queries import streaming_exec
+
+    with open(streaming_exec.__file__) as fh:
+        tree = ast.parse(fh.read())
+    watched = set().union(*_DRAIN_CALLS.values())
+    found, bad = {}, []
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in watched):
+                continue
+            name = getattr(fn, "name", None)
+            if node.func.attr in _DRAIN_CALLS.get(name, ()):
+                found.setdefault(name, set()).add(node.func.attr)
+            else:
+                bad.append(f"{name}:{node.lineno}: .{node.func.attr}()")
+    assert bad == []
+    assert found == _DRAIN_CALLS

@@ -277,3 +277,26 @@ def test_gc_reclaims_superseded_retrain_generations(spark, tmp_path):
     assert _os.path.isdir(_os.path.join(store, "gen_retrain_2"))
     assert _probe(spark, store, k=10) == before
     assert serve_store_gc(store) == []
+
+
+def test_probe_reads_one_manifest_snapshot(spark, tmp_path, monkeypatch):
+    """Centroids and members come from ONE manifest read, so a retrain
+    publishing mid-probe cannot pair the old routing table with the
+    new generation's c_id layout."""
+    from kcidb_spark.queries import streaming_exec as se
+    from kcidb_spark.serve import lsm
+
+    store = str(tmp_path / "store")
+    _build(spark, store)
+    retrain_store_txn(spark, store, 2, 2)
+    reads = []
+    real = lsm.read_serve_manifest
+
+    def counting(path):
+        reads.append(path)
+        return real(path)
+
+    monkeypatch.setattr(se, "read_serve_manifest", counting)
+    monkeypatch.setattr(lsm, "read_serve_manifest", counting)
+    rows = _probe(spark, store)
+    assert rows and len(reads) == 1

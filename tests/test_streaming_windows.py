@@ -73,16 +73,22 @@ def test_sessionize_stateful(spark, tmp_path):
     indir = tmp_path / "ev2"
     _write_events(indir, EVENTS)
     stream = spark.readStream.schema(SCHEMA).json(str(indir))
+    # trigger(once=True), not availableNow: with a processing-time
+    # timeout the availableNow query keeps running no-data batches
+    # and never terminates (see sessionize_stateful).
     q = (
         sessionize_stateful(stream, gap_minutes=30, timeout_ms=2000)
         .writeStream.format("memory")
         .queryName("sessions")
         .outputMode("append")
-        .trigger(availableNow=True)
+        .trigger(once=True)
         .option("checkpointLocation", str(tmp_path / "ckpt2"))
         .start()
     )
-    q.awaitTermination(180)
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
     rows = spark.sql("SELECT * FROM sessions ORDER BY user_id, session_start").collect()
     # Sessions closed by a later-than-gap event are always emitted;
     # still-open sessions may ALSO flush via the idle timeout before
@@ -102,6 +108,7 @@ def test_sessionize_stateful(spark, tmp_path):
     assert s2["event_types"] == ["error"]
     # No duplicated session rows for the same (user, start).
     assert len(sessions) == len(rows)
+    assert all(a.id != q.id for a in spark.streams.active)
 
 
 def test_outer_join_early_drain_under_emits(spark):

@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Phase-level profiler for the streaming serve entries.
 
-Wraps DataStreamWriter.foreachBatch to time each epoch, and the store
-verbs (ingest/probe/publish) to attribute epoch wall to phases.
+Wraps DataStreamWriter.foreachBatch to time each epoch, the store
+verbs (ingest/probe/publish) to attribute epoch wall to phases, and
+the drain harness (staging, arrivals, the whole drain) to show what
+the stream costs outside its epochs.
 Read-only: monkeypatches wrappers around unchanged functions.
 
 Usage: python tools/profile_streaming.py t25_stream_hybrid_serve ...
@@ -69,11 +71,14 @@ def main() -> None:
         "retrain_pq_store_txn",
         "compact_store_txn",
         "retrain_store_txn",
-        "_session_stage",
         "_tok_tf_len",
+        # The drain harness: staging, arrival copies, the whole drain.
+        "_session_stage",
+        "_stage_arrivals",
+        "_drain",
+        "_serve_interleaved",
     ):
-        if hasattr(se, fname):
-            _wrap(se, fname)
+        _wrap(se, fname)  # a renamed function fails here, loudly
 
     from kcidb_spark.cache import release_persisted
     from kcidb_spark.queries import REGISTRY
