@@ -43,3 +43,27 @@ def release_persisted() -> int:
         except Exception:  # noqa: BLE001 — session may be gone
             pass
     return n
+
+
+#: Same-application entries a persisted-frame cache keeps.
+_SESSION_FRAMES_MAX = 2
+
+
+def evict_session_frames(cache: dict, app: str) -> None:
+    """Make room in a session-keyed cache of PERSISTED frames (keys
+    start with the applicationId) before an insert: drop every entry
+    of another application, then the oldest-inserted entries of
+    ``app`` until fewer than _SESSION_FRAMES_MAX remain.  Every
+    dropped frame is unpersisted — each pins executor storage, so a
+    long-lived driver would otherwise keep one frame per key it ever
+    served."""
+    def drop(key) -> None:
+        try:
+            cache.pop(key).unpersist()
+        except Exception:  # noqa: BLE001 — its session may be gone
+            pass
+
+    for key in [k for k in cache if k[0] != app]:
+        drop(key)
+    while len(cache) >= _SESSION_FRAMES_MAX:
+        drop(next(iter(cache)))

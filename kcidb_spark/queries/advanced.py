@@ -26,6 +26,32 @@ from pyspark.sql import functions as F
 from kcidb_spark.localrel import local_df
 from kcidb_spark.cache import scoped_persist
 from kcidb_spark.queries._exact import oracle_int_sum
+from kcidb_spark.queries.oracle_sql import (
+    _IVF_CENTROIDS,
+    _IVF_K,
+    _IVF_QUERIES,
+    _KM_NPROBE,
+    _KM_ROUNDS,
+    _KM_SCALE,
+    _PQK_CODES,
+    _PQK_ROUNDS,
+    _PQK_SUBDIM,
+    _PQK_SUBS,
+    adc_topk,
+    argmin_cte,
+    cosine,
+    grid_v_cte,
+    ivf_probe_oracle,
+    km_coarse_ctes,
+    km_topk_oracle,
+    l2_cte,
+    lloyd_ctes,
+    pq_model_ctes,
+    ranked,
+    sub_cte,
+    with_,
+)
+from kcidb_spark.queries.pipeline import _NORM_SQL
 from kcidb_spark.queries.registry import register
 from kcidb_spark.tables import table
 
@@ -329,15 +355,10 @@ def _emb_cos_oracle() -> str:
             SELECT vec_id, v, CAST({bucket} AS BIGINT) AS bucket
             FROM vecs CROSS JOIN np
         )
-        SELECT l.vec_id AS a, r.vec_id AS b,
-               round(list_dot_product(l.v, r.v)
-                     / (sqrt(list_dot_product(l.v, l.v))
-                        * sqrt(list_dot_product(r.v, r.v))), 4) AS sim
+        SELECT l.vec_id AS a, r.vec_id AS b, {cosine('l.v', 'r.v')} AS sim
         FROM b l
         JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id
-        WHERE round(list_dot_product(l.v, r.v)
-                    / (sqrt(list_dot_product(l.v, l.v))
-                       * sqrt(list_dot_product(r.v, r.v))), 4) >= {_COS_THRESH}
+        WHERE {cosine('l.v', 'r.v')} >= {_COS_THRESH}
     """)
 
 
@@ -438,105 +459,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-style ANN: coarse quantize to centroids, search within cluster
 # ---------------------------------------------------------------------------
 
-_IVF_CENTROIDS = 8
-_IVF_QUERIES = 5
-_IVF_K = 3
-
-
-def _ivf_oracle() -> str:
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v
-            FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY round(list_dot_product(v, cv)
-                                    / (sqrt(list_dot_product(v, v))
-                                       * sqrt(list_dot_product(cv, cv))), 4) DESC,
-                                    cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            )
-            WHERE rn = 1
-        )
-        SELECT q_id, n_id, sim
-        FROM (
-            SELECT q.vec_id AS q_id, m.vec_id AS n_id,
-                   round(list_dot_product(q.v, m.v)
-                         / (sqrt(list_dot_product(q.v, q.v))
-                            * sqrt(list_dot_product(m.v, m.v))), 4) AS sim,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY round(list_dot_product(q.v, m.v)
-                                / (sqrt(list_dot_product(q.v, q.v))
-                                   * sqrt(list_dot_product(m.v, m.v))), 4) DESC,
-                                m.vec_id
-                   ) AS rn
-            FROM assign q
-            JOIN assign m ON m.c_id = q.c_id AND m.vec_id <> q.vec_id
-            WHERE q.vec_id < {_IVF_QUERIES}
-        )
-        WHERE rn <= {_IVF_K}
-    """)
-
-
-def _ivf_nprobe_oracle(nprobe: int) -> str:
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    cos_v_cv = cos.format(a="v", b="cv")
-    cos_qv_nv = cos.format(a="p.qv", b="m.v")
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id, v AS qv FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= {nprobe}
-        )
-        SELECT q_id, n_id, sim FROM (
-            SELECT p.q_id, m.vec_id AS n_id, {cos_qv_nv} AS sim,
-                   row_number() OVER (
-                       PARTITION BY p.q_id
-                       ORDER BY {cos_qv_nv} DESC, m.vec_id
-                   ) AS rn
-            FROM probes p
-            JOIN assign m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-        ) WHERE rn <= {_IVF_K}
-    """)
-
-
-@register("ann_ivf_topk", oracle=_ivf_oracle(), tags=("similarity", "ivf"))
+@register(
+    "ann_ivf_topk", oracle=ivf_probe_oracle(1), tags=("similarity", "ivf")
+)
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style approximate nearest neighbor: coarse-quantize every
     vector to its nearest centroid (tiny centroid set → broadcast
@@ -564,7 +489,7 @@ _IVF_NPROBE = 4
 
 @register(
     "ann_ivf_nprobe_topk",
-    oracle=_ivf_nprobe_oracle(_IVF_NPROBE),
+    oracle=ivf_probe_oracle(_IVF_NPROBE),
     tags=("similarity", "ivf"),
 )
 def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -586,60 +511,11 @@ def ann_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_filtered_oracle() -> str:
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    cos_v_cv = cos.format(a="v", b="cv")
-    cos_qv_nv = cos.format(a="p.qv", b="m.v")
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label
-            FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v, label FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v, vecs.label,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id, v AS qv, label FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v, vecs.label,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= {_IVF_NPROBE}
-        )
-        SELECT q_id, n_id, sim FROM (
-            SELECT p.q_id, m.vec_id AS n_id, {cos_qv_nv} AS sim,
-                   row_number() OVER (
-                       PARTITION BY p.q_id
-                       ORDER BY {cos_qv_nv} DESC, m.vec_id
-                   ) AS rn
-            FROM probes p
-            JOIN assign m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-                         AND m.label = p.label
-        ) WHERE rn <= {_IVF_K}
-    """)
-
-
 @register(
     "ann_filtered_topk",
-    oracle=_ivf_filtered_oracle(),
+    oracle=ivf_probe_oracle(
+        _IVF_NPROBE, "m.label = p.label", cols={"label": "label"}
+    ),
     tags=("similarity", "ivf"),
 )
 def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -773,7 +649,7 @@ def _ivf_session_store(spark: SparkSession, sf_dir: str):
 
 @register(
     "ann_ivf_stored_probe",
-    oracle=_ivf_nprobe_oracle(_IVF_NPROBE),
+    oracle=ivf_probe_oracle(_IVF_NPROBE),
     tags=("similarity", "ivf", "index", "layout"),
 )
 def ann_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -835,120 +711,6 @@ def ann_ivf_stored_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- k-means-trained IVF: the composed train → index → probe path ---
 
-#: Fixed Lloyd round count — unrolled verbatim in the oracle's CTEs.
-_KM_ROUNDS = 3
-#: Integer quantization: x → floor((x + 1) · 2^20); the +1 offset
-#: keeps every coordinate positive so the integer-mean truncation is
-#: sign-free, and L2 argmins are translation-invariant.
-_KM_SCALE = 1 << 20
-_KM_NPROBE = 2
-
-
-def _km_coarse_parts(v_cte: str | None = None) -> list[str]:
-    """Shared oracle prefix replaying the SAME {_KM_ROUNDS} coarse
-    Lloyd rounds: long-form (vec, pos, x) joins compute the BIGINT
-    squared distances, ``//`` the integer centroid means — every
-    intermediate is integer-exact, so the trained centroids (and
-    therefore assignments/probes) match Spark bit-for-bit.  Ends at
-    the ``afin`` (corpus assignment) and ``probes`` (per-query
-    top-nprobe clusters) CTEs; ann_ivf_kmeans_topk appends exact
-    rescoring, ivf_pq_kmeans_adc_topk appends the trained-codebook
-    ADC chain.  ``v_cte`` overrides the quantized-vector CTE chain
-    (must end defining ``v(vec_id, q array<bigint>)``) — the rotated
-    variant injects its Givens layers here."""
-    default_v = dedent(f"""
-        WITH v AS (
-            SELECT vec_id,
-                   list_transform(CAST(embedding AS DOUBLE[]),
-                                  x -> CAST(floor((x + 1.0) * {_KM_SCALE})
-                                            AS BIGINT)) AS q
-            FROM embeddings
-        ),""")
-    parts = [(v_cte if v_cte is not None else default_v) + dedent(f"""
-        vx AS (
-            SELECT vec_id,
-                   unnest(generate_series(1, length(q))) AS pos,
-                   unnest(q) AS x
-            FROM v
-        ),
-        c0 AS (
-            SELECT vec_id AS c_id, pos, x FROM vx
-            WHERE vec_id < {_IVF_CENTROIDS}
-        )""")]
-    for r in range(1, _KM_ROUNDS + 1):
-        parts.append(dedent(f""",
-        d{r} AS (
-            SELECT vx.vec_id, c.c_id,
-                   CAST(sum((vx.x - c.x) * (vx.x - c.x)) AS BIGINT) AS d2
-            FROM vx JOIN c{r - 1} c ON vx.pos = c.pos
-            GROUP BY vx.vec_id, c.c_id
-        ),
-        a{r} AS (
-            SELECT vec_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM d{r}
-            ) WHERE rn = 1
-        ),
-        c{r} AS (
-            SELECT a.c_id, vx.pos,
-                   CAST(sum(vx.x) // count(*) AS BIGINT) AS x
-            FROM a{r} a JOIN vx ON a.vec_id = vx.vec_id
-            GROUP BY a.c_id, vx.pos
-        )"""))
-    parts.append(dedent(f""",
-        dfin AS (
-            SELECT vx.vec_id, c.c_id,
-                   CAST(sum((vx.x - c.x) * (vx.x - c.x)) AS BIGINT) AS d2
-            FROM vx JOIN c{_KM_ROUNDS} c ON vx.pos = c.pos
-            GROUP BY vx.vec_id, c.c_id
-        ),
-        afin AS (
-            SELECT vec_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM dfin
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM dfin WHERE vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= {_KM_NPROBE}
-        )"""))
-    return parts
-
-
-def _ivf_kmeans_oracle() -> str:
-    parts = _km_coarse_parts()
-    parts.append(dedent(f""",
-        cand AS (
-            SELECT p.q_id, m.vec_id AS n_id
-            FROM probes p
-            JOIN afin m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-        ),
-        scoredk AS (
-            SELECT c.q_id, c.n_id,
-                   CAST(sum((qx.x - nx.x) * (qx.x - nx.x)) AS BIGINT) AS d2
-            FROM cand c
-            JOIN vx qx ON qx.vec_id = c.q_id
-            JOIN vx nx ON nx.vec_id = c.n_id AND nx.pos = qx.pos
-            GROUP BY c.q_id, c.n_id
-        )
-        SELECT q_id, n_id, d2 FROM (
-            SELECT q_id, n_id, d2,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY d2, n_id) AS rn
-            FROM scoredk
-        ) WHERE rn <= {_IVF_K}
-    """))
-    return "".join(parts)
-
-
 #: Session-keyed trained-centroid cache — (applicationId,
 #: realpath(sf_dir), k, rounds) → the driver-held centroid list.
 #: VERDICT r10 "Next round" #2: ann_ivf_kmeans_topk,
@@ -983,7 +745,7 @@ def _coarse_centroids_trained(
 
 @register(
     "ann_ivf_kmeans_topk",
-    oracle=_ivf_kmeans_oracle(),
+    oracle=km_topk_oracle(),
     tags=("similarity", "ivf", "clustering"),
 )
 def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,16 +786,6 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- trained IVF-PQ: k-means coarse quantizer + k-means codebooks ---
-
-#: Product-quantization geometry for the TRAINED path: 64-dim vectors
-#: → 8 subspaces × 8 dims, 8 codewords per subspace, 2 Lloyd rounds
-#: per subspace (unrolled verbatim in the oracle; the production dial
-#: is 256 codewords × ~25 rounds — the construction is round-count
-#: agnostic).
-_PQK_SUBS = 8
-_PQK_SUBDIM = 8
-_PQK_CODES = 8
-_PQK_ROUNDS = 2
 
 #: Train-once session cache for the per-subspace codebooks — the
 #: _KM_CENTROIDS_CACHE rationale one level down: each trained-PQ entry
@@ -1085,87 +837,15 @@ def _pqk_model_trained(
     return cents, _PQK_BOOKS_CACHE[bkey]
 
 
-def _ivf_pq_kmeans_oracle(v_cte: str | None = None) -> str:
-    """The full trained IVF-PQ pipeline in one replay: the shared
-    coarse-Lloyd prefix (afin/probes), then per-subspace codebook
-    Lloyd ({_PQK_ROUNDS} rounds, grouped by subspace s), corpus
-    encoding, per-query ADC distance tables over the TRAINED books,
-    and the probed-cluster ADC top-k.  ``v_cte`` passes through to
-    :func:`_km_coarse_parts` (the rotated variant's hook)."""
-    parts = _km_coarse_parts(v_cte)
-    parts.append(dedent(f""",
-        sx AS (
-            SELECT vec_id,
-                   CAST((pos - 1) // {_PQK_SUBDIM} AS BIGINT) AS s,
-                   CAST((pos - 1) % {_PQK_SUBDIM} + 1 AS BIGINT) AS spos,
-                   x
-            FROM vx
-        ),
-        b0 AS (
-            SELECT s, vec_id AS m, spos, x FROM sx
-            WHERE vec_id < {_PQK_CODES}
-        )"""))
-    for r in range(1, _PQK_ROUNDS + 1):
-        parts.append(dedent(f""",
-        pe{r} AS (
-            SELECT sx.vec_id, sx.s, b.m,
-                   CAST(sum((sx.x - b.x) * (sx.x - b.x)) AS BIGINT) AS d2
-            FROM sx JOIN b{r - 1} b ON sx.s = b.s AND sx.spos = b.spos
-            GROUP BY sx.vec_id, sx.s, b.m
-        ),
-        pa{r} AS (
-            SELECT vec_id, s, m FROM (
-                SELECT vec_id, s, m,
-                       row_number() OVER (PARTITION BY vec_id, s
-                                          ORDER BY d2, m) AS rn
-                FROM pe{r}
-            ) WHERE rn = 1
-        ),
-        b{r} AS (
-            SELECT a.s, a.m, sx.spos,
-                   CAST(sum(sx.x) // count(*) AS BIGINT) AS x
-            FROM pa{r} a
-            JOIN sx ON a.vec_id = sx.vec_id AND a.s = sx.s
-            GROUP BY a.s, a.m, sx.spos
-        )"""))
-    parts.append(dedent(f""",
-        pefin AS (
-            SELECT sx.vec_id, sx.s, b.m,
-                   CAST(sum((sx.x - b.x) * (sx.x - b.x)) AS BIGINT) AS d2
-            FROM sx JOIN b{_PQK_ROUNDS} b
-              ON sx.s = b.s AND sx.spos = b.spos
-            GROUP BY sx.vec_id, sx.s, b.m
-        ),
-        codes AS (
-            SELECT vec_id, s, m FROM (
-                SELECT vec_id, s, m,
-                       row_number() OVER (PARTITION BY vec_id, s
-                                          ORDER BY d2, m) AS rn
-                FROM pefin
-            ) WHERE rn = 1
-        ),
-        dt AS (
-            SELECT vec_id AS q_id, s, m, d2 AS d FROM pefin
-            WHERE vec_id < {_IVF_QUERIES}
-        ),
-        adc AS (
-            SELECT p.q_id, cd.vec_id AS n_id,
-                   CAST(sum(dt.d) AS BIGINT) AS adc_micro
-            FROM probes p
-            JOIN afin na ON na.c_id = p.c_id AND na.vec_id <> p.q_id
-            JOIN codes cd ON cd.vec_id = na.vec_id
-            JOIN dt ON dt.q_id = p.q_id AND dt.s = cd.s AND dt.m = cd.m
-            GROUP BY p.q_id, cd.vec_id
-        )
-        SELECT q_id, n_id, adc_micro, rk FROM (
-            SELECT q_id, n_id, adc_micro,
-                   CAST(row_number() OVER (PARTITION BY q_id
-                                           ORDER BY adc_micro, n_id)
-                        AS BIGINT) AS rk
-            FROM adc
-        ) WHERE rk <= {_IVF_K}
-    """))
-    return "".join(parts)
+def _ivf_pq_kmeans_oracle(v: list | None = None) -> str:
+    """The full trained IVF-PQ pipeline in one replay: the coarse-Lloyd
+    model (afin/probes), per-subspace codebook Lloyd ({_PQK_ROUNDS}
+    rounds, grouped by subspace s), corpus encoding, per-query ADC
+    distance tables over the TRAINED books, and the probed-cluster
+    ADC top-k.  ``v`` swaps the grid CTE (the rotated variant's
+    hook)."""
+    adc, body = adc_topk()
+    return with_(pq_model_ctes(_KM_ROUNDS, _PQK_ROUNDS, v=v) + [adc], body)
 
 
 @register(
@@ -1268,13 +948,13 @@ _ROT_C = "0.6"
 _ROT_S = "0.8"
 
 
-def _rot_v_cte() -> str:
+def _rot_v_ctes() -> list:
     """Oracle CTE chain: two Givens layers (even pairs, then odd
     pairs) over the raw doubles, then the standard integer grid —
     ends defining ``v(vec_id, q)`` exactly like the default."""
     c, s = _ROT_C, _ROT_S
-    return dedent(f"""
-        WITH e0 AS (
+    return [dedent(f"""
+        e0 AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
             FROM embeddings
         ),
@@ -1298,13 +978,7 @@ def _rot_v_cte() -> str:
                             ELSE CAST({s} AS DOUBLE) * e[p - 1]
                                  + CAST({c} AS DOUBLE) * e[p] END) AS e
             FROM e1
-        ),
-        v AS (
-            SELECT vec_id,
-                   list_transform(e, x -> CAST(floor((x + 1.0)
-                       * {_KM_SCALE}) AS BIGINT)) AS q
-            FROM e2
-        ),""")
+        )"""), grid_v_cte("e", "e2")]
 
 
 def _rot_expr(src: str) -> str:
@@ -1331,7 +1005,7 @@ def _rot_expr(src: str) -> str:
 
 @register(
     "ivf_pq_rotated_adc_topk",
-    oracle=_ivf_pq_kmeans_oracle(_rot_v_cte()),
+    oracle=_ivf_pq_kmeans_oracle(_rot_v_ctes()),
     tags=("similarity", "ivf", "clustering"),
 )
 def ivf_pq_rotated_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1561,80 +1235,36 @@ def _ivf_pq_residual_oracle() -> str:
     residuals r = q − centroid(assign), per-subspace codebook Lloyd
     over the residuals, residual codes, PER-(query, probed-cluster)
     distance tables, probed ADC top-k."""
-    parts = _km_coarse_parts()
-    parts.append(dedent(f""",
+    cfin = f"c{_KM_ROUNDS}"
+    ctes = km_coarse_ctes() + [
+        dedent(f"""
         rres AS (
             SELECT vx.vec_id, vx.pos, vx.x - c.x AS x
             FROM vx
             JOIN afin a ON vx.vec_id = a.vec_id
-            JOIN c{_KM_ROUNDS} c ON c.c_id = a.c_id AND c.pos = vx.pos
-        ),
-        rsx AS (
-            SELECT vec_id,
-                   CAST((pos - 1) // {_PQK_SUBDIM} AS BIGINT) AS s,
-                   CAST((pos - 1) % {_PQK_SUBDIM} + 1 AS BIGINT) AS spos,
-                   x
-            FROM rres
-        ),
-        rb0 AS (
-            SELECT s, vec_id AS m, spos, x FROM rsx
-            WHERE vec_id < {_PQK_CODES}
-        )"""))
-    for r in range(1, _PQK_ROUNDS + 1):
-        parts.append(dedent(f""",
-        rpe{r} AS (
-            SELECT rsx.vec_id, rsx.s, b.m,
-                   CAST(sum((rsx.x - b.x) * (rsx.x - b.x)) AS BIGINT) AS d2
-            FROM rsx JOIN rb{r - 1} b ON rsx.s = b.s AND rsx.spos = b.spos
-            GROUP BY rsx.vec_id, rsx.s, b.m
-        ),
-        rpa{r} AS (
-            SELECT vec_id, s, m FROM (
-                SELECT vec_id, s, m,
-                       row_number() OVER (PARTITION BY vec_id, s
-                                          ORDER BY d2, m) AS rn
-                FROM rpe{r}
-            ) WHERE rn = 1
-        ),
-        rb{r} AS (
-            SELECT a.s, a.m, rsx.spos,
-                   CAST(sum(rsx.x) // count(*) AS BIGINT) AS x
-            FROM rpa{r} a
-            JOIN rsx ON a.vec_id = rsx.vec_id AND a.s = rsx.s
-            GROUP BY a.s, a.m, rsx.spos
-        )"""))
-    parts.append(dedent(f""",
-        rpefin AS (
-            SELECT rsx.vec_id, rsx.s, b.m,
-                   CAST(sum((rsx.x - b.x) * (rsx.x - b.x)) AS BIGINT) AS d2
-            FROM rsx JOIN rb{_PQK_ROUNDS} b
-              ON rsx.s = b.s AND rsx.spos = b.spos
-            GROUP BY rsx.vec_id, rsx.s, b.m
-        ),
-        rcodes AS (
-            SELECT vec_id, s, m FROM (
-                SELECT vec_id, s, m,
-                       row_number() OVER (PARTITION BY vec_id, s
-                                          ORDER BY d2, m) AS rn
-                FROM rpefin
-            ) WHERE rn = 1
-        ),
-        qsx AS (
-            SELECT p.q_id, p.c_id,
-                   CAST((vx.pos - 1) // {_PQK_SUBDIM} AS BIGINT) AS s,
-                   CAST((vx.pos - 1) % {_PQK_SUBDIM} + 1 AS BIGINT) AS spos,
-                   vx.x - c.x AS x
+            JOIN {cfin} c ON c.c_id = a.c_id AND c.pos = vx.pos
+        )"""),
+        sub_cte("rsx", "rres"),
+        *lloyd_ctes("rsx", _PQK_CODES, _PQK_ROUNDS, book=True),
+        l2_cte("rpefin", "rsx", f"b{_PQK_ROUNDS}", book=True),
+        argmin_cte("rcodes", "rpefin", book=True),
+        dedent(f"""
+        qres AS (
+            SELECT p.q_id, p.c_id, vx.pos, vx.x - c.x AS x
             FROM probes p
             JOIN vx ON vx.vec_id = p.q_id
-            JOIN c{_KM_ROUNDS} c ON c.c_id = p.c_id AND c.pos = vx.pos
-        ),
+            JOIN {cfin} c ON c.c_id = p.c_id AND c.pos = vx.pos
+        )"""),
+        sub_cte("qsx", "qres", head="q_id, c_id"),
+        dedent(f"""
         rdt AS (
             SELECT q.q_id, q.c_id, q.s, b.m,
                    CAST(sum((q.x - b.x) * (q.x - b.x)) AS BIGINT) AS d
-            FROM qsx q JOIN rb{_PQK_ROUNDS} b
+            FROM qsx q JOIN b{_PQK_ROUNDS} b
               ON q.s = b.s AND q.spos = b.spos
             GROUP BY q.q_id, q.c_id, q.s, b.m
-        ),
+        )"""),
+        dedent("""
         radc AS (
             SELECT p.q_id, na.vec_id AS n_id,
                    CAST(sum(rdt.d) AS BIGINT) AS adc_micro
@@ -1644,16 +1274,12 @@ def _ivf_pq_residual_oracle() -> str:
             JOIN rdt ON rdt.q_id = p.q_id AND rdt.c_id = p.c_id
                     AND rdt.s = cd.s AND rdt.m = cd.m
             GROUP BY p.q_id, na.vec_id
-        )
-        SELECT q_id, n_id, adc_micro, rk FROM (
-            SELECT q_id, n_id, adc_micro,
-                   CAST(row_number() OVER (PARTITION BY q_id
-                                           ORDER BY adc_micro, n_id)
-                        AS BIGINT) AS rk
-            FROM radc
-        ) WHERE rk <= {_IVF_K}
-    """))
-    return "".join(parts)
+        )"""),
+    ]
+    return with_(ctes, ranked(
+        "q_id, n_id, adc_micro", "q_id", "adc_micro, n_id", "rk", _IVF_K,
+        "radc",
+    ))
 
 
 @register(
@@ -2064,8 +1690,6 @@ def ann_prefix_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _WINNOW_W = 4
-
-_NORM_SQL = "trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))"
 
 
 @register(

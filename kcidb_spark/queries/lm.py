@@ -47,7 +47,7 @@ from textwrap import dedent
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from kcidb_spark.cache import scoped_persist
+from kcidb_spark.cache import evict_session_frames, scoped_persist
 from kcidb_spark.queries.pipeline import _NORM_SQL, _norm_text
 from kcidb_spark.queries.registry import register
 from kcidb_spark.tables import table
@@ -386,7 +386,8 @@ def lm_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: share-the-feature-table trade), eagerly materialized so the two
 #: consumers never race to compute the model-fit upstream.  Keyed by
 #: applicationId so a fresh session always pays (and shows) the
-#: scoring cost once; entries from previous sessions are pruned.
+#: scoring cost once; entries from previous sessions are pruned and
+#: same-session entries capped at 2 (cache.evict_session_frames).
 _SCORED_CACHE: dict = {}
 
 
@@ -398,8 +399,7 @@ def _scored_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     app = spark.sparkContext.applicationId
     key = (app, os.path.realpath(sf_dir))
     if key not in _SCORED_CACHE:
-        for k in [k for k in _SCORED_CACHE if k[0] != app]:
-            del _SCORED_CACHE[k]
+        evict_session_frames(_SCORED_CACHE, app)
         scored = doc_surprisal(
             table(spark, sf_dir, "documents", spread=True)
         ).persist(StorageLevel.MEMORY_AND_DISK)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from kcidb_spark.operators.similarity import dot_expr
 from kcidb_spark.queries._exact import as_money, int_sum, oracle_int_sum
+from kcidb_spark.queries.oracle_sql import float_ivf_ctes, ranked, with_
 from kcidb_spark.queries.pipeline import _NORM_SQL, _norm_text
 from kcidb_spark.queries.ranking import _PACK_WINDOW as _PACK_WINDOW_REF
 from kcidb_spark.queries.registry import register
@@ -497,128 +498,18 @@ _ADC_K = 5
 _ADC_SCALE = 1_000_000
 
 
-def _adc_oracle() -> str:
-    d2 = (
-        "list_dot_product(a, a) - 2 * list_dot_product(a, b)"
-        " + list_dot_product(b, b)"
-    )
-    d2_sub_cw = d2.replace("a, a", "sub, sub").replace(
-        "a, b", "sub, cw").replace("b, b", "cw, cw")
-    d2_v_cv = d2.replace("a, a", "v, v").replace(
-        "a, b", "v, cv").replace("b, b", "cv, cv")
-    d2_qsub_cw = d2.replace("a, a", "qsub, qsub").replace(
-        "a, b", "qsub, cw").replace("b, b", "cw, cw")
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_ADC_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY CAST(floor({_ADC_SCALE} * ({d2_v_cv}))
-                                    AS BIGINT), cents.c_id) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        subs AS (
-            SELECT vec_id, s,
-                   v[s*{_ADC_DIMS}+1 : s*{_ADC_DIMS}+{_ADC_DIMS}] AS sub
-            FROM vecs CROSS JOIN (
-                SELECT unnest(generate_series(0, {_ADC_SUBS - 1})) AS s)
-        ),
-        cbook AS (
-            SELECT vec_id AS m, s, sub AS cw FROM subs
-            WHERE vec_id < {_ADC_CODES}
-        ),
-        codes AS (
-            SELECT vec_id, s, m FROM (
-                SELECT subs.vec_id, subs.s, cbook.m,
-                       row_number() OVER (
-                           PARTITION BY subs.vec_id, subs.s
-                           ORDER BY CAST(floor({_ADC_SCALE} * ({d2_sub_cw}))
-                                    AS BIGINT), cbook.m) AS rn
-                FROM subs JOIN cbook ON subs.s = cbook.s
-            ) WHERE rn = 1
-        ),
-        dt AS (
-            SELECT q.vec_id AS q_id, q.s, cbook.m,
-                   CAST(floor({_ADC_SCALE} * ({d2_qsub_cw})) AS BIGINT) AS d
-            FROM (SELECT vec_id, s, sub AS qsub FROM subs
-                  WHERE vec_id < {_ADC_QUERIES}) q
-            JOIN cbook ON q.s = cbook.s
-        ),
-        adc AS (
-            SELECT dt.q_id, codes.vec_id AS n_id,
-                   CAST(sum(dt.d) AS BIGINT) AS adc_micro
-            FROM codes
-            JOIN assign na ON codes.vec_id = na.vec_id
-            JOIN assign qa ON qa.c_id = na.c_id
-                          AND qa.vec_id < {_ADC_QUERIES}
-            JOIN dt ON dt.q_id = qa.vec_id AND dt.s = codes.s
-                   AND dt.m = codes.m
-            WHERE codes.vec_id != qa.vec_id
-            GROUP BY dt.q_id, codes.vec_id
-        )
-        SELECT q_id, n_id, adc_micro, rk FROM (
-            SELECT q_id, n_id, adc_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id ORDER BY adc_micro, n_id
-                   ) AS BIGINT) AS rk
-            FROM adc
-        ) WHERE rk <= {_ADC_K}
-    """)
-
-
 def _adc_nprobe_oracle(nprobe: int) -> str:
-    d2 = (
-        "list_dot_product(a, a) - 2 * list_dot_product(a, b)"
-        " + list_dot_product(b, b)"
-    )
-    d2_sub_cw = d2.replace("a, a", "sub, sub").replace(
-        "a, b", "sub, cw").replace("b, b", "cw, cw")
-    d2_v_cv = d2.replace("a, a", "v, v").replace(
-        "a, b", "v, cv").replace("b, b", "cv, cv")
-    d2_qsub_cw = d2.replace("a, a", "qsub, qsub").replace(
-        "a, b", "qsub, cw").replace("b, b", "cw, cw")
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_ADC_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY CAST(floor({_ADC_SCALE} * ({d2_v_cv}))
-                                    AS BIGINT), cents.c_id) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        qprobes AS (
-            SELECT q_id, c_id FROM (
-                SELECT vecs.vec_id AS q_id, cents.c_id,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY CAST(floor({_ADC_SCALE} * ({d2_v_cv}))
-                                    AS BIGINT), cents.c_id) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_ADC_QUERIES}
-            ) WHERE rn <= {nprobe}
-        ),
+    def d2(a: str, b: str) -> str:
+        return (
+            f"CAST(floor({_ADC_SCALE} * (list_dot_product({a}, {a})"
+            f" - 2 * list_dot_product({a}, {b})"
+            f" + list_dot_product({b}, {b}))) AS BIGINT)"
+        )
+
+    return with_(
+        float_ivf_ctes(
+            _ADC_CENTROIDS, _ADC_QUERIES, nprobe, order=d2("v", "cv")
+        ) + [dedent(f"""
         subs AS (
             SELECT vec_id, s,
                    v[s*{_ADC_DIMS}+1 : s*{_ADC_DIMS}+{_ADC_DIMS}] AS sub
@@ -634,14 +525,13 @@ def _adc_nprobe_oracle(nprobe: int) -> str:
                 SELECT subs.vec_id, subs.s, cbook.m,
                        row_number() OVER (
                            PARTITION BY subs.vec_id, subs.s
-                           ORDER BY CAST(floor({_ADC_SCALE} * ({d2_sub_cw}))
-                                    AS BIGINT), cbook.m) AS rn
+                           ORDER BY {d2("sub", "cw")}, cbook.m) AS rn
                 FROM subs JOIN cbook ON subs.s = cbook.s
             ) WHERE rn = 1
         ),
         dt AS (
             SELECT q.vec_id AS q_id, q.s, cbook.m,
-                   CAST(floor({_ADC_SCALE} * ({d2_qsub_cw})) AS BIGINT) AS d
+                   {d2("qsub", "cw")} AS d
             FROM (SELECT vec_id, s, sub AS qsub FROM subs
                   WHERE vec_id < {_ADC_QUERIES}) q
             JOIN cbook ON q.s = cbook.s
@@ -651,23 +541,23 @@ def _adc_nprobe_oracle(nprobe: int) -> str:
                    CAST(sum(dt.d) AS BIGINT) AS adc_micro
             FROM codes
             JOIN assign na ON codes.vec_id = na.vec_id
-            JOIN qprobes qa ON qa.c_id = na.c_id
+            JOIN probes qa ON qa.c_id = na.c_id
             JOIN dt ON dt.q_id = qa.q_id AND dt.s = codes.s
                    AND dt.m = codes.m
             WHERE codes.vec_id != qa.q_id
             GROUP BY dt.q_id, codes.vec_id
-        )
-        SELECT q_id, n_id, adc_micro, rk FROM (
-            SELECT q_id, n_id, adc_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id ORDER BY adc_micro, n_id
-                   ) AS BIGINT) AS rk
-            FROM adc
-        ) WHERE rk <= {_ADC_K}
-    """)
+        )""")],
+        ranked(
+            "q_id, n_id, adc_micro", "q_id", "adc_micro, n_id", "rk",
+            _ADC_K, "adc",
+        ),
+    )
 
 
-@register("ivf_pq_adc_topk", oracle=_adc_oracle(), tags=("similarity", "ivf"))
+@register(
+    "ivf_pq_adc_topk", oracle=_adc_nprobe_oracle(1),
+    tags=("similarity", "ivf"),
+)
 def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ search (Jégou et al. 2011, §IV): queries scan only their
     coarse cluster, and distances are *asymmetric* — exact query

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kcidb_spark.cache import scoped_persist
+from kcidb_spark.queries.oracle_sql import cosine
 from kcidb_spark.queries.registry import register
 from kcidb_spark.tables import table
 
@@ -333,10 +334,7 @@ _KNN_QUERIES = 10
             FROM embeddings
         ),
         sims AS (
-            SELECT q_id, n_id,
-                   round(list_dot_product(qv, nv)
-                         / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(nv, nv))),
-                         4) AS sim
+            SELECT q_id, n_id, {cosine("qv", "nv")} AS sim
             FROM q, b
             WHERE q_id <> n_id
         )
@@ -782,11 +780,7 @@ def _lsh_topk_oracle(multiprobe: int) -> str:
         )
     total = " + ".join(terms)
     offs = [0] + [1 << i for i in range(multiprobe)]
-    cos = (
-        "round(list_dot_product(p.qv, m.v)"
-        " / (sqrt(list_dot_product(p.qv, p.qv))"
-        "    * sqrt(list_dot_product(m.v, m.v))), 4)"
-    )
+    cos = cosine("p.qv", "m.v")
     return dedent(f"""
         WITH vecs AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v

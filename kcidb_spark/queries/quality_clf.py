@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kcidb_spark.cache import evict_session_frames
 from kcidb_spark.queries.registry import register
 from kcidb_spark.tables import table
 
@@ -57,17 +58,10 @@ def _labeled_feats(spark: SparkSession, sf_dir: str):
     app = spark.sparkContext.applicationId
     key = (app, _os.path.realpath(sf_dir))
     if key not in _CLF_FEATS_CACHE:
-        # Evict cross-app leftovers AND cap same-app entries (LRU of
-        # 2, ADVICE r13) — each entry is a PERSISTED corpus-reduced
-        # frame, so eviction must unpersist or the executor storage
-        # leaks one frame per sf_dir a long-lived driver trains over
-        # (the heavier analog of the r13 _TRAINER_CACHE_MAX fix).
-        for k in [k for k in _CLF_FEATS_CACHE if k[0] != app]:
-            _CLF_FEATS_CACHE.pop(k).unpersist()
-        while len(_CLF_FEATS_CACHE) >= 2:
-            _CLF_FEATS_CACHE.pop(
-                next(iter(_CLF_FEATS_CACHE))
-            ).unpersist()
+        # Evict cross-app leftovers AND cap same-app entries at 2 —
+        # each entry is a PERSISTED corpus-reduced frame (the heavier
+        # analog of the r13 _TRAINER_CACHE_MAX fix).
+        evict_session_frames(_CLF_FEATS_CACHE, app)
         feats = hash_features(
             docs.select("doc_id", "text"), _CLF_BUCKETS
         ).persist(StorageLevel.MEMORY_AND_DISK)

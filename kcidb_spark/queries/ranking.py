@@ -18,6 +18,21 @@ from textwrap import dedent
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from kcidb_spark.queries.oracle_sql import (
+    _BM25_K,
+    _BM25_QUERIES,
+    _BM25_SCALE,
+    _RRF_CASE,
+    bm25_ctes,
+    bm25_oracle,
+    bm25_scores,
+    bm25_term_micro,
+    cosine,
+    float_ivf_ctes,
+    ranked,
+    rrf_fusion,
+    with_,
+)
 from kcidb_spark.queries.pipeline import _NORM_SQL, _norm_text
 from kcidb_spark.queries.registry import register
 from kcidb_spark.tables import table
@@ -170,41 +185,19 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_oracle() -> str:
-    cos = (
-        "round(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-        " * sqrt(list_dot_product({b}, {b}))), 4)"
+    n_cents = (
+        f"(SELECT GREATEST({_SEM_CENTROIDS},"
+        " CAST(CEIL(SQRT(count(*))) AS BIGINT)) FROM vecs)"
     )
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-            FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < (SELECT GREATEST({_SEM_CENTROIDS},
-                                CAST(CEIL(SQRT(count(*))) AS BIGINT))
-                            FROM vecs)
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos.format(a="vecs.v", b="cents.cv")}
-                                    DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        )
+    return with_(float_ivf_ctes(n_cents), dedent(f"""
         SELECT a.vec_id, a.c_id AS cluster,
                CAST(NOT EXISTS (
                    SELECT 1 FROM assign e
                    WHERE e.c_id = a.c_id AND e.vec_id < a.vec_id
-                     AND {cos.format(a="e.v", b="a.v")} >= {_SEM_TAU}
+                     AND {cosine("e.v", "a.v")} >= {_SEM_TAU}
                ) AS BOOLEAN) AS is_kept
         FROM assign a
-    """)
+    """))
 
 
 @register(
@@ -513,80 +506,43 @@ def group_sample_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hybrid retrieval: lexical + semantic legs fused by reciprocal rank
 # ---------------------------------------------------------------------------
 
-_RRF_C = 60          # the standard RRF constant (Cormack et al. 2009)
 _RRF_QUERIES = 5     # doc_id/vec_id < 5 — the standard query workload
 _RRF_LEG_K = 10      # per-leg shortlist depth
 _RRF_FINAL_K = 5     # fused top-k
 
 
+_RRF_LEX = dedent(f"""(
+    SELECT q.doc_id AS q_id, t.doc_id AS n_id, count(*) AS ovl
+    FROM toks q JOIN toks t ON q.w = t.w
+    WHERE q.doc_id < {_RRF_QUERIES} AND t.doc_id <> q.doc_id
+    GROUP BY q.doc_id, t.doc_id
+)""")
+_RRF_SEM = dedent(f"""(
+    SELECT q.vec_id AS q_id, n.vec_id AS n_id, {cosine("q.v", "n.v")} AS sim
+    FROM vecs q CROSS JOIN vecs n
+    WHERE q.vec_id < {_RRF_QUERIES} AND n.vec_id <> q.vec_id
+)""")
+
+
 @register(
     "hybrid_rrf_topk",
-    oracle=dedent(f"""
-        WITH toks AS (
-            SELECT DISTINCT doc_id,
-                   unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
-        ),
-        lex AS (
-            SELECT q_id, n_id,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id ORDER BY ovl DESC, n_id
-                   ) AS BIGINT) AS r_lex
-            FROM (
-                SELECT q.doc_id AS q_id, t.doc_id AS n_id,
-                       count(*) AS ovl
-                FROM toks q JOIN toks t ON q.w = t.w
-                WHERE q.doc_id < {_RRF_QUERIES} AND t.doc_id <> q.doc_id
-                GROUP BY q.doc_id, t.doc_id
-            ) QUALIFY r_lex <= {_RRF_LEG_K}
-        ),
-        vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-            FROM embeddings
-        ),
-        sem AS (
-            SELECT q_id, n_id,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id ORDER BY sim DESC, n_id
-                   ) AS BIGINT) AS r_sem
-            FROM (
-                SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-                       round(list_dot_product(q.v, n.v)
-                             / (sqrt(list_dot_product(q.v, q.v))
-                                * sqrt(list_dot_product(n.v, n.v))),
-                             4) AS sim
-                FROM vecs q CROSS JOIN vecs n
-                WHERE q.vec_id < {_RRF_QUERIES}
-                  AND n.vec_id <> q.vec_id
-            ) QUALIFY r_sem <= {_RRF_LEG_K}
-        )
-        SELECT q_id, n_id, r_lex, r_sem, rrf, rk FROM (
-            SELECT COALESCE(lex.q_id, sem.q_id) AS q_id,
-                   COALESCE(lex.n_id, sem.n_id) AS n_id,
-                   lex.r_lex, sem.r_sem,
-                   CASE
-                     WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN
-                       CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)
-                       / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))
-                     WHEN r_lex IS NOT NULL THEN
-                       CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)
-                     ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem)
-                   END AS rrf,
-                   CAST(row_number() OVER (
-                       PARTITION BY COALESCE(lex.q_id, sem.q_id)
-                       ORDER BY CASE
-                         WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN
-                           CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)
-                           / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))
-                         WHEN r_lex IS NOT NULL THEN
-                           CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)
-                         ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem)
-                       END DESC, COALESCE(lex.n_id, sem.n_id)
-                   ) AS BIGINT) AS rk
-            FROM lex FULL JOIN sem
-              ON lex.q_id = sem.q_id AND lex.n_id = sem.n_id
-        ) WHERE rk <= {_RRF_FINAL_K}
-    """),
+    oracle=with_(
+        [
+            f"toks AS (SELECT DISTINCT doc_id, unnest(string_split("
+            f"{_NORM_SQL}, ' ')) AS w FROM documents)",
+            "lex AS (" + ranked(
+                "q_id, n_id", "q_id", "ovl DESC, n_id", "r_lex",
+                _RRF_LEG_K, _RRF_LEX,
+            ) + ")",
+            "vecs AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v"
+            " FROM embeddings)",
+            "sem AS (" + ranked(
+                "q_id, n_id", "q_id", "sim DESC, n_id", "r_sem",
+                _RRF_LEG_K, _RRF_SEM,
+            ) + ")",
+        ],
+        rrf_fusion(_RRF_FINAL_K),
+    ),
     tags=("pipeline", "ranking", "similarity"),
 )
 def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -658,20 +614,21 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("q_id", "n_id", "r_sem")
     )
 
-    rrf = (
-        f"CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN"
-        f" CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)"
-        f" / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))"
-        f" WHEN r_lex IS NOT NULL THEN"
-        f" CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)"
-        f" ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem) END"
-    )
+    return rrf_fuse(lex, sem, _RRF_FINAL_K)
+
+
+def rrf_fuse(lex: DataFrame, sem: DataFrame, k: int) -> DataFrame:
+    """Reciprocal-rank fusion of two ranked legs — ``lex`` (q_id,
+    n_id, r_lex) and ``sem`` (q_id, n_id, r_sem): full-outer join,
+    the integer-exact RRF score (``_RRF_CASE``, the oracle's own
+    text), top-``k`` per query by (rrf DESC, n_id) — (q_id, n_id,
+    r_lex, r_sem, rrf, rk)."""
     w_rrf = W.partitionBy("q_id").orderBy(F.desc("rrf"), F.asc("n_id"))
     return (
         lex.join(sem, on=["q_id", "n_id"], how="full_outer")
-        .withColumn("rrf", F.expr(rrf))
+        .withColumn("rrf", F.expr(_RRF_CASE))
         .withColumn("rk", F.row_number().over(w_rrf).cast("long"))
-        .filter(F.col("rk") <= _RRF_FINAL_K)
+        .filter(F.col("rk") <= k)
         .select("q_id", "n_id", "r_lex", "r_sem", "rrf", "rk")
     )
 
@@ -679,36 +636,6 @@ def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # BM25 (rational, micro-bit) — the classic lexical ranker
 # ---------------------------------------------------------------------------
-
-_BM25_QUERIES = 5
-_BM25_K = 5
-#: floor(term_score · 2^20) — multiplication by a power of two is
-#: EXACT in IEEE doubles (exponent shift), so the only rounding in a
-#: term score is its two correctly-rounded divisions.
-_BM25_SCALE = 1 << 20
-
-#: Shared SQL text for one term's micro-bit BM25 score.  Rational
-#: forms of the classic components (module doctrine — transcendental
-#: log is not bit-portable):
-#: * idf  := (2N + 2)/(2df + 1)  — the Lucene always-positive shape
-#:   1 + (N − df + 0.5)/(df + 0.5) with its +0.5s cleared to
-#:   integers; monotone decreasing in df.
-#: * sat  := tf·(k1 + 1)/(tf + k1·(1 − b + b·len/avglen)) at the
-#:   standard k1 = 1.2, b = 0.75, with avglen = S/N substituted and
-#:   the fractions cleared: 22·tf·S / (10·tf·S + 3·S + 9·len·N) —
-#:   numerator and denominator pure BIGINT.
-#: Each factor is ONE correctly-rounded division of exact integers,
-#: their product one correctly-rounded multiplication, the 2^20
-#: scaling exact, the floor deterministic — so the summed BIGINT
-#: score hashes identically cross-engine under any aggregation order.
-_BM25_TERM_MICRO = (
-    "CAST(floor("
-    " (CAST(2 * {N} + 2 AS DOUBLE) / (2 * {df} + 1))"
-    " * (CAST(22 * {tf} * {S} AS DOUBLE)"
-    "    / (10 * {tf} * {S} + 3 * {S} + 9 * {len} * {N}))"
-    " * {scale}) AS BIGINT)"
-)
-
 
 def _bm25_base(spark: SparkSession, sf_dir: str):
     """(tf, tot, qterms, qws) — the shared BM25 model base of
@@ -770,53 +697,7 @@ def _bm25_base(spark: SparkSession, sf_dir: str):
 
 @register(
     "bm25_topk",
-    oracle=dedent(f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
-        ),
-        tf AS (
-            SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-            FROM toks GROUP BY doc_id, w
-        ),
-        dlen AS (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM tf
-            GROUP BY doc_id
-        ),
-        dft AS (
-            SELECT w, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY w
-        ),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(len) AS BIGINT) AS s
-            FROM dlen
-        ),
-        qterms AS (
-            SELECT DISTINCT doc_id AS q_id, w FROM toks
-            WHERE doc_id < {_BM25_QUERIES}
-        )
-        SELECT q_id, n_id, score_micro, rk FROM (
-            SELECT q_id, n_id, score_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY score_micro DESC, n_id
-                   ) AS BIGINT) AS rk
-            FROM (
-                SELECT q.q_id, tf.doc_id AS n_id,
-                       CAST(sum({_BM25_TERM_MICRO.format(
-                           N='tot.n', df='dft.df', tf='tf.tf',
-                           S='tot.s', len='dlen.len',
-                           scale=_BM25_SCALE)}) AS BIGINT)
-                           AS score_micro
-                FROM qterms q
-                JOIN tf ON tf.w = q.w AND tf.doc_id <> q.q_id
-                JOIN dft ON dft.w = tf.w
-                JOIN dlen ON dlen.doc_id = tf.doc_id
-                CROSS JOIN tot
-                GROUP BY q.q_id, tf.doc_id
-            )
-        ) WHERE rk <= {_BM25_K}
-    """),
+    oracle=bm25_oracle(),
     tags=("pipeline", "ranking"),
 )
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -827,8 +708,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Query = each of the first {_BM25_QUERIES} documents' distinct
     token sets; candidates score the standard
     ``Σ_terms idf(w) · tf-saturation(tf, len)`` with both factors in
-    rational form (see _BM25_TERM_MICRO) and each term score floored
-    to BIGINT micro-bits, so the per-candidate sum is
+    rational form (see oracle_sql._BM25_TERM_MICRO) and each term
+    score floored to BIGINT micro-bits, so the per-candidate sum is
     aggregation-order-free and the whole ranking hashes identically
     against DuckDB.
 
@@ -853,9 +734,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
     )
-    term_micro = _BM25_TERM_MICRO.format(
-        N="n", df="df", tf="tf", S="s", len="len", scale=_BM25_SCALE
-    )
+    term_micro = bm25_term_micro("n", "df", "tf", "s", "len")
     w_rank = W.partitionBy("q_id").orderBy(
         F.desc("score_micro"), F.asc("n_id")
     )
@@ -893,75 +772,37 @@ _PRF_TERM_MICRO = (
 )
 
 
+_PRF_EXPAND = dedent(f"""(
+    SELECT prf.q_id, tf.w AS term,
+           CAST(sum({_PRF_TERM_MICRO.format(
+               N='tot.n', df='dft.df', tf='tf.tf', scale=_BM25_SCALE
+           )}) AS BIGINT) AS weight_micro
+    FROM prf
+    JOIN tf ON tf.doc_id = prf.n_id
+    JOIN dft ON dft.w = tf.w
+    CROSS JOIN tot
+    WHERE NOT EXISTS (
+        SELECT 1 FROM qterms q WHERE q.q_id = prf.q_id AND q.w = tf.w
+    )
+    GROUP BY prf.q_id, tf.w
+)""")
+
+
 @register(
     "bm25_prf_expansion",
-    oracle=dedent(f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
+    oracle=with_(
+        bm25_ctes(_BM25_QUERIES) + [dedent(f"""
+            prf AS (
+                SELECT q_id, n_id FROM {bm25_scores()}
+                QUALIFY row_number() OVER (
+                    PARTITION BY q_id ORDER BY score_micro DESC, n_id
+                ) <= {_PRF_DOCS}
+            )""")],
+        ranked(
+            "q_id, term, weight_micro", "q_id", "weight_micro DESC, term",
+            "rk", _PRF_TERMS, _PRF_EXPAND,
         ),
-        tf AS (
-            SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-            FROM toks GROUP BY doc_id, w
-        ),
-        dlen AS (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM tf
-            GROUP BY doc_id
-        ),
-        dft AS (
-            SELECT w, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY w
-        ),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(len) AS BIGINT) AS s
-            FROM dlen
-        ),
-        qterms AS (
-            SELECT DISTINCT doc_id AS q_id, w FROM toks
-            WHERE doc_id < {_BM25_QUERIES}
-        ),
-        prf AS (
-            SELECT q_id, n_id FROM (
-                SELECT q.q_id, tf.doc_id AS n_id,
-                       CAST(sum({_BM25_TERM_MICRO.format(
-                           N='tot.n', df='dft.df', tf='tf.tf',
-                           S='tot.s', len='dlen.len',
-                           scale=_BM25_SCALE)}) AS BIGINT)
-                           AS score_micro
-                FROM qterms q
-                JOIN tf ON tf.w = q.w AND tf.doc_id <> q.q_id
-                JOIN dft ON dft.w = tf.w
-                JOIN dlen ON dlen.doc_id = tf.doc_id
-                CROSS JOIN tot
-                GROUP BY q.q_id, tf.doc_id
-            ) QUALIFY row_number() OVER (
-                PARTITION BY q_id ORDER BY score_micro DESC, n_id
-            ) <= {_PRF_DOCS}
-        )
-        SELECT q_id, term, weight_micro, rk FROM (
-            SELECT q_id, term, weight_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY weight_micro DESC, term
-                   ) AS BIGINT) AS rk
-            FROM (
-                SELECT prf.q_id, tf.w AS term,
-                       CAST(sum({_PRF_TERM_MICRO.format(
-                           N='tot.n', df='dft.df', tf='tf.tf',
-                           scale=_BM25_SCALE)}) AS BIGINT)
-                           AS weight_micro
-                FROM prf
-                JOIN tf ON tf.doc_id = prf.n_id
-                JOIN dft ON dft.w = tf.w
-                CROSS JOIN tot
-                WHERE NOT EXISTS (
-                    SELECT 1 FROM qterms q
-                    WHERE q.q_id = prf.q_id AND q.w = tf.w
-                )
-                GROUP BY prf.q_id, tf.w
-            )
-        ) WHERE rk <= {_PRF_TERMS}
-    """),
+    ),
     tags=("pipeline", "ranking"),
 )
 def bm25_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -997,9 +838,7 @@ def bm25_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
     )
-    bm25_micro = _BM25_TERM_MICRO.format(
-        N="n", df="df", tf="tf", S="s", len="len", scale=_BM25_SCALE
-    )
+    bm25_micro = bm25_term_micro("n", "df", "tf", "s", "len")
     w_doc = W.partitionBy("q_id").orderBy(
         F.desc("score_micro"), F.asc("n_id")
     )

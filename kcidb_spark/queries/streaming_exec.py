@@ -27,6 +27,43 @@ from pyspark.sql import functions as F
 
 from kcidb_spark.localrel import _check_request_scale, local_df
 from kcidb_spark.queries._exact import as_money, int_sum, oracle_int_sum
+from kcidb_spark.queries.oracle_sql import (
+    _BM25_K,
+    _BM25_QUERIES,
+    _COMPACT_RANGES,
+    _HYB_FINAL_K,
+    _HYB_LEG_K,
+    _HYB_QUERIES,
+    _IVF_CENTROIDS,
+    _IVF_K,
+    _IVF_QUERIES,
+    _KM_NPROBE,
+    _KM_ROUNDS,
+    _KM_SCALE,
+    _PQK_CODES,
+    _PQK_SUBDIM,
+    _PQK_SUBS,
+    _T21_RANGES,
+    _as_of_oracle,
+    _bm25_deletes_oracle,
+    _compact_oracle,
+    _hybrid_deletes_oracle,
+    _hybrid_serve_oracle,
+    _pqc_deletes_oracle,
+    _pqc_rotated_oracle,
+    _pqc_serve_oracle,
+    _rebucket_oracle,
+    _retrain_oracle,
+    _serve_deletes_oracle,
+    _t20_oracle,
+    _t21_oracle,
+    _t23_oracle,
+    _t24_oracle,
+    _t25_oracle,
+    _t26_oracle,
+    bm25_term_micro,
+    ivf_probe_oracle,
+)
 from kcidb_spark.queries.registry import register
 from kcidb_spark.queries.relational import _utc
 from kcidb_spark.serve import lsm
@@ -936,15 +973,9 @@ def _staged_file(stage: str, rel: str, schema_df: DataFrame) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _t19_oracle() -> str:
-    from kcidb_spark.queries.advanced import _ivf_nprobe_oracle
-
-    return _ivf_nprobe_oracle(2)
-
-
 @register(
     "t19_stream_ann_probe",
-    oracle=_t19_oracle(),
+    oracle=ivf_probe_oracle(2),
     tags=("T1", "streaming", "similarity", "ivf", "index"),
 )
 def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -970,11 +1001,7 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed clusters' directories (same PartitionFilters pin as
     ann_ivf_stored_probe)."""
     from kcidb_spark.operators.similarity import ivf_rank
-    from kcidb_spark.queries.advanced import (
-        _IVF_K,
-        _IVF_QUERIES,
-        _ivf_session_store,
-    )
+    from kcidb_spark.queries.advanced import _ivf_session_store
 
     vecs = _float_vecs(spark, sf_dir)
     # The session-keyed inverted file (shared with ann_ivf_stored_probe
@@ -988,14 +1015,14 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Stage each query as its own parquet file (ordered mtimes): one
     # query per micro-batch — the online arrival pattern.  ONE Spark
-    # job: partition the query workload by a duplicate of vec_id (the
-    # partition column itself is directory-only, so the files keep
-    # the (vec_id, v) schema the stream reads).
+    # job, once per session (_session_stage): partition the query
+    # workload by a duplicate of vec_id (the partition column itself
+    # is directory-only, so the files keep the (vec_id, v) schema the
+    # stream reads).
+    stage = _session_stage(spark, sf_dir, "t19", lambda d: _write_groups(
+        vecs.filter(F.col("vec_id") < _IVF_QUERIES), F.col("vec_id"), d
+    ))
     watch = _scratch_dir("t19_in")
-    stage = _scratch_dir("t19_stage")
-    _write_groups(
-        vecs.filter(F.col("vec_id") < _IVF_QUERIES), F.col("vec_id"), stage
-    )
     _stage_arrivals(watch, [
         (_staged_file(stage, f"_g={i}", vecs), f"q{i}")
         for i in range(_IVF_QUERIES)
@@ -1023,12 +1050,12 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "overwrite"
         ).parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
 
-    # NOT the store: it is the session-owned shared index.
+    # NOT the store nor the stage: both are session-owned and shared.
     _drain(
         spark, "t19_stream_ann_probe",
         _file_stream(spark, vecs.schema, watch).writeStream
         .foreachBatch(serve),
-        done=(watch, stage),
+        done=(watch,),
     )
     return spark.read.parquet(out_dir).select("q_id", "n_id", "sim")
 
@@ -1036,39 +1063,6 @@ def t19_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # t20: STREAMING IVF INGEST — new vectors append to the inverted file
 # ---------------------------------------------------------------------------
-
-
-def _t20_oracle() -> str:
-    """Batch replay of the assignment the drained store must hold:
-    every vector at its nearest static centroid (cosine, 4-decimal
-    round, c_id tie-break) — the same argmin ann_ivf_* certify, here
-    checked through a WRITE → partitioned store → READ round trip."""
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-            FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        )
-        SELECT vec_id, c_id FROM (
-            SELECT vecs.vec_id, cents.c_id,
-                   row_number() OVER (
-                       PARTITION BY vecs.vec_id
-                       ORDER BY {cos.format(a='v', b='cv')} DESC,
-                                cents.c_id
-                   ) AS rn
-            FROM vecs CROSS JOIN cents
-        ) WHERE rn = 1
-    """)
 
 
 @register(
@@ -1128,11 +1122,13 @@ def t20_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Stage 4 arrival batches by vec_id-hash prefix (deterministic,
     # covers every vector exactly once), ordered mtimes — ONE staging
-    # job: all four arrival batches in one partitioned write.
+    # job per session (_session_stage): all four arrival batches in
+    # one partitioned write.
     ranges = ("0123", "4567", "89ab", "cdef")
+    stage = _session_stage(spark, sf_dir, "t20", lambda d: _write_groups(
+        vecs, _range_group("vec_id", ranges), d
+    ))
     watch = _scratch_dir("t20_in")
-    stage = _scratch_dir("t20_stage")
-    _write_groups(vecs, _range_group("vec_id", ranges), stage)
     _stage_arrivals(watch, [
         (_staged_file(stage, f"_g={i}", vecs), f"batch_{i}")
         for i in range(len(ranges))
@@ -1146,7 +1142,7 @@ def t20_stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "t20_stream_ivf_ingest",
         _file_stream(spark, vecs.schema, watch).writeStream
         .foreachBatch(ingest),
-        done=(watch, stage),
+        done=(watch,),
     )
     return lsm.tiers(
         spark, store, "data", _T21_SCHEMA, ("vec_id", "c_id"),
@@ -1220,8 +1216,6 @@ def _float_cents(vecs: DataFrame) -> list:
     ``_IVF_CENTROIDS`` vectors of ``vecs`` (vec_id, v) as
     (c_id, cv, cn)."""
     from kcidb_spark.operators.similarity import dot_expr
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-
     return [
         (int(r["vec_id"]), [float(x) for x in r["v"]], float(r["nrm"]))
         for r in vecs.filter(F.col("vec_id") < _IVF_CENTROIDS)
@@ -1420,11 +1414,6 @@ def delete_vec_batch_txn(
     )
 
 
-#: Deterministic 3-way arrival split by md5(vec_id) first hex char —
-#: covers every vector exactly once (same staging idiom as t17/t20).
-_T21_RANGES = ("012345", "6789ab", "cdef")
-
-
 def _md5_prefix(id_col: str, pos: int = 1):
     """The ``pos``-th hex char of md5(id) — the deterministic split
     key of the staged arrivals, store builds and tombstone sets."""
@@ -1593,84 +1582,6 @@ def _t21_session_store(
     return store
 
 
-def _t21_oracle() -> str:
-    """Batch replay of the interleaved serve-during-ingest run: probe
-    round r (fired after ingest batch r committed) must rank exactly
-    the vectors of batches 0..r — the md5-prefix groups below — in
-    the probed clusters, under the same static centroids/queries as
-    the IVF family."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
-
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    cos_v_cv = cos.format(a="v", b="cv")
-    cos_qv_nv = cos.format(a="p.qv", b="m.v")
-    groups = " ".join(
-        f"WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN "
-        f"({', '.join(repr(c) for c in chars)}) THEN {i}"
-        for i, chars in enumerate(_T21_RANGES[:-1])
-    )
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        grouped AS (
-            SELECT vec_id, v,
-                   CASE {groups} ELSE {len(_T21_RANGES) - 1} END AS b
-            FROM vecs
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v, b FROM (
-                SELECT g.vec_id, cents.c_id, g.v, g.b,
-                       row_number() OVER (
-                           PARTITION BY g.vec_id
-                           ORDER BY {cos.format(a='g.v', b='cv')} DESC, cents.c_id
-                       ) AS rn
-                FROM grouped g CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id, v AS qv FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= 2
-        ),
-        rounds AS (
-            SELECT unnest(generate_series(0, {len(_T21_RANGES) - 1}))
-                   AS probe_round
-        )
-        SELECT probe_round, q_id, n_id, sim FROM (
-            SELECT r.probe_round, p.q_id, m.vec_id AS n_id,
-                   {cos_qv_nv} AS sim,
-                   row_number() OVER (
-                       PARTITION BY r.probe_round, p.q_id
-                       ORDER BY {cos_qv_nv} DESC, m.vec_id
-                   ) AS rn
-            FROM rounds r
-            CROSS JOIN probes p
-            JOIN assign m
-              ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-             AND m.b <= r.probe_round
-        ) WHERE rn <= {_IVF_K}
-    """)
-
-
 @register(
     "t21_stream_serve_during_ingest",
     oracle=_t21_oracle(),
@@ -1708,8 +1619,6 @@ def t21_stream_serve_during_ingest(
     plus the manifest read — ONE tiny file per probe, ONE atomic
     rename per ingest batch; at 100 TB the rename becomes a manifest
     table / conditional put, the filter is unchanged."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
-
     vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store = _scratch_dir("t21_store")
@@ -1725,58 +1634,6 @@ def t21_stream_serve_during_ingest(
 # ---------------------------------------------------------------------------
 # IVF store COMPACTION — the maintenance operator t20's docstring names
 # ---------------------------------------------------------------------------
-
-#: Overlapping arrival ranges (each hex prefix lands in 1-2 batches):
-#: the re-crawl shape where a later batch replays vectors an earlier
-#: one already ingested — what compaction's last-write-wins dedup is
-#: FOR (LSM ordering: the newest ingested copy is the one served,
-#: matching the probes' ``lsm.latest`` — ADVICE r12).
-_COMPACT_RANGES = ("01234567", "456789ab", "89abcdef")
-
-
-def _compact_oracle() -> str:
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    # LAST batch containing the prefix wins — test the ranges in
-    # REVERSE order so the CASE returns max(src_batch), the
-    # last-write-wins winner compaction keeps.
-    when = " ".join(
-        f"WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN "
-        f"({', '.join(repr(c) for c in chars)}) THEN {i}"
-        for i, chars in reversed(list(enumerate(_COMPACT_RANGES)))
-    )
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-            FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id FROM (
-                SELECT vecs.vec_id, cents.c_id,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos.format(a='v', b='cv')} DESC,
-                                    cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        grp AS (
-            SELECT vec_id, CASE {when} END AS src_batch FROM vecs
-        )
-        SELECT a.vec_id, a.c_id, CAST(g.src_batch AS BIGINT) AS src_batch
-        FROM assign a JOIN grp g ON a.vec_id = g.vec_id
-    """)
-
 
 @register(
     "ivf_store_compact",
@@ -1960,8 +1817,6 @@ def t22_stream_compact_while_serving(
     a live generation swap; probes stay query-sized (the t21/serve
     rehearsal measured the flat-probe wall at 1.13× for 100× data,
     and the tiered read adds one more pruned directory tree)."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
-
     vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store = _scratch_dir("t22_store")
@@ -1990,66 +1845,6 @@ def serve_store_gc(store: str) -> list:
     longer references — unless a retained history snapshot still
     reads them.  Returns the deleted paths (lsm.gc)."""
     return lsm.gc(store, "vec")
-
-
-def _serve_deletes_oracle() -> str:
-    """The nprobe-2 oracle with tombstoned vectors excluded from the
-    MEMBER side (erase-everywhere semantics): tombstone set = md5
-    second hex char in 0-3 (~25% of the corpus, deterministic)."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
-
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    cos_v_cv = cos.format(a="v", b="cv")
-    cos_qv_nv = cos.format(a="p.qv", b="m.v")
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id, v AS qv FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= 2
-        )
-        SELECT q_id, n_id, sim FROM (
-            SELECT p.q_id, m.vec_id AS n_id, {cos_qv_nv} AS sim,
-                   row_number() OVER (
-                       PARTITION BY p.q_id
-                       ORDER BY {cos_qv_nv} DESC, m.vec_id
-                   ) AS rn
-            FROM probes p
-            JOIN assign m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-             AND substr(md5(CAST(m.vec_id AS VARCHAR)), 2, 1)
-                 NOT IN ('0', '1', '2', '3')
-        ) WHERE rn <= {_IVF_K}
-    """)
 
 
 @register(
@@ -2082,8 +1877,6 @@ def ann_serve_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     just cannot be returned).  Compaction drops tombstoned rows and
     GC then reclaims fully folded tombstone subtrees (pinned in
     tests/test_serve_during_ingest.py)."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
-
     vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store = _t21_session_store(spark, sf_dir, vecs, cents)
@@ -2097,67 +1890,6 @@ def ann_serve_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_tiered_topk(
         vecs.filter(F.col("vec_id") < _IVF_QUERIES), store, cents, _IVF_K
     ).select("q_id", "n_id", "sim")
-
-
-def _as_of_oracle() -> str:
-    """The t21 visibility rule frozen at watermark 1: members are the
-    vectors of ingest groups 0-1 only, even though batch 2 is
-    committed in the store the entry builds."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-    )
-
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    cos_v_cv = cos.format(a="v", b="cv")
-    cos_qv_nv = cos.format(a="p.qv", b="m.v")
-    visible = "', '".join(_T21_RANGES[0] + _T21_RANGES[1])
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id, v AS qv FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= 2
-        )
-        SELECT CAST(1 AS BIGINT) AS probe_round, q_id, n_id, sim FROM (
-            SELECT p.q_id, m.vec_id AS n_id, {cos_qv_nv} AS sim,
-                   row_number() OVER (
-                       PARTITION BY p.q_id
-                       ORDER BY {cos_qv_nv} DESC, m.vec_id
-                   ) AS rn
-            FROM probes p
-            JOIN assign m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-             AND substr(md5(CAST(m.vec_id AS VARCHAR)), 1, 1)
-                 IN ('{visible}')
-        ) WHERE rn <= {_IVF_K}
-    """)
 
 
 @register(
@@ -2185,8 +1917,6 @@ def ann_probe_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     tombstones), which is exactly what the as_of read is FOR: the
     committed ``batch_id ≤ 1`` prefix is immutable, so the
     historical result is unchanged by later transactions."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
-
     vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store = _t21_session_store(spark, sf_dir, vecs, cents)
@@ -2217,8 +1947,6 @@ def ann_probe_as_of_retained(spark: SparkSession, sf_dir: str) -> DataFrame:
     refusal, GC protection, and the postings/PQ edition (pb and
     codebooks travel with the snapshot) are pinned in
     tests/test_retention.py."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES
-
     vecs = _float_vecs(spark, sf_dir)
     cents = _float_cents(vecs)
     store, built = _session_store_dir(spark, sf_dir, "t21tierret")
@@ -2254,13 +1982,6 @@ def ann_probe_as_of_retained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # design, since float Lloyd is aggregation-order dependent and could
 # not be hash-certified.
 # ---------------------------------------------------------------------------
-
-#: Bounded training sample for the retrain: every 3rd id plus the
-#: first k (so Lloyd's lowest-k-ids init is always present) — the
-#: FAISS posture (train on ~2^16 vectors at any corpus size), made
-#: deterministic so the DuckDB oracle can replay it.
-_RETRAIN_SAMPLE_SQL = "(vec_id % 3 = 0 OR vec_id < {k})"
-
 
 def _retrain_sample(members: DataFrame, k: int) -> DataFrame:
     return members.filter(
@@ -2434,14 +2155,12 @@ def probe_q_topk(
             batch_df.select("vec_id", "q").collect(), "probe_q_topk"
         )
     ]
-    from kcidb_spark.operators.ivf import d2_int
+    from kcidb_spark.operators.ivf import route_int_driver
 
-    probe_rows = []
-    for qid, qv in qrows:
-        near = sorted(
-            (d2_int(qv, cq), int(c_id)) for c_id, cq in cents
-        )[:nprobe]
-        probe_rows.extend((qid, c, qv) for _, c in near)
+    qv = dict(qrows)
+    probe_rows = [
+        (qid, c, qv[qid]) for qid, c in route_int_driver(qrows, cents, nprobe)
+    ]
     probed = sorted({c for _, c, _qv in probe_rows})
     q_probe = local_df(
         sess, probe_rows, "q_id long, c_id bigint, qq array<bigint>"
@@ -2479,113 +2198,6 @@ def init_q_store(store: str, cents: list) -> None:
     )
 
 
-def _retrain_oracle() -> str:
-    """Unrolled replay of the retrain pipeline: quantize, Lloyd-train
-    {_KM_ROUNDS} rounds ON THE BOUNDED SAMPLE (the same deterministic
-    sample the transaction takes), assign EVERY stored vector to the
-    trained centroids (the re-encoded generation), probe the queries'
-    nprobe nearest trained clusters, exact-d2 top-k — the
-    ann_ivf_kmeans_topk oracle (advanced._km_coarse_parts) with the
-    training CTEs restricted to the sample."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-        _KM_NPROBE,
-        _KM_ROUNDS,
-        _KM_SCALE,
-    )
-
-    sample = _RETRAIN_SAMPLE_SQL.format(k=_IVF_CENTROIDS)
-    parts = [dedent(f"""
-        WITH v AS (
-            SELECT vec_id,
-                   list_transform(CAST(embedding AS DOUBLE[]),
-                                  x -> CAST(floor((x + 1.0) * {_KM_SCALE})
-                                            AS BIGINT)) AS q
-            FROM embeddings
-        ),
-        vx AS (
-            SELECT vec_id,
-                   unnest(generate_series(1, length(q))) AS pos,
-                   unnest(q) AS x
-            FROM v
-        ),
-        sx AS (
-            SELECT * FROM vx WHERE {sample}
-        ),
-        c0 AS (
-            SELECT vec_id AS c_id, pos, x FROM sx
-            WHERE vec_id < {_IVF_CENTROIDS}
-        )""")]
-    for r in range(1, _KM_ROUNDS + 1):
-        parts.append(dedent(f""",
-        d{r} AS (
-            SELECT sx.vec_id, c.c_id,
-                   CAST(sum((sx.x - c.x) * (sx.x - c.x)) AS BIGINT) AS d2
-            FROM sx JOIN c{r - 1} c ON sx.pos = c.pos
-            GROUP BY sx.vec_id, c.c_id
-        ),
-        a{r} AS (
-            SELECT vec_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM d{r}
-            ) WHERE rn = 1
-        ),
-        c{r} AS (
-            SELECT a.c_id, sx.pos,
-                   CAST(sum(sx.x) // count(*) AS BIGINT) AS x
-            FROM a{r} a JOIN sx ON a.vec_id = sx.vec_id
-            GROUP BY a.c_id, sx.pos
-        )"""))
-    parts.append(dedent(f""",
-        dfin AS (
-            SELECT vx.vec_id, c.c_id,
-                   CAST(sum((vx.x - c.x) * (vx.x - c.x)) AS BIGINT) AS d2
-            FROM vx JOIN c{_KM_ROUNDS} c ON vx.pos = c.pos
-            GROUP BY vx.vec_id, c.c_id
-        ),
-        afin AS (
-            SELECT vec_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM dfin
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM dfin WHERE vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= {_KM_NPROBE}
-        ),
-        cand AS (
-            SELECT p.q_id, m.vec_id AS n_id
-            FROM probes p
-            JOIN afin m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-        ),
-        scoredk AS (
-            SELECT c.q_id, c.n_id,
-                   CAST(sum((qx.x - nx.x) * (qx.x - nx.x)) AS BIGINT) AS d2
-            FROM cand c
-            JOIN vx qx ON qx.vec_id = c.q_id
-            JOIN vx nx ON nx.vec_id = c.n_id AND nx.pos = qx.pos
-            GROUP BY c.q_id, c.n_id
-        )
-        SELECT q_id, n_id, d2 FROM (
-            SELECT q_id, n_id, d2,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY d2, n_id) AS rn
-            FROM scoredk
-        ) WHERE rn <= {_IVF_K}
-    """))
-    return "".join(parts)
-
-
 @register(
     "ivf_store_retrain",
     oracle=_retrain_oracle(),
@@ -2618,14 +2230,6 @@ def ivf_store_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned to probed clusters of the current generation ∪
     tail.  Old generations/batches become GC-able the moment the
     manifest stops referencing them."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-        _KM_NPROBE,
-        _KM_ROUNDS,
-    )
-
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store, built = _session_store_dir(spark, sf_dir, "retrainq")
     if not built:
@@ -2846,7 +2450,6 @@ def probe_postings_bm25(
     from pyspark.sql import Window as W  # noqa: F811 — batch scope
 
     from kcidb_spark.queries.pipeline import _norm_text
-    from kcidb_spark.queries.ranking import _BM25_SCALE, _BM25_TERM_MICRO
 
     sess = batch_df.sparkSession
     man = read_serve_manifest(store)
@@ -2951,10 +2554,7 @@ def probe_postings_bm25(
         .join(F.broadcast(dft), on="w")
         .crossJoin(F.broadcast(tot))
     )
-    term_micro = _BM25_TERM_MICRO.format(
-        N="n", df="df", tf="tf", S="s", len="len",
-        scale=_BM25_SCALE,
-    )
+    term_micro = bm25_term_micro("n", "df", "tf", "s", "len")
     w_rank = W.partitionBy("q_id").orderBy(
         F.desc("score_micro"), F.asc("n_id")
     )
@@ -2972,95 +2572,6 @@ def probe_postings_bm25(
             "q_id", "n_id", "score_micro", "rk",
         )
     )
-
-
-def _t23_oracle() -> str:
-    """Batch replay of the interleaved lexical serve: probe round r
-    (fired after ingest batch r committed) scores BM25 with EVERY
-    statistic — df, N, S — computed over exactly the documents of
-    batches 0..r (the md5-prefix groups), in the certified micro-bit
-    arithmetic of bm25_topk."""
-    from kcidb_spark.queries.pipeline import _NORM_SQL
-    from kcidb_spark.queries.ranking import (
-        _BM25_K,
-        _BM25_QUERIES,
-        _BM25_SCALE,
-        _BM25_TERM_MICRO,
-    )
-
-    groups = " ".join(
-        f"WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN "
-        f"({', '.join(repr(c) for c in chars)}) THEN {i}"
-        for i, chars in enumerate(_T21_RANGES[:-1])
-    )
-    term_micro = _BM25_TERM_MICRO.format(
-        N="tot.n", df="dft.df", tf="v.tf", S="tot.s", len="dlen.len",
-        scale=_BM25_SCALE,
-    )
-    return dedent(f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
-        ),
-        tf AS (
-            SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-            FROM toks GROUP BY doc_id, w
-        ),
-        dlen AS (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM tf
-            GROUP BY doc_id
-        ),
-        grp AS (
-            SELECT doc_id,
-                   CASE {groups} ELSE {len(_T21_RANGES) - 1} END AS b
-            FROM documents
-        ),
-        rounds AS (
-            SELECT unnest(generate_series(0, {len(_T21_RANGES) - 1}))
-                   AS probe_round
-        ),
-        vis AS (
-            SELECT r.probe_round, t.doc_id, t.w, t.tf
-            FROM rounds r
-            JOIN grp g ON g.b <= r.probe_round
-            JOIN tf t ON t.doc_id = g.doc_id
-        ),
-        dft AS (
-            SELECT probe_round, w, CAST(count(*) AS BIGINT) AS df
-            FROM vis GROUP BY probe_round, w
-        ),
-        tot AS (
-            SELECT r.probe_round,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(d.len) AS BIGINT) AS s
-            FROM rounds r
-            JOIN grp g ON g.b <= r.probe_round
-            JOIN dlen d ON d.doc_id = g.doc_id
-            GROUP BY r.probe_round
-        ),
-        qterms AS (
-            SELECT DISTINCT doc_id AS q_id, w FROM toks
-            WHERE doc_id < {_BM25_QUERIES}
-        )
-        SELECT probe_round, q_id, n_id, score_micro, rk FROM (
-            SELECT probe_round, q_id, n_id, score_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY probe_round, q_id
-                       ORDER BY score_micro DESC, n_id
-                   ) AS BIGINT) AS rk
-            FROM (
-                SELECT v.probe_round, q.q_id, v.doc_id AS n_id,
-                       CAST(sum({term_micro}) AS BIGINT) AS score_micro
-                FROM qterms q
-                JOIN vis v ON v.w = q.w AND v.doc_id <> q.q_id
-                JOIN dft ON dft.w = v.w
-                       AND dft.probe_round = v.probe_round
-                JOIN dlen ON dlen.doc_id = v.doc_id
-                JOIN tot ON tot.probe_round = v.probe_round
-                GROUP BY v.probe_round, q.q_id, v.doc_id
-            )
-        ) WHERE rk <= {_BM25_K}
-    """)
 
 
 @register(
@@ -3091,8 +2602,6 @@ def t23_stream_postings_serve(
     manifest is ONE tiny file per transaction — identical discipline,
     and identical code (publish_visibility), as the vector store, so
     the two can share a store (hybrid_serve_as_of)."""
-    from kcidb_spark.queries.ranking import _BM25_K, _BM25_QUERIES
-
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
@@ -3109,148 +2618,6 @@ def t23_stream_postings_serve(
 # ---------------------------------------------------------------------------
 # Hybrid serving: BOTH retrieval legs under ONE manifest
 # ---------------------------------------------------------------------------
-
-_HYB_LEG_K = 10      # per-leg shortlist depth (hybrid_rrf_topk's)
-_HYB_FINAL_K = 5     # fused top-k
-_HYB_QUERIES = 5     # doc_id/vec_id < 5 — the standard workload
-
-
-def _hybrid_serve_oracle() -> str:
-    """Batch replay of the hybrid probe at watermark 1: the lexical
-    leg is bm25_topk restricted to the documents of ingest groups 0-1
-    (statistics included), the semantic leg is the nprobe-2 IVF probe
-    restricted to the same groups' vectors (the ann_probe_as_of
-    visibility rule), fused by the certified integer-exact RRF."""
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-    from kcidb_spark.queries.pipeline import _NORM_SQL
-    from kcidb_spark.queries.ranking import (
-        _BM25_SCALE,
-        _BM25_TERM_MICRO,
-        _RRF_C,
-    )
-
-    visible = "', '".join(_T21_RANGES[0] + _T21_RANGES[1])
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    cos_v_cv = cos.format(a="v", b="cv")
-    cos_qv_nv = cos.format(a="p.qv", b="m.v")
-    term_micro = _BM25_TERM_MICRO.format(
-        N="tot.n", df="dft.df", tf="tf.tf", S="tot.s", len="dlen.len",
-        scale=_BM25_SCALE,
-    )
-    rrf = (
-        f"CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN"
-        f" CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)"
-        f" / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))"
-        f" WHEN r_lex IS NOT NULL THEN"
-        f" CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)"
-        f" ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem) END"
-    )
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id, v AS qv FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_HYB_QUERIES}
-            ) WHERE rn <= 2
-        ),
-        sem AS (
-            SELECT q_id, n_id,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id ORDER BY sim DESC, n_id
-                   ) AS BIGINT) AS r_sem
-            FROM (
-                SELECT DISTINCT p.q_id, m.vec_id AS n_id,
-                       {cos_qv_nv} AS sim
-                FROM probes p
-                JOIN assign m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-                 AND substr(md5(CAST(m.vec_id AS VARCHAR)), 1, 1)
-                     IN ('{visible}')
-            ) QUALIFY r_sem <= {_HYB_LEG_K}
-        ),
-        toks AS (
-            SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
-        ),
-        vtf AS (
-            SELECT t.doc_id, t.w, CAST(count(*) AS BIGINT) AS tf
-            FROM toks t
-            WHERE substr(md5(CAST(t.doc_id AS VARCHAR)), 1, 1)
-                  IN ('{visible}')
-            GROUP BY t.doc_id, t.w
-        ),
-        dlen AS (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM vtf
-            GROUP BY doc_id
-        ),
-        dft AS (
-            SELECT w, CAST(count(*) AS BIGINT) AS df FROM vtf GROUP BY w
-        ),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(len) AS BIGINT) AS s
-            FROM dlen
-        ),
-        qterms AS (
-            SELECT DISTINCT doc_id AS q_id, w FROM toks
-            WHERE doc_id < {_HYB_QUERIES}
-        ),
-        lex AS (
-            SELECT q_id, n_id,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY score_micro DESC, n_id
-                   ) AS BIGINT) AS r_lex
-            FROM (
-                SELECT q.q_id, tf.doc_id AS n_id,
-                       CAST(sum({term_micro}) AS BIGINT) AS score_micro
-                FROM qterms q
-                JOIN vtf tf ON tf.w = q.w AND tf.doc_id <> q.q_id
-                JOIN dft ON dft.w = tf.w
-                JOIN dlen ON dlen.doc_id = tf.doc_id
-                CROSS JOIN tot
-                GROUP BY q.q_id, tf.doc_id
-            ) QUALIFY r_lex <= {_HYB_LEG_K}
-        )
-        SELECT q_id, n_id, r_lex, r_sem, rrf, rk FROM (
-            SELECT COALESCE(lex.q_id, sem.q_id) AS q_id,
-                   COALESCE(lex.n_id, sem.n_id) AS n_id,
-                   lex.r_lex, sem.r_sem,
-                   {rrf} AS rrf,
-                   CAST(row_number() OVER (
-                       PARTITION BY COALESCE(lex.q_id, sem.q_id)
-                       ORDER BY {rrf} DESC,
-                                COALESCE(lex.n_id, sem.n_id)
-                   ) AS BIGINT) AS rk
-            FROM lex FULL JOIN sem
-              ON lex.q_id = sem.q_id AND lex.n_id = sem.n_id
-        ) WHERE rk <= {_HYB_FINAL_K}
-    """)
-
 
 def _hybrid_session_store(spark: SparkSession, sf_dir: str) -> tuple:
     """(docs, vecs, cents, store): the session-keyed hybrid store both
@@ -3294,7 +2661,7 @@ def _hybrid_topk(
 
     from pyspark.sql import Window as W  # noqa: F811 — batch scope
 
-    from kcidb_spark.queries.ranking import _RRF_C
+    from kcidb_spark.queries.ranking import rrf_fuse
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_lex = pool.submit(
@@ -3313,22 +2680,7 @@ def _hybrid_topk(
         .withColumn("r_sem", F.row_number().over(w_sem).cast("long"))
         .select("q_id", "n_id", "r_sem")
     )
-    rrf = (
-        f"CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN"
-        f" CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)"
-        f" / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))"
-        f" WHEN r_lex IS NOT NULL THEN"
-        f" CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)"
-        f" ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem) END"
-    )
-    w_rrf = W.partitionBy("q_id").orderBy(F.desc("rrf"), F.asc("n_id"))
-    return (
-        lex.join(sem, on=["q_id", "n_id"], how="full_outer")
-        .withColumn("rrf", F.expr(rrf))
-        .withColumn("rk", F.row_number().over(w_rrf).cast("long"))
-        .filter(F.col("rk") <= _HYB_FINAL_K)
-        .select("q_id", "n_id", "r_lex", "r_sem", "rrf", "rk")
-    )
+    return rrf_fuse(lex, sem, _HYB_FINAL_K)
 
 
 @register(
@@ -3481,74 +2833,6 @@ def postings_store_gc(store: str) -> list:
     return lsm.gc(store, "postings")
 
 
-def _bm25_deletes_oracle() -> str:
-    """bm25_topk with the tombstoned ~25% of documents (md5 second
-    hex char 0-3 — the ann_serve_with_deletes set, lexical edition)
-    excluded from BOTH the candidate side and the statistics: the
-    entry compacts after the delete, and compaction recomputes df/N/S
-    from surviving postings, so the oracle is simply BM25 over the
-    surviving corpus.  Query docs are the probe workload's and may
-    themselves be deleted (a deleted doc can still ask)."""
-    from kcidb_spark.queries.pipeline import _NORM_SQL
-    from kcidb_spark.queries.ranking import (
-        _BM25_K,
-        _BM25_QUERIES,
-        _BM25_SCALE,
-        _BM25_TERM_MICRO,
-    )
-
-    term_micro = _BM25_TERM_MICRO.format(
-        N="tot.n", df="dft.df", tf="tf.tf", S="tot.s", len="dlen.len",
-        scale=_BM25_SCALE,
-    )
-    return dedent(f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
-        ),
-        tf AS (
-            SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-            FROM toks
-            WHERE substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)
-                  NOT IN ('0', '1', '2', '3')
-            GROUP BY doc_id, w
-        ),
-        dlen AS (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM tf
-            GROUP BY doc_id
-        ),
-        dft AS (
-            SELECT w, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY w
-        ),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(len) AS BIGINT) AS s
-            FROM dlen
-        ),
-        qterms AS (
-            SELECT DISTINCT doc_id AS q_id, w FROM toks
-            WHERE doc_id < {_BM25_QUERIES}
-        )
-        SELECT q_id, n_id, score_micro, rk FROM (
-            SELECT q_id, n_id, score_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY score_micro DESC, n_id
-                   ) AS BIGINT) AS rk
-            FROM (
-                SELECT q.q_id, tf.doc_id AS n_id,
-                       CAST(sum({term_micro}) AS BIGINT) AS score_micro
-                FROM qterms q
-                JOIN tf ON tf.w = q.w AND tf.doc_id <> q.q_id
-                JOIN dft ON dft.w = tf.w
-                JOIN dlen ON dlen.doc_id = tf.doc_id
-                CROSS JOIN tot
-                GROUP BY q.q_id, tf.doc_id
-            )
-        ) WHERE rk <= {_BM25_K}
-    """)
-
-
 @register(
     "bm25_serve_with_deletes",
     oracle=_bm25_deletes_oracle(),
@@ -3571,8 +2855,6 @@ def bm25_serve_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     transaction rides the unified manifest (publish_visibility), so
     crash windows are the standard ones pinned in
     tests/test_postings_serve.py."""
-    from kcidb_spark.queries.ranking import _BM25_K, _BM25_QUERIES
-
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
@@ -3592,161 +2874,6 @@ def bm25_serve_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_postings_bm25(
         docs.filter(F.col("doc_id") < _BM25_QUERIES), store, _BM25_K
     ).select("q_id", "n_id", "score_micro", "rk")
-
-
-def _t24_oracle() -> str:
-    """Batch replay of retrain-while-serving: probe round 0 ranks
-    batch-0 members under the STATIC generation-0 centroids; the
-    retrain fires after ingest batch 1, so rounds 1 and 2 rank the
-    re-encoded visible members (groups ≤ r) under the Lloyd-trained
-    centroids — training restricted to the bounded sample OF THE
-    MEMBERS VISIBLE AT RETRAIN TIME (groups 0-1), which is what makes
-    this the online verb and not a batch rebuild."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-        _KM_NPROBE,
-        _KM_ROUNDS,
-        _KM_SCALE,
-    )
-
-    sample = _RETRAIN_SAMPLE_SQL.format(k=_IVF_CENTROIDS)
-    groups = " ".join(
-        f"WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN "
-        f"({', '.join(repr(c) for c in chars)}) THEN {i}"
-        for i, chars in enumerate(_T21_RANGES[:-1])
-    )
-    parts = [dedent(f"""
-        WITH v AS (
-            SELECT vec_id,
-                   list_transform(CAST(embedding AS DOUBLE[]),
-                                  x -> CAST(floor((x + 1.0) * {_KM_SCALE})
-                                            AS BIGINT)) AS q
-            FROM embeddings
-        ),
-        grp AS (
-            SELECT vec_id,
-                   CASE {groups} ELSE {len(_T21_RANGES) - 1} END AS b
-            FROM v
-        ),
-        vx AS (
-            SELECT v.vec_id, g.b,
-                   unnest(generate_series(1, length(q))) AS pos,
-                   unnest(q) AS x
-            FROM v JOIN grp g ON g.vec_id = v.vec_id
-        ),
-        cs AS (
-            SELECT vec_id AS c_id, pos, x FROM vx
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        sx AS (
-            SELECT * FROM vx WHERE ({sample}) AND b <= 1
-        ),
-        c0 AS (
-            SELECT vec_id AS c_id, pos, x FROM sx
-            WHERE vec_id < {_IVF_CENTROIDS}
-        )""")]
-    for r in range(1, _KM_ROUNDS + 1):
-        parts.append(dedent(f""",
-        d{r} AS (
-            SELECT sx.vec_id, c.c_id,
-                   CAST(sum((sx.x - c.x) * (sx.x - c.x)) AS BIGINT) AS d2
-            FROM sx JOIN c{r - 1} c ON sx.pos = c.pos
-            GROUP BY sx.vec_id, c.c_id
-        ),
-        a{r} AS (
-            SELECT vec_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM d{r}
-            ) WHERE rn = 1
-        ),
-        c{r} AS (
-            SELECT a.c_id, sx.pos,
-                   CAST(sum(sx.x) // count(*) AS BIGINT) AS x
-            FROM a{r} a JOIN sx ON a.vec_id = sx.vec_id
-            GROUP BY a.c_id, sx.pos
-        )"""))
-    parts.append(dedent(f""",
-        ds AS (
-            SELECT vx.vec_id, vx.b, c.c_id,
-                   CAST(sum((vx.x - c.x) * (vx.x - c.x)) AS BIGINT) AS d2
-            FROM vx JOIN cs c ON vx.pos = c.pos
-            GROUP BY vx.vec_id, vx.b, c.c_id
-        ),
-        afin_s AS (
-            SELECT vec_id, b, c_id FROM (
-                SELECT vec_id, b, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM ds
-            ) WHERE rn = 1
-        ),
-        probes_s AS (
-            SELECT vec_id AS q_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM ds WHERE vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= {_KM_NPROBE}
-        ),
-        dt AS (
-            SELECT vx.vec_id, vx.b, c.c_id,
-                   CAST(sum((vx.x - c.x) * (vx.x - c.x)) AS BIGINT) AS d2
-            FROM vx JOIN c{_KM_ROUNDS} c ON vx.pos = c.pos
-            GROUP BY vx.vec_id, vx.b, c.c_id
-        ),
-        afin_t AS (
-            SELECT vec_id, b, c_id FROM (
-                SELECT vec_id, b, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM dt
-            ) WHERE rn = 1
-        ),
-        probes_t AS (
-            SELECT vec_id AS q_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM dt WHERE vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= {_KM_NPROBE}
-        ),
-        rounds AS (
-            SELECT unnest(generate_series(1, {len(_T21_RANGES) - 1}))
-                   AS probe_round
-        ),
-        cand AS (
-            SELECT CAST(0 AS BIGINT) AS probe_round,
-                   p.q_id, m.vec_id AS n_id
-            FROM probes_s p
-            JOIN afin_s m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-             AND m.b = 0
-            UNION ALL
-            SELECT r.probe_round, p.q_id, m.vec_id AS n_id
-            FROM rounds r
-            CROSS JOIN probes_t p
-            JOIN afin_t m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-             AND m.b <= r.probe_round
-        ),
-        scoredk AS (
-            SELECT c.probe_round, c.q_id, c.n_id,
-                   CAST(sum((qx.x - nx.x) * (qx.x - nx.x)) AS BIGINT) AS d2
-            FROM cand c
-            JOIN vx qx ON qx.vec_id = c.q_id
-            JOIN vx nx ON nx.vec_id = c.n_id AND nx.pos = qx.pos
-            GROUP BY c.probe_round, c.q_id, c.n_id
-        )
-        SELECT probe_round, q_id, n_id, d2 FROM (
-            SELECT probe_round, q_id, n_id, d2,
-                   row_number() OVER (PARTITION BY probe_round, q_id
-                                      ORDER BY d2, n_id) AS rn
-            FROM scoredk
-        ) WHERE rn <= {_IVF_K}
-    """))
-    return "".join(parts)
 
 
 @register(
@@ -3778,14 +2905,6 @@ def t24_stream_retrain_while_serving(
     manifest rename per transaction); the retrain epoch pays one
     visible-store scan + re-encode — the compaction cost class,
     in-stream here only so the read path crosses a live swap."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_K,
-        _IVF_QUERIES,
-        _KM_NPROBE,
-        _KM_ROUNDS,
-    )
-
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store = _scratch_dir("t24_store")
     init_q_store(store, _lowest_q_cents(vecs_q))
@@ -3809,180 +2928,6 @@ def t24_stream_retrain_while_serving(
         _IVF_QUERIES, "t24q", store, ingest, probe,
         ("probe_round", "q_id", "n_id", "d2"),
     )
-
-
-def _t25_oracle() -> str:
-    """Batch replay of ONLINE hybrid serving: probe round r fuses a
-    BM25 leg computed over exactly the documents of batches 0..r
-    (statistics included — the _t23_oracle visibility rule) with an
-    IVF nprobe-2 leg over exactly the vectors of batches 0..r (the
-    _t21_oracle rule), by the certified integer-exact RRF."""
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-    from kcidb_spark.queries.pipeline import _NORM_SQL
-    from kcidb_spark.queries.ranking import (
-        _BM25_SCALE,
-        _BM25_TERM_MICRO,
-        _RRF_C,
-    )
-
-    groups_doc = " ".join(
-        f"WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN "
-        f"({', '.join(repr(c) for c in chars)}) THEN {i}"
-        for i, chars in enumerate(_T21_RANGES[:-1])
-    )
-    groups_vec = " ".join(
-        f"WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN "
-        f"({', '.join(repr(c) for c in chars)}) THEN {i}"
-        for i, chars in enumerate(_T21_RANGES[:-1])
-    )
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    cos_v_cv = cos.format(a="v", b="cv")
-    cos_qv_nv = cos.format(a="p.qv", b="m.v")
-    term_micro = _BM25_TERM_MICRO.format(
-        N="tot.n", df="dft.df", tf="v.tf", S="tot.s", len="dlen.len",
-        scale=_BM25_SCALE,
-    )
-    rrf = (
-        f"CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN"
-        f" CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)"
-        f" / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))"
-        f" WHEN r_lex IS NOT NULL THEN"
-        f" CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)"
-        f" ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem) END"
-    )
-    last = len(_T21_RANGES) - 1
-    return dedent(f"""
-        WITH rounds AS (
-            SELECT unnest(generate_series(0, {last})) AS probe_round
-        ),
-        vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        vgrp AS (
-            SELECT vec_id, CASE {groups_vec} ELSE {last} END AS b
-            FROM vecs
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id, v AS qv FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_HYB_QUERIES}
-            ) WHERE rn <= 2
-        ),
-        sem AS (
-            SELECT probe_round, q_id, n_id,
-                   CAST(row_number() OVER (
-                       PARTITION BY probe_round, q_id
-                       ORDER BY sim DESC, n_id
-                   ) AS BIGINT) AS r_sem
-            FROM (
-                SELECT DISTINCT r.probe_round, p.q_id,
-                       m.vec_id AS n_id, {cos_qv_nv} AS sim
-                FROM rounds r
-                CROSS JOIN probes p
-                JOIN assign m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-                JOIN vgrp g ON g.vec_id = m.vec_id
-                 AND g.b <= r.probe_round
-            ) QUALIFY r_sem <= {_HYB_LEG_K}
-        ),
-        toks AS (
-            SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
-        ),
-        tf AS (
-            SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-            FROM toks GROUP BY doc_id, w
-        ),
-        dlen AS (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM tf
-            GROUP BY doc_id
-        ),
-        dgrp AS (
-            SELECT doc_id, CASE {groups_doc} ELSE {last} END AS b
-            FROM documents
-        ),
-        vis AS (
-            SELECT r.probe_round, t.doc_id, t.w, t.tf
-            FROM rounds r
-            JOIN dgrp g ON g.b <= r.probe_round
-            JOIN tf t ON t.doc_id = g.doc_id
-        ),
-        dft AS (
-            SELECT probe_round, w, CAST(count(*) AS BIGINT) AS df
-            FROM vis GROUP BY probe_round, w
-        ),
-        tot AS (
-            SELECT r.probe_round,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(d.len) AS BIGINT) AS s
-            FROM rounds r
-            JOIN dgrp g ON g.b <= r.probe_round
-            JOIN dlen d ON d.doc_id = g.doc_id
-            GROUP BY r.probe_round
-        ),
-        qterms AS (
-            SELECT DISTINCT doc_id AS q_id, w FROM toks
-            WHERE doc_id < {_HYB_QUERIES}
-        ),
-        lex AS (
-            SELECT probe_round, q_id, n_id,
-                   CAST(row_number() OVER (
-                       PARTITION BY probe_round, q_id
-                       ORDER BY score_micro DESC, n_id
-                   ) AS BIGINT) AS r_lex
-            FROM (
-                SELECT v.probe_round, q.q_id, v.doc_id AS n_id,
-                       CAST(sum({term_micro}) AS BIGINT) AS score_micro
-                FROM qterms q
-                JOIN vis v ON v.w = q.w AND v.doc_id <> q.q_id
-                JOIN dft ON dft.w = v.w
-                       AND dft.probe_round = v.probe_round
-                JOIN dlen ON dlen.doc_id = v.doc_id
-                JOIN tot ON tot.probe_round = v.probe_round
-                GROUP BY v.probe_round, q.q_id, v.doc_id
-            ) QUALIFY r_lex <= {_HYB_LEG_K}
-        )
-        SELECT probe_round, q_id, n_id, r_lex, r_sem, rrf, rk FROM (
-            SELECT COALESCE(lex.probe_round, sem.probe_round)
-                       AS probe_round,
-                   COALESCE(lex.q_id, sem.q_id) AS q_id,
-                   COALESCE(lex.n_id, sem.n_id) AS n_id,
-                   lex.r_lex, sem.r_sem,
-                   {rrf} AS rrf,
-                   CAST(row_number() OVER (
-                       PARTITION BY COALESCE(lex.probe_round,
-                                             sem.probe_round),
-                                    COALESCE(lex.q_id, sem.q_id)
-                       ORDER BY {rrf} DESC,
-                                COALESCE(lex.n_id, sem.n_id)
-                   ) AS BIGINT) AS rk
-            FROM lex FULL JOIN sem
-              ON lex.probe_round = sem.probe_round
-             AND lex.q_id = sem.q_id AND lex.n_id = sem.n_id
-        ) WHERE rk <= {_HYB_FINAL_K}
-    """)
 
 
 @register(
@@ -4212,8 +3157,6 @@ def _opq_quantize(df: DataFrame, rot: list, x_col: str = "x") -> DataFrame:
     FAISS's pre-transform chain).  All other columns ride through;
     ``x_col`` is replaced by ``q array<bigint>``."""
     from kcidb_spark.operators.opq import rotate
-    from kcidb_spark.queries.advanced import _KM_SCALE
-
     return (
         rotate(df, rot, x_col, "_xr")
         .withColumn(
@@ -4266,22 +3209,6 @@ def _pqc_visible_cold(
     ).select("vec_id", col, "m_batch")
 
 
-def _pq_route_driver(
-    qrows: list, cents: list, books: list, n_subs: int, subdim: int,
-    nprobe: int,
-) -> tuple[list, list]:
-    """Driver-side coarse routing + ADC distance tables over the
-    driver-held model (operators/ivf.py route_int_driver /
-    pq_dt_driver) — exact integer arithmetic, control-plane-sized
-    output (|queries|·nprobe pairs, |queries|·S·M table rows)."""
-    from kcidb_spark.operators.ivf import pq_dt_driver, route_int_driver
-
-    return (
-        route_int_driver(qrows, cents, nprobe),
-        pq_dt_driver(qrows, books, n_subs, subdim),
-    )
-
-
 def probe_pq_topk(
     batch_df: DataFrame,
     store: str,
@@ -4311,6 +3238,8 @@ def probe_pq_topk(
     model, never a mixed pair; past the horizon it raises."""
     from pyspark.sql import Window as W  # noqa: F811 — batch scope
 
+    from kcidb_spark.operators.ivf import pq_dt_driver, route_int_driver
+
     sess = batch_df.sparkSession
     snap, wm = lsm.snapshot(read_serve_manifest(store), as_of, "vec")
     if "centroids" not in snap:
@@ -4339,9 +3268,8 @@ def probe_pq_topk(
             grid.select("vec_id", "q").collect(), "probe_pq_topk"
         )
     ]
-    probe_pairs, dtrows = _pq_route_driver(
-        qrows, cents, books, n_subs, subdim, nprobe
-    )
+    probe_pairs = route_int_driver(qrows, cents, nprobe)
+    dtrows = pq_dt_driver(qrows, books, n_subs, subdim)
     probed = sorted({c for _, c in probe_pairs})
     q_probe = local_df(sess, probe_pairs, "q_id long, c_id bigint")
     dt = local_df(
@@ -4449,7 +3377,7 @@ def retrain_pq_store_txn(
             # model keeps serving (the born-empty probes contract).
             return
         # The certified integer trainers initialize from ids < k (the
-        # oracle-replayable init rule; _RETRAIN_SAMPLE_SQL guarantees
+        # oracle-replayable init rule; oracle_sql._RETRAIN_SAMPLE guarantees
         # those ids are sampled WHEN THEY EXIST).  A non-empty corpus
         # without them yields an empty model — publishing it would
         # brick the store silently (probes route against zero
@@ -4489,208 +3417,7 @@ def retrain_pq_store_txn(
     )
 
 
-def _pqc_common_sql(trained: bool, v_cte: str | None = None) -> str:
-    """Shared oracle CTE chain for the PQ store entries: integer grid,
-    coarse model, per-subspace books, corpus codes, query distance
-    tables, probes — ending ready for an ``adc`` consumer.  With
-    ``trained`` False the model is generation-0 static (lowest-id
-    vectors / their subvectors — exactly init_pq_store's input); True
-    replays BOTH trainers on the deterministic retrain sample (the
-    _retrain_oracle coarse chain + the _ivf_pq_kmeans_oracle book
-    chain, each restricted to the sample).  ``v_cte`` swaps the
-    default grid-quantize header for a custom chain ending in
-    ``v(vec_id, q),`` — the rotated store's hook (same contract as
-    advanced._ivf_pq_kmeans_oracle's)."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _IVF_QUERIES,
-        _KM_NPROBE,
-        _KM_ROUNDS,
-        _KM_SCALE,
-        _PQK_CODES,
-        _PQK_SUBDIM,
-    )
-
-    sample = _RETRAIN_SAMPLE_SQL.format(k=_IVF_CENTROIDS)
-    head = v_cte if v_cte is not None else dedent(f"""
-        WITH v AS (
-            SELECT vec_id,
-                   list_transform(CAST(embedding AS DOUBLE[]),
-                                  x -> CAST(floor((x + 1.0) * {_KM_SCALE})
-                                            AS BIGINT)) AS q
-            FROM embeddings
-        ),""")
-    parts = [head, dedent(f"""
-        vx AS (
-            SELECT vec_id,
-                   unnest(generate_series(1, length(q))) AS pos,
-                   unnest(q) AS x
-            FROM v
-        ),
-        sx AS (
-            SELECT vec_id,
-                   CAST((pos - 1) // {_PQK_SUBDIM} AS BIGINT) AS s,
-                   CAST((pos - 1) % {_PQK_SUBDIM} + 1 AS BIGINT) AS spos,
-                   x
-            FROM vx
-        )""")]
-    if not trained:
-        parts.append(dedent(f""",
-        cfin AS (
-            SELECT vec_id AS c_id, pos, x FROM vx
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        bfin AS (
-            SELECT s, vec_id AS m, spos, x FROM sx
-            WHERE vec_id < {_PQK_CODES}
-        )"""))
-    else:
-        parts.append(dedent(f""",
-        tvx AS (SELECT * FROM vx WHERE {sample}),
-        tsx AS (SELECT * FROM sx WHERE {sample}),
-        c0 AS (
-            SELECT vec_id AS c_id, pos, x FROM tvx
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        b0 AS (
-            SELECT s, vec_id AS m, spos, x FROM tsx
-            WHERE vec_id < {_PQK_CODES}
-        )"""))
-        for r in range(1, _KM_ROUNDS + 1):
-            parts.append(dedent(f""",
-        cd{r} AS (
-            SELECT tvx.vec_id, c.c_id,
-                   CAST(sum((tvx.x - c.x) * (tvx.x - c.x)) AS BIGINT) AS d2
-            FROM tvx JOIN c{r - 1} c ON tvx.pos = c.pos
-            GROUP BY tvx.vec_id, c.c_id
-        ),
-        ca{r} AS (
-            SELECT vec_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM cd{r}
-            ) WHERE rn = 1
-        ),
-        c{r} AS (
-            SELECT a.c_id, tvx.pos,
-                   CAST(sum(tvx.x) // count(*) AS BIGINT) AS x
-            FROM ca{r} a JOIN tvx ON a.vec_id = tvx.vec_id
-            GROUP BY a.c_id, tvx.pos
-        ),
-        bd{r} AS (
-            SELECT tsx.vec_id, tsx.s, b.m,
-                   CAST(sum((tsx.x - b.x) * (tsx.x - b.x)) AS BIGINT) AS d2
-            FROM tsx JOIN b{r - 1} b
-              ON tsx.s = b.s AND tsx.spos = b.spos
-            GROUP BY tsx.vec_id, tsx.s, b.m
-        ),
-        ba{r} AS (
-            SELECT vec_id, s, m FROM (
-                SELECT vec_id, s, m,
-                       row_number() OVER (PARTITION BY vec_id, s
-                                          ORDER BY d2, m) AS rn
-                FROM bd{r}
-            ) WHERE rn = 1
-        ),
-        b{r} AS (
-            SELECT a.s, a.m, tsx.spos,
-                   CAST(sum(tsx.x) // count(*) AS BIGINT) AS x
-            FROM ba{r} a
-            JOIN tsx ON a.vec_id = tsx.vec_id AND a.s = tsx.s
-            GROUP BY a.s, a.m, tsx.spos
-        )"""))
-        parts.append(dedent(f""",
-        cfin AS (SELECT * FROM c{_KM_ROUNDS}),
-        bfin AS (SELECT * FROM b{_KM_ROUNDS})"""))
-    parts.append(dedent(f""",
-        dfin AS (
-            SELECT vx.vec_id, c.c_id,
-                   CAST(sum((vx.x - c.x) * (vx.x - c.x)) AS BIGINT) AS d2
-            FROM vx JOIN cfin c ON vx.pos = c.pos
-            GROUP BY vx.vec_id, c.c_id
-        ),
-        afin AS (
-            SELECT vec_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM dfin
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id FROM (
-                SELECT vec_id, c_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY d2, c_id) AS rn
-                FROM dfin WHERE vec_id < {_IVF_QUERIES}
-            ) WHERE rn <= {_KM_NPROBE}
-        ),
-        pefin AS (
-            SELECT sx.vec_id, sx.s, b.m,
-                   CAST(sum((sx.x - b.x) * (sx.x - b.x)) AS BIGINT) AS d2
-            FROM sx JOIN bfin b ON sx.s = b.s AND sx.spos = b.spos
-            GROUP BY sx.vec_id, sx.s, b.m
-        ),
-        codes AS (
-            SELECT vec_id, s, m FROM (
-                SELECT vec_id, s, m,
-                       row_number() OVER (PARTITION BY vec_id, s
-                                          ORDER BY d2, m) AS rn
-                FROM pefin
-            ) WHERE rn = 1
-        ),
-        dt AS (
-            SELECT vec_id AS q_id, s, m, d2 AS d FROM pefin
-            WHERE vec_id < {_IVF_QUERIES}
-        )"""))
-    return "".join(parts)
-
-
-def _pqc_serve_oracle(
-    trained: bool,
-    v_cte: str | None = None,
-    wm: int | None = None,
-    member_pred: str = "",
-) -> str:
-    """Unrolled encode→probe replay of the PQ store at full
-    visibility: the model chain (static or sample-trained), then the
-    probed-cluster ADC top-k with the committed watermark as
-    probe_round.  ``v_cte`` passes through to the common chain (the
-    rotated store's hook); ``wm`` overrides the probe_round literal
-    (entries whose last transaction is a delete advance past the
-    ingest batches); ``member_pred`` is ANDed into the candidate join
-    (the deletes entry excludes the tombstoned slice from the MEMBER
-    side only — a deleted vector can still ask queries)."""
-    from kcidb_spark.queries.advanced import _IVF_K
-
-    if wm is None:
-        wm = len(_T21_RANGES) - 1
-    return _pqc_common_sql(trained, v_cte=v_cte) + dedent(f""",
-        adc AS (
-            SELECT p.q_id, cd.vec_id AS n_id,
-                   CAST(sum(dt.d) AS BIGINT) AS adc_micro
-            FROM probes p
-            JOIN afin na ON na.c_id = p.c_id AND na.vec_id <> p.q_id
-                 {member_pred}
-            JOIN codes cd ON cd.vec_id = na.vec_id
-            JOIN dt ON dt.q_id = p.q_id AND dt.s = cd.s AND dt.m = cd.m
-            GROUP BY p.q_id, cd.vec_id
-        )
-        SELECT CAST({wm} AS BIGINT) AS probe_round,
-               q_id, n_id, adc_micro, rk FROM (
-            SELECT q_id, n_id, adc_micro,
-                   CAST(row_number() OVER (PARTITION BY q_id
-                                           ORDER BY adc_micro, n_id)
-                        AS BIGINT) AS rk
-            FROM adc
-        ) WHERE rk <= {_IVF_K}
-    """)
-
-
 def _pqc_vecs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kcidb_spark.queries.advanced import _KM_SCALE
-
     emb = table(spark, sf_dir, "embeddings", spread=True)
     return emb.select(
         "vec_id",
@@ -4705,8 +3432,6 @@ def _lowest_q_cents(vecs_q: DataFrame) -> list:
     """The integer stores' generation-0 routing table: the lowest
     ``_IVF_CENTROIDS`` vectors of ``vecs_q`` (vec_id, q) as sorted
     (c_id, q) — the init every trained entry starts from."""
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-
     return sorted(
         (int(r["vec_id"]), [int(x) for x in r["q"]])
         for r in vecs_q.filter(F.col("vec_id") < _IVF_CENTROIDS).collect()
@@ -4721,12 +3446,6 @@ def _pqc_static_model(
     starts from, so Lloyd's monotone-distortion property stays
     testable on the store."""
     from kcidb_spark.operators.ivf import subvectors
-    from kcidb_spark.queries.advanced import (
-        _PQK_CODES,
-        _PQK_SUBDIM,
-        _PQK_SUBS,
-    )
-
     cents = _lowest_q_cents(vecs_q)
     books = sorted(
         (int(r["s"]), int(r["id"]), [int(x) for x in r["q"]])
@@ -4748,7 +3467,7 @@ def _pqc_vecs_rot_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotation is a per-row projection — zero shuffle; everything
     downstream of ``(vec_id, q)`` is byte-compatible with the
     unrotated store."""
-    from kcidb_spark.queries.advanced import _KM_SCALE, _rot_expr
+    from kcidb_spark.queries.advanced import _rot_expr
 
     emb = table(spark, sf_dir, "embeddings", spread=True)
     layer2, layer1 = _rot_expr("_e0")
@@ -4780,14 +3499,6 @@ def _pqc_build_store(
     store ingests the Givens-rotated grid through the SAME
     transactions — rotation is upstream of the store by design, as in
     FAISS's index-factory pre-transform chain)."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_CENTROIDS,
-        _KM_ROUNDS,
-        _PQK_CODES,
-        _PQK_SUBDIM,
-        _PQK_SUBS,
-    )
-
     if vecs_q is None:
         vecs_q = _pqc_vecs_q(spark, sf_dir)
     store, built = _session_store_dir(spark, sf_dir, tag)
@@ -4828,8 +3539,6 @@ def ivfpq_store_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     FAISS's ~32× compression); probes move codes only, pruned on
     (batch_id ≤ wm, c_id ∈ probed) — both partition columns; the
     distance tables and routing are request-scale broadcasts."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES, _KM_NPROBE
-
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store = _pqc_build_store(spark, sf_dir, "pqserve", retrain=False)
     return probe_pq_topk(
@@ -4856,20 +3565,12 @@ def ivfpq_store_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted coarse + codebook Lloyd ({_KM_ROUNDS}-ish rounds), full
     corpus re-encode, probed-cluster ADC — the ivf_pq_kmeans_adc_topk
     theorem restricted to sample training, running against a STORE."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES, _KM_NPROBE
-
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store = _pqc_build_store(spark, sf_dir, "pqretrain", retrain=True)
     return probe_pq_topk(
         vecs_q.filter(F.col("vec_id") < _IVF_QUERIES),
         store, _IVF_K, nprobe=_KM_NPROBE,
     )
-
-
-def _pqc_rotated_oracle() -> str:
-    from kcidb_spark.queries.advanced import _rot_v_cte
-
-    return _pqc_serve_oracle(trained=False, v_cte=_rot_v_cte())
 
 
 @register(
@@ -4892,8 +3593,6 @@ def ivfpq_store_rotated_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     this fixed rotation, so the learned variant can only quantize
     better; it stays rows-only by nature (float Procrustes solves)
     while this entry keeps the serving path itself hash-green."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES, _KM_NPROBE
-
     vecs_rot = _pqc_vecs_rot_q(spark, sf_dir)
     store = _pqc_build_store(
         spark, sf_dir, "pqrotserve", retrain=False, vecs_q=vecs_rot
@@ -4902,51 +3601,6 @@ def ivfpq_store_rotated_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         vecs_rot.filter(F.col("vec_id") < _IVF_QUERIES),
         store, _IVF_K, nprobe=_KM_NPROBE,
     )
-
-
-def _t26_oracle() -> str:
-    """Batch replay of the interleaved compressed-domain serve: probe
-    round r (fired after ingest batch r committed) ADC-ranks, under
-    the STATIC generation-0 model, exactly the candidates of md5-
-    prefix groups 0..r — the _pqc_common_sql static chain with the
-    candidate set windowed by round."""
-    from kcidb_spark.queries.advanced import _IVF_K
-
-    groups = " ".join(
-        f"WHEN substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) IN "
-        f"({', '.join(repr(c) for c in chars)}) THEN {i}"
-        for i, chars in enumerate(_T21_RANGES[:-1])
-    )
-    n_rounds = len(_T21_RANGES)
-    return _pqc_common_sql(trained=False) + dedent(f""",
-        grp AS (
-            SELECT vec_id,
-                   CASE {groups} ELSE {n_rounds - 1} END AS g
-            FROM embeddings
-        ),
-        rounds AS (
-            SELECT unnest(generate_series(0, {n_rounds - 1})) AS r
-        ),
-        adc AS (
-            SELECT r.r AS probe_round, p.q_id, cd.vec_id AS n_id,
-                   CAST(sum(dt.d) AS BIGINT) AS adc_micro
-            FROM rounds r
-            JOIN probes p ON TRUE
-            JOIN afin na ON na.c_id = p.c_id AND na.vec_id <> p.q_id
-            JOIN grp g ON g.vec_id = na.vec_id AND g.g <= r.r
-            JOIN codes cd ON cd.vec_id = na.vec_id
-            JOIN dt ON dt.q_id = p.q_id AND dt.s = cd.s AND dt.m = cd.m
-            GROUP BY r.r, p.q_id, cd.vec_id
-        )
-        SELECT CAST(probe_round AS BIGINT) AS probe_round,
-               q_id, n_id, adc_micro, rk FROM (
-            SELECT probe_round, q_id, n_id, adc_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY probe_round, q_id
-                       ORDER BY adc_micro, n_id) AS BIGINT) AS rk
-            FROM adc
-        ) WHERE rk <= {_IVF_K}
-    """)
 
 
 @register(
@@ -4971,14 +3625,6 @@ def t26_stream_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed-cluster CODES (n_subs BIGINTs per candidate).  At 100 TB
     ingest and probe run as separate streams against the same
     manifest (SCALE.md's split-stream rehearsal)."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_K,
-        _IVF_QUERIES,
-        _KM_NPROBE,
-        _PQK_SUBDIM,
-        _PQK_SUBS,
-    )
-
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store = _scratch_dir("t26_store")
     cents, books = _pqc_static_model(spark, vecs_q)
@@ -4992,72 +3638,6 @@ def t26_stream_pq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda b, _r: probe_pq_topk(b, store, _IVF_K, nprobe=_KM_NPROBE),
         ("probe_round", "q_id", "n_id", "adc_micro", "rk"),
     )
-
-
-def _rebucket_oracle() -> str:
-    """BM25 over the full corpus with exact statistics — what the
-    post-migration probe must serve: rebucketing is internal routing
-    (a partition-layout change), so the oracle is the plain
-    full-visibility BM25 recompute with probe_round = the committed
-    watermark; any bucket-count dependence in the results would
-    hash-mismatch here."""
-    from kcidb_spark.queries.pipeline import _NORM_SQL
-    from kcidb_spark.queries.ranking import (
-        _BM25_K,
-        _BM25_QUERIES,
-        _BM25_SCALE,
-        _BM25_TERM_MICRO,
-    )
-
-    wm = len(_T21_RANGES) - 1
-    term_micro = _BM25_TERM_MICRO.format(
-        N="tot.n", df="dft.df", tf="tf.tf", S="tot.s", len="dlen.len",
-        scale=_BM25_SCALE,
-    )
-    return dedent(f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
-        ),
-        tf AS (
-            SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-            FROM toks GROUP BY doc_id, w
-        ),
-        dlen AS (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM tf
-            GROUP BY doc_id
-        ),
-        dft AS (
-            SELECT w, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY w
-        ),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(len) AS BIGINT) AS s
-            FROM dlen
-        ),
-        qterms AS (
-            SELECT DISTINCT doc_id AS q_id, w FROM toks
-            WHERE doc_id < {_BM25_QUERIES}
-        )
-        SELECT CAST({wm} AS BIGINT) AS probe_round,
-               q_id, n_id, score_micro, rk FROM (
-            SELECT q_id, n_id, score_micro,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY score_micro DESC, n_id
-                   ) AS BIGINT) AS rk
-            FROM (
-                SELECT q.q_id, tf.doc_id AS n_id,
-                       CAST(sum({term_micro}) AS BIGINT) AS score_micro
-                FROM qterms q
-                JOIN tf ON tf.w = q.w AND tf.doc_id <> q.q_id
-                JOIN dft ON dft.w = tf.w
-                JOIN dlen ON dlen.doc_id = tf.doc_id
-                CROSS JOIN tot
-                GROUP BY q.q_id, tf.doc_id
-            )
-        ) WHERE rk <= {_BM25_K}
-    """)
 
 
 @register(
@@ -5083,8 +3663,6 @@ def postings_rebucket_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     migration); the post-migration probe prunes on the NEW count's
     buckets — how a store's shard fan-out grows with its corpus
     without a serving gap."""
-    from kcidb_spark.queries.ranking import _BM25_K, _BM25_QUERIES
-
     docs = table(spark, sf_dir, "documents", spread=True).select(
         "doc_id", "text"
     )
@@ -5128,144 +3706,6 @@ def delete_hybrid_batch_txn(
         ],
         fail_before_manifest, wm=batch_id,
     )
-
-
-def _hybrid_deletes_oracle() -> str:
-    """The hybrid probe at FULL visibility with the standard ~25%
-    tombstone set (md5 second hex char 0-3) excluded from the
-    CANDIDATES of both legs: the lexical statistics still count the
-    deleted documents (no compaction has folded — the Lucene
-    staleness trade probe_postings_bm25 documents), while the
-    candidate sets exclude them immediately — on BOTH legs at the
-    same watermark, which is the property one torn publish would
-    break."""
-    from kcidb_spark.queries.advanced import _IVF_CENTROIDS
-    from kcidb_spark.queries.pipeline import _NORM_SQL
-    from kcidb_spark.queries.ranking import (
-        _BM25_SCALE,
-        _BM25_TERM_MICRO,
-        _RRF_C,
-    )
-
-    cos = (
-        "round(list_dot_product({a}, {b})"
-        " / (sqrt(list_dot_product({a}, {a}))"
-        "    * sqrt(list_dot_product({b}, {b}))), 4)"
-    )
-    cos_v_cv = cos.format(a="v", b="cv")
-    cos_qv_nv = cos.format(a="p.qv", b="m.v")
-    live = "substr(md5(CAST({id} AS VARCHAR)), 2, 1) NOT IN" \
-           " ('0', '1', '2', '3')"
-    term_micro = _BM25_TERM_MICRO.format(
-        N="tot.n", df="dft.df", tf="tf.tf", S="tot.s", len="dlen.len",
-        scale=_BM25_SCALE,
-    )
-    rrf = (
-        f"CASE WHEN r_lex IS NOT NULL AND r_sem IS NOT NULL THEN"
-        f" CAST(({2 * _RRF_C} + r_lex + r_sem) AS DOUBLE)"
-        f" / (({_RRF_C} + r_lex) * ({_RRF_C} + r_sem))"
-        f" WHEN r_lex IS NOT NULL THEN"
-        f" CAST(1 AS DOUBLE) / ({_RRF_C} + r_lex)"
-        f" ELSE CAST(1 AS DOUBLE) / ({_RRF_C} + r_sem) END"
-    )
-    return dedent(f"""
-        WITH vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ),
-        cents AS (
-            SELECT vec_id AS c_id, v AS cv FROM vecs
-            WHERE vec_id < {_IVF_CENTROIDS}
-        ),
-        assign AS (
-            SELECT vec_id, c_id, v FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT vec_id AS q_id, c_id, v AS qv FROM (
-                SELECT vecs.vec_id, cents.c_id, vecs.v,
-                       row_number() OVER (
-                           PARTITION BY vecs.vec_id
-                           ORDER BY {cos_v_cv} DESC, cents.c_id
-                       ) AS rn
-                FROM vecs CROSS JOIN cents
-                WHERE vecs.vec_id < {_HYB_QUERIES}
-            ) WHERE rn <= 2
-        ),
-        sem AS (
-            SELECT q_id, n_id,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id ORDER BY sim DESC, n_id
-                   ) AS BIGINT) AS r_sem
-            FROM (
-                SELECT DISTINCT p.q_id, m.vec_id AS n_id,
-                       {cos_qv_nv} AS sim
-                FROM probes p
-                JOIN assign m ON m.c_id = p.c_id AND m.vec_id <> p.q_id
-                 AND {live.format(id="m.vec_id")}
-            ) QUALIFY r_sem <= {_HYB_LEG_K}
-        ),
-        toks AS (
-            SELECT doc_id, unnest(string_split({_NORM_SQL}, ' ')) AS w
-            FROM documents
-        ),
-        vtf AS (
-            SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-            FROM toks GROUP BY doc_id, w
-        ),
-        dlen AS (
-            SELECT doc_id, CAST(sum(tf) AS BIGINT) AS len FROM vtf
-            GROUP BY doc_id
-        ),
-        dft AS (
-            SELECT w, CAST(count(*) AS BIGINT) AS df FROM vtf GROUP BY w
-        ),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(len) AS BIGINT) AS s
-            FROM dlen
-        ),
-        qterms AS (
-            SELECT DISTINCT doc_id AS q_id, w FROM toks
-            WHERE doc_id < {_HYB_QUERIES}
-        ),
-        lex AS (
-            SELECT q_id, n_id,
-                   CAST(row_number() OVER (
-                       PARTITION BY q_id
-                       ORDER BY score_micro DESC, n_id
-                   ) AS BIGINT) AS r_lex
-            FROM (
-                SELECT q.q_id, tf.doc_id AS n_id,
-                       CAST(sum({term_micro}) AS BIGINT) AS score_micro
-                FROM qterms q
-                JOIN vtf tf ON tf.w = q.w AND tf.doc_id <> q.q_id
-                 AND {live.format(id="tf.doc_id")}
-                JOIN dft ON dft.w = tf.w
-                JOIN dlen ON dlen.doc_id = tf.doc_id
-                CROSS JOIN tot
-                GROUP BY q.q_id, tf.doc_id
-            ) QUALIFY r_lex <= {_HYB_LEG_K}
-        )
-        SELECT q_id, n_id, r_lex, r_sem, rrf, rk FROM (
-            SELECT COALESCE(lex.q_id, sem.q_id) AS q_id,
-                   COALESCE(lex.n_id, sem.n_id) AS n_id,
-                   lex.r_lex, sem.r_sem,
-                   {rrf} AS rrf,
-                   CAST(row_number() OVER (
-                       PARTITION BY COALESCE(lex.q_id, sem.q_id)
-                       ORDER BY {rrf} DESC,
-                                COALESCE(lex.n_id, sem.n_id)
-                   ) AS BIGINT) AS rk
-            FROM lex FULL JOIN sem
-              ON lex.q_id = sem.q_id AND lex.n_id = sem.n_id
-        ) WHERE rk <= {_HYB_FINAL_K}
-    """)
 
 
 @register(
@@ -5370,21 +3810,6 @@ def compact_pq_store_txn(
     )
 
 
-def _pqc_deletes_oracle() -> str:
-    """The static-model PQ serve oracle with the standard tombstone
-    slice (md5 second hex char 0-3, ~25% of the corpus) excluded from
-    the MEMBER side only, probed at the delete's watermark — the
-    ann_serve_with_deletes shape in the compressed domain."""
-    return _pqc_serve_oracle(
-        trained=False,
-        wm=len(_T21_RANGES),
-        member_pred=(
-            "AND substr(md5(CAST(na.vec_id AS VARCHAR)), 2, 1)"
-            " NOT IN ('0', '1', '2', '3')"
-        ),
-    )
-
-
 @register(
     "ivfpq_store_serve_with_deletes",
     oracle=_pqc_deletes_oracle(),
@@ -5415,8 +3840,6 @@ def ivfpq_store_serve_with_deletes(
     database's own DML (e.g. postgresql driver DELETE); a compressed
     ANN tier has no such engine to lean on, so the tombstone txn is
     the Spark-first equivalent."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES, _KM_NPROBE
-
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store = _pqc_build_store(spark, sf_dir, "pqdeletes", retrain=False)
     snd = _md5_prefix("vec_id", 2)
@@ -5460,14 +3883,7 @@ def opq_store_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrain-swap invariance.  Training runs once per session on the
     bounded sample (the FAISS posture); the store build is
     session-keyed like every serving entry."""
-    from kcidb_spark.queries.advanced import (
-        _IVF_K,
-        _IVF_QUERIES,
-        _KM_NPROBE,
-        _opq_trained,
-        _PQK_SUBDIM,
-        _PQK_SUBS,
-    )
+    from kcidb_spark.queries.advanced import _opq_trained
 
     vecs = _float_vecs(spark, sf_dir).withColumnRenamed("v", "x")
     store, built = _session_store_dir(spark, sf_dir, "opqserve")
@@ -5514,14 +3930,6 @@ def opq_store_serve_fixed_rotation(
     extends this certification to the learned-rotation entry, whose
     machinery is the same code path."""
     from kcidb_spark.operators.opq import givens_rotation
-    from kcidb_spark.queries.advanced import (
-        _IVF_K,
-        _IVF_QUERIES,
-        _KM_NPROBE,
-        _PQK_SUBDIM,
-        _PQK_SUBS,
-    )
-
     vecs = _float_vecs(spark, sf_dir).withColumnRenamed("v", "x")
     store, built = _session_store_dir(spark, sf_dir, "opqfixed")
     if not built:
@@ -5563,8 +3971,6 @@ def ivfpq_store_compact_serve(
     Every step replays idempotently (overwrite subtrees + monotone
     manifest), so re-invocation against the session store serves the
     same bytes."""
-    from kcidb_spark.queries.advanced import _IVF_K, _IVF_QUERIES, _KM_NPROBE
-
     vecs_q = _pqc_vecs_q(spark, sf_dir)
     store = _pqc_build_store(spark, sf_dir, "pqcompact", retrain=False)
     snd = _md5_prefix("vec_id", 2)
