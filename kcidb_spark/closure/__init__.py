@@ -12,129 +12,145 @@ kcidb/test_db.py:2535-2722):
   (top-down) — parents run BEFORE children, no re-iteration;
 * result: full rows of every matched object per table.
 
-The graph is static and shallow, so the closure is an unrolled
-sequence of semi-joins — one pass up, one pass down — not recursion.
-Id sets are typically tiny → Spark broadcasts them; with huge id sets
-AQE falls back to shuffle semi-joins.  Either way no row ever fans
-out (semi-joins only), which is what makes this safe at 100 TB.
+Request-scale contract.  The graph is static and shallow, so the
+closure is a key walk on the driver: one pass up, one pass down.  Key
+sets are tuples of ``ID_FIELDS``; a fetch is the store's dedup view
+filtered by a key IN-list (:func:`kcidb_spark.store.key_rows`), which
+reaches the parquet scan beneath the dedup aggregate.
+
+* Parents (``TOPO_UP``): fetch the rows of the table's key set; every
+  FK tuple with no NULL part joins the parent's key set.
+* Children (``TOPO_DOWN``), for each table with a non-empty parent key
+  set: one scan of the raw table for the OR of ``fk IN parent keys``,
+  projected to the id fields, names the candidates; their dedup rows
+  are fetched, and a candidate joins the key set when its deduped FK is
+  in a parent key set.  The scan misses nothing: a deduped FK is the
+  latest non-NULL raw value, so every qualifying child has a raw row
+  in it.  The re-check drops a child whose newest FK moved to another
+  parent.
+
+Children derive from parent key sets, not fetched rows, so a seed
+absent from the store still reaches its orphan children.  No row is
+fetched twice in one call, and the driver holds the closure's rows.
+Every key set is held to the request-scale cap
+(``localrel._check_request_scale``): a closure past it fails loudly.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Any, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from kcidb_spark.localrel import local_df
+from kcidb_spark.functions import iso_utc_timestamps
+from kcidb_spark.localrel import _check_request_scale
 from kcidb_spark.schema.graph import (
     ID_FIELDS,
     TABLES,
     TOPO_DOWN,
     TOPO_UP,
-    children_of,
     parents_of,
 )
+from kcidb_spark.store import key_in, key_rows
 
-_KEY_TYPES = {"id": T.StringType(), "version": T.LongType()}
 
-
-def _ids_df(spark: SparkSession, table: str, ids: Iterable) -> DataFrame:
-    """Materialize an id list as a DataFrame keyed by ID_FIELDS — an
-    Arrow-backed local relation, so no consuming action starts Python
-    workers to re-read the seed rows."""
+def _seed_keys(table: str, ids: Iterable) -> set[tuple]:
     fields = ID_FIELDS[table]
-    schema = T.StructType(
-        [T.StructField(f, _KEY_TYPES.get(f, T.StringType()), False) for f in fields]
-    )
-    rows = []
+    keys = set()
     for i in ids:
         if not isinstance(i, (tuple, list)):
             i = (i,)
         if len(i) != len(fields):
             raise ValueError(f"{table} id {i!r} does not match fields {fields}")
-        rows.append(tuple(i))
-    return local_df(spark, rows, schema)
+        keys.add(tuple(i))
+    return keys
 
 
-def _union(a: DataFrame | None, b: DataFrame) -> DataFrame:
-    return b if a is None else a.unionByName(b)
+def _fetch(store, table: str, keys: set[tuple]) -> dict[tuple, dict]:
+    """The dedup rows of ``keys`` that the store holds, keyed by their
+    ``ID_FIELDS`` tuple; timestamps leave the engine as ISO strings."""
+    fields = ID_FIELDS[table]
+    df = iso_utc_timestamps(store.spark, key_rows(store, table, keys))
+    rows = (r.asDict(recursive=True) for r in df.collect())
+    return {tuple(d[f] for f in fields): d for d in rows}
 
 
-def closure(
-    spark: SparkSession,
-    tables: dict[str, DataFrame],
-    ids: dict[str, Iterable] | None = None,
-    parents: bool = False,
-    children: bool = False,
-) -> dict[str, DataFrame]:
-    """Compute the closure; returns matched full-row DataFrames per
-    table (omitting tables with no matches is the caller's concern —
-    every table gets a DataFrame, possibly empty)."""
-    ids = ids or {}
+def _candidates(store, table: str, edges, keys) -> set[tuple]:
+    """Keys of the raw rows of ``table`` whose FK along any of
+    ``edges`` is in that parent's key set: one filtered scan."""
+    cond = functools.reduce(
+        operator.or_, [key_in(e.child_fk, keys[e.parent]) for e in edges]
+    )
+    rows = store.raw(table).where(cond).select(*ID_FIELDS[table]).collect()
+    _check_request_scale(rows, f"closure: {table} candidates")
+    return {tuple(r) for r in rows}
+
+
+def _walk(
+    store, ids: dict[str, Iterable], parents: bool, children: bool
+) -> dict[str, list[dict]]:
+    """The closure's dedup rows per table, each table's in key order."""
     unknown = set(ids) - set(TABLES)
     if unknown:
         raise ValueError(f"unknown object types: {sorted(unknown)}")
+    keys = {t: _seed_keys(t, ids.get(t, ())) for t in TABLES}
+    rows: dict[str, dict[tuple, dict]] = {t: {} for t in TABLES}
+    fetched: dict[str, set[tuple]] = {t: set() for t in TABLES}
 
-    id_dfs: dict[str, DataFrame | None] = {
-        t: (_ids_df(spark, t, ids[t]) if t in ids else None) for t in TABLES
-    }
+    def fetch(t: str, want: set[tuple]) -> None:
+        new = want - fetched[t]
+        if new:
+            fetched[t] |= new
+            _check_request_scale(fetched[t], f"closure: {t} keys")
+            rows[t].update(_fetch(store, t, new))
 
-    def matched_rows(t: str) -> DataFrame | None:
-        if id_dfs[t] is None:
-            return None
-        return tables[t].join(
-            F.broadcast(id_dfs[t].distinct()), on=list(ID_FIELDS[t]), how="left_semi"
-        )
+    def fk(t: str, key: tuple, edge) -> tuple | None:
+        row = rows[t].get(key)
+        return None if row is None else tuple(row[c] for c in edge.child_fk)
 
     if parents:
-        # Bottom-up: deriving parent ids from child FK columns
+        # Bottom-up: parent ids from the child rows' FK columns
         # (reference add_parents, postgresql/v04_00.py:682-710).
         for t in TOPO_UP:
-            rows = matched_rows(t)
-            if rows is None:
-                continue
+            fetch(t, keys[t])
             for edge in parents_of(t):
-                fk_cols = [F.col(c) for c in edge.child_fk]
-                cond = fk_cols[0].isNotNull()
-                for c in fk_cols[1:]:
-                    cond = cond & c.isNotNull()
-                parent_ids = rows.filter(cond).select(
-                    *[
-                        F.col(fk).alias(pk)
-                        for fk, pk in zip(edge.child_fk, edge.parent_key)
-                    ]
-                ).distinct()
-                id_dfs[edge.parent] = _union(id_dfs[edge.parent], parent_ids)
+                for key in keys[t]:
+                    parent = fk(t, key, edge)
+                    if parent is not None and None not in parent:
+                        keys[edge.parent].add(parent)
 
     if children:
-        # Top-down over everything matched so far (incl. added parents)
-        # (reference add_children, postgresql/v04_00.py:712-740).
+        # Top-down over everything matched so far, added parents
+        # included (reference add_children, postgresql/v04_00.py:712-740).
         for t in TOPO_DOWN:
-            if id_dfs[t] is None:
+            edges = [e for e in parents_of(t) if keys[e.parent]]
+            if not edges:
                 continue
-            for edge in children_of(t):
-                parent_keyed = id_dfs[t].distinct().select(
-                    *[
-                        F.col(pk).alias(fk)
-                        for fk, pk in zip(edge.child_fk, edge.parent_key)
-                    ]
-                )
-                child_ids = (
-                    tables[edge.child]
-                    .join(F.broadcast(parent_keyed), on=list(edge.child_fk), how="left_semi")
-                    .select(*ID_FIELDS[edge.child])
-                )
-                id_dfs[edge.child] = _union(id_dfs[edge.child], child_ids)
+            candidates = _candidates(store, t, edges, keys)
+            fetch(t, candidates | keys[t])
+            keys[t] |= {
+                key for key in candidates
+                if any(fk(t, key, e) in keys[e.parent] for e in edges)
+            }
 
-    out: dict[str, DataFrame] = {}
     for t in TABLES:
-        rows = matched_rows(t)
-        if rows is None:
-            rows = tables[t].where(F.lit(False))  # empty ≠ everything
-        out[t] = rows
-    return out
+        fetch(t, keys[t])
+    return {t: [rows[t][k] for k in sorted(keys[t]) if k in rows[t]]
+            for t in TABLES}
+
+
+def _objects(store, ids, parents, children, with_metadata):
+    """``(table, I/O objects)`` of the closure, in ``TABLES`` order.  A
+    mux store answers from its first member, as its dumps do."""
+    from kcidb_spark.store.drivers import MuxStore
+
+    if isinstance(store, MuxStore):
+        store = store.members[0]
+    for t, rows in _walk(store, ids or {}, parents, children).items():
+        if not with_metadata:
+            rows = [{k: v for k, v in r.items() if k != "_timestamp"}
+                    for r in rows]
+        yield t, [store._row_obj(t, r) for r in rows]
 
 
 def query_store(
@@ -148,14 +164,8 @@ def query_store(
     (the kcidb-query CLI shape, kcidb/__init__.py:371-392)."""
     from kcidb_spark.schema.io import IO_VERSION
 
-    tables = {t: store.table(t, with_metadata=True) for t in TABLES}
-    result = closure(store.spark, tables, ids, parents=parents, children=children)
     out: dict[str, Any] = {"version": dict(IO_VERSION)}
-    for t in TABLES:
-        df = result[t]
-        if not with_metadata:
-            df = df.drop("_timestamp")
-        objs = store._rows_to_objs(t, df)
+    for t, objs in _objects(store, ids, parents, children, with_metadata):
         if objs:
             out[t] = objs
     return out
@@ -171,21 +181,17 @@ def query_store_iter(
 ):
     """Paginated closure query: a generator of validated I/O reports of
     at most ``objects_per_report`` objects each (reference O4 —
-    query pagination, kcidb/db/__init__.py:313-388).  Objects stream
-    via toLocalIterator, so driver memory is bounded by one chunk."""
+    query pagination, kcidb/db/__init__.py:313-388).  The walk holds
+    the closure's rows on the driver, bounded by the request-scale key
+    cap, while it pages them; only the reports are cut to size."""
     from kcidb_spark.schema.io import IO_VERSION, validate
 
     if objects_per_report is not None and objects_per_report <= 0:
         raise ValueError("objects_per_report must be positive or None")
-    tables = {t: store.table(t, with_metadata=True) for t in TABLES}
-    result = closure(store.spark, tables, ids, parents=parents, children=children)
     report: dict[str, Any] = {"version": dict(IO_VERSION)}
     n = emitted = 0
-    for t in TABLES:
-        df = result[t]
-        if not with_metadata:
-            df = df.drop("_timestamp")
-        for obj in store._iter_objs(t, df):
+    for t, objs in _objects(store, ids, parents, children, with_metadata):
+        for obj in objs:
             report.setdefault(t, []).append(obj)
             n += 1
             if objects_per_report is not None and n >= objects_per_report:

@@ -30,9 +30,9 @@ directly against the Arrow form of the Spark schema; pandas, and the
 None/NaN coercions it brings, stay out of that path.
 
 Scale note: these frames are request-scale BY CONTRACT — probe
-batches, model tables, routing pairs, closure seeds, ORM id sets and
-the objects of one ``Store.load`` report (the inline submit path
-restricts the store by its ids with an IN-list, no frame at all).
+batches, model tables, routing pairs, ORM id sets and the objects of
+one ``Store.load`` report (the closure walk and the inline submit path
+restrict the store by their ids with an IN-list, no frame at all).
 Callers with corpus-sized data must never route through a driver-held
 list in the first place.
 """

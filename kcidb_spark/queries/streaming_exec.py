@@ -491,15 +491,18 @@ def t18_stream_join_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.conf.set(k, v)
 
 
-def _sentineled_events_dir(
-    sf_dir: str, n_future_batches: int = 2
-) -> str:
-    """Copy the events source into a temp dir and append
-    ``n_future_batches`` single-file micro-batches of far-future
-    SENTINEL rows (negative user ids, one 'view' + one 'click' each so
-    BOTH join sides' watermark nodes see them).  File mtimes order the
+def _sentineled_events_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The events source staged as arrival files, followed by two
+    single-file micro-batches of far-future SENTINEL rows (negative
+    user ids, one 'view' + one 'click' each so BOTH join sides'
+    watermark nodes see them).  File mtimes order the
     batches: real data first, sentinels after — so a bounded drain
     processes real rows, then watches the watermark leap past them.
+
+    Staged once per (session, sf_dir) (:func:`_session_stage`); every
+    drain reads the stage in place: its fresh checkpoint starts from
+    the first file, and nothing rewrites the files, so their mtimes
+    keep epoch order.
 
     Why two sentinel batches: a watermark computed at the end of batch
     N takes effect in batch N+1, so state evicted by sentinel-1's
@@ -509,54 +512,56 @@ def _sentineled_events_dir(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    src = os.path.join(sf_dir, "events.parquet")
-    parts = [src]
-    if os.path.isdir(src):
-        parts = [
-            os.path.join(src, name) for name in sorted(os.listdir(src))
-            if name.endswith(".parquet")
-        ]
-    schema = pq.read_schema(parts[0])
-    ts_type = schema.field("ts").type
-    # Sentinels sit 30/60/… days past the last real event (max taken
-    # across ALL part files): with a 1-hour watermark delay and a
-    # 6-hour join window, sentinel k's watermark clears every row up
-    # to sentinel k-1 by > 29 days.  An empty source has no max —
-    # anchor at the epoch; the join output is empty either way.
-    max_us = 0
-    for dp in parts:
-        m = pa.compute.max(
-            pq.read_table(dp, columns=["ts"])["ts"].cast(
-                pa.timestamp("us")
+    def write_stage(stage: str) -> None:
+        src = os.path.join(sf_dir, "events.parquet")
+        parts = [src]
+        if os.path.isdir(src):
+            parts = [
+                os.path.join(src, name) for name in sorted(os.listdir(src))
+                if name.endswith(".parquet")
+            ]
+        schema = pq.read_schema(parts[0])
+        ts_type = schema.field("ts").type
+        # Sentinels sit 30/60/… days past the last real event (max
+        # taken across ALL part files): with a 1-hour watermark delay
+        # and a 6-hour join window, sentinel k's watermark clears every
+        # row up to sentinel k-1 by > 29 days.  An empty source has no
+        # max — anchor at the epoch; the join output is empty either
+        # way.
+        max_us = 0
+        for dp in parts:
+            m = pa.compute.max(
+                pq.read_table(dp, columns=["ts"])["ts"].cast(
+                    pa.timestamp("us")
+                )
             )
-        )
-        if m.is_valid:
-            max_us = max(max_us, m.value)
-    arrivals = [(dp, f"data_{i}") for i, dp in enumerate(parts)]
-    sentinels = _scratch_dir("t16_sentinels")
-    for k in range(n_future_batches):
-        ts_us = max_us + (k + 1) * 30 * 86_400_000_000
-        uid = -(2 * k + 1)
-        rows = pa.table(
-            {
-                "event_id": pa.array([-(10 + 2 * k), -(11 + 2 * k)],
-                                     pa.int64()),
-                "ts": pa.array([ts_us, ts_us], pa.timestamp("us")).cast(
-                    ts_type
-                ),
-                "user_id": pa.array([uid, uid - 1], pa.int64()),
-                "event_type": pa.array(["view", "click"], pa.string()),
-                "value": pa.array([0.0, 0.0], pa.float64()),
-                "props": pa.array(["{}", "{}"], pa.string()),
-            }
-        ).select([f.name for f in schema])
-        path = os.path.join(sentinels, f"sentinel_{k}.parquet")
-        pq.write_table(rows.cast(schema), path)
-        arrivals.append((path, f"sentinel_{k}"))
-    tmp = _scratch_dir("t16_src")
-    _stage_arrivals(tmp, arrivals)
-    shutil.rmtree(sentinels, ignore_errors=True)
-    return tmp
+            if m.is_valid:
+                max_us = max(max_us, m.value)
+        arrivals = [(dp, f"data_{i}") for i, dp in enumerate(parts)]
+        sentinels = _scratch_dir("t16_sentinels")
+        for k in range(2):
+            ts_us = max_us + (k + 1) * 30 * 86_400_000_000
+            uid = -(2 * k + 1)
+            rows = pa.table(
+                {
+                    "event_id": pa.array([-(10 + 2 * k), -(11 + 2 * k)],
+                                         pa.int64()),
+                    "ts": pa.array([ts_us, ts_us], pa.timestamp("us")).cast(
+                        ts_type
+                    ),
+                    "user_id": pa.array([uid, uid - 1], pa.int64()),
+                    "event_type": pa.array(["view", "click"], pa.string()),
+                    "value": pa.array([0.0, 0.0], pa.float64()),
+                    "props": pa.array(["{}", "{}"], pa.string()),
+                }
+            ).select([f.name for f in schema])
+            path = os.path.join(sentinels, f"sentinel_{k}.parquet")
+            pq.write_table(rows.cast(schema), path)
+            arrivals.append((path, f"sentinel_{k}"))
+        _stage_arrivals(stage, arrivals)
+        shutil.rmtree(sentinels, ignore_errors=True)
+
+    return _session_stage(spark, sf_dir, "t16_src", write_stage)
 
 
 @_restores_nanos_conf
@@ -567,7 +572,7 @@ def _outer_join_drain(
     and return the sink contents (sentinel rows excluded)."""
     _utc(spark)
     src_dir = (
-        _sentineled_events_dir(sf_dir) if advance_watermark else None
+        _sentineled_events_dir(spark, sf_dir) if advance_watermark else None
     )
 
     def side(event_type: str, prefix: str):
@@ -608,7 +613,6 @@ def _outer_join_drain(
     sink = _drain_to_memory(
         "t16_stream_outer_join", joined, "append",
         _state_partitions(spark, sf_dir),
-        done=() if src_dir is None else (src_dir,),
     )
     # Sentinel view rows carry negative user ids; real ids are ≥ 0.
     return sink.filter(F.col("user_id") >= 0)

@@ -365,6 +365,35 @@ def dedup_view(raw: DataFrame, table: str, with_metadata: bool = False) -> DataF
     return out.select(*cols)
 
 
+def key_in(cols, keys) -> F.Column:
+    """``cols`` IN ``keys`` (tuples, one value per column; no keys →
+    FALSE): an IN-list on the first column, which the parquet scan
+    takes as a pushed filter, and for a composite key the exact tuple
+    IN-list on a struct of ``cols`` beside it."""
+    keys = sorted(set(keys))
+    if not keys:
+        return F.lit(False)
+    cond = F.col(cols[0]).isin(sorted({k[0] for k in keys}))
+    if len(cols) > 1:
+        cond = cond & F.struct(*cols).isin([
+            F.struct(*[F.lit(v).alias(c) for c, v in zip(cols, k)])
+            for k in keys
+        ])
+    return cond
+
+
+def key_rows(store, table: str, keys) -> DataFrame:
+    """The dedup rows of ``table`` (``_timestamp`` included) whose
+    ``ID_FIELDS`` tuple is in ``keys``.  The filter sits on the
+    grouping key, so it reaches the scan beneath the dedup aggregate:
+    only the keys' raw rows are read, and building the frame runs no
+    job.  The closure walk and the inline submit's change fan-out both
+    read the store through it."""
+    return store.table(table, with_metadata=True).where(
+        key_in(ID_FIELDS[table], keys)
+    )
+
+
 class ReportDumpMixin:
     """Report-shaped read surface shared by store drivers: ``dump`` /
     ``dump_iter`` (windowed I/O reports) and the Spark-SQL escape
@@ -448,7 +477,6 @@ class ReportDumpMixin:
             yield table, df
 
     def _iter_objs(self, table: str, df: DataFrame):
-        json_paths = _JSON_FIELDS[table]
         # Serialize timestamps ENGINE-side (session tz is pinned UTC):
         # PySpark's collect/toLocalIterator renders TimestampType in the
         # *driver's local* timezone regardless of session tz, so a
@@ -456,12 +484,17 @@ class ReportDumpMixin:
         # _unpack_value labels it +00:00.
         df = iso_utc_timestamps(self.spark, df)
         for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
-            yield {
-                k: u
-                for k, v in d.items()
-                if (u := _unpack_value(v, (k,), json_paths)) is not None
-            }
+            yield self._row_obj(table, row.asDict(recursive=True))
+
+    def _row_obj(self, table: str, row: dict[str, Any]) -> dict[str, Any]:
+        """One collected row of an ``iso_utc_timestamps`` frame (as
+        ``asDict(recursive=True)``) as an I/O object."""
+        json_paths = _JSON_FIELDS[table]
+        return {
+            k: u
+            for k, v in row.items()
+            if (u := _unpack_value(v, (k,), json_paths)) is not None
+        }
 
     def _rows_to_objs(self, table: str, df: DataFrame) -> list[dict[str, Any]]:
         return list(self._iter_objs(table, df))

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from kcidb_spark.schema.graph import TABLES
 from kcidb_spark.schema.io import merge as io_merge, upgrade, validate
-from kcidb_spark.store import Store
+from kcidb_spark.store import Store, key_rows
 from kcidb_spark.streaming.notify import (
     NotificationSpool,
     Subscription,
@@ -134,11 +134,8 @@ class IngestPipeline:
                for io in _IO_TO_ORM}
         if not any(ids.values()):
             return None
-        tables = {}
-        for t in TABLES:
-            df = self.store.table(t, with_metadata=True)
-            tables[t] = (df.where(F.col("id").isin(ids[t])) if ids.get(t)
-                         else df.where(F.lit(False)))
+        tables = {t: key_rows(self.store, t, [(i,) for i in ids.get(t, ())])
+                  for t in TABLES}
         fanout = {_IO_TO_ORM[io] for io, v in ids.items() if v}
         return {name: view if name in fanout else view.where(F.lit(False))
                 for name, view in type_views(tables).items()}

@@ -170,11 +170,12 @@ def test_dedup_view_plans_like_column_form(spark, tmp_path, table):
 # -- Spark job budgets ----------------------------------------------------
 #: Jobs per call, counted by job-id range (the way perfbench
 #: attributes jobs); before the request-scale rework these calls ran
-#: 30, 27 and 12.  A literal id frame built as a Python RDD (its
-#: broadcast needs a job) or a second execution of the spool plan
-#: breaks a budget.
+#: 30, 27 and 12, and the closure ran 23 before its key walk.  A
+#: literal id frame built as a Python RDD (its broadcast needs a job),
+#: a second execution of the spool plan or a table fetched twice by
+#: the closure breaks a budget.
 SUBMIT_JOBS = 10
-CLOSURE_JOBS = 23
+CLOSURE_JOBS = 9
 PATTERN_JOBS = 12
 
 
@@ -201,10 +202,11 @@ def _submission(n: int, build_status: str) -> dict:
     }
 
 
-def test_request_scale_job_budgets(spark, tmp_path):
+def test_request_scale_job_budgets(spark, tmp_path, monkeypatch):
     """One 2-report submit (one report re-submits a loaded checkout),
     one closure query with parents and children, and one ORM pattern
     query, each within its job budget and with its expected result."""
+    import kcidb_spark.closure as closure_mod
     from kcidb_spark.closure import query_store
     from kcidb_spark.orm import compile_patterns, parse_pattern, type_views
     from kcidb_spark.streaming import IngestPipeline, NotificationSpool
@@ -223,11 +225,23 @@ def test_request_scale_job_budgets(spark, tmp_path):
     assert pipeline.spooled == 14
     assert jobs <= SUBMIT_JOBS, f"submit ran {jobs} jobs"
 
+    fetches, fetch = [], closure_mod.key_rows
+
+    def key_rows(*args):
+        df = fetch(*args)
+        fetches.append(df._jdf.queryExecution().logical().toString())
+        return df
+
+    monkeypatch.setattr(closure_mod, "key_rows", key_rows)
     jobs, report = _jobs(spark, lambda: query_store(
         store, ids={"checkouts": ["test:c1"]}, parents=True, children=True))
+    monkeypatch.undo()
     assert {t: len(report.get(t, [])) for t in TABLES} == {
         "checkouts": 1, "builds": 2, "tests": 3, "issues": 0, "incidents": 0}
     assert jobs <= CLOSURE_JOBS, f"closure ran {jobs} jobs"
+    # One fetch per table holding matches, none over a Python RDD.
+    assert len(fetches) == 3
+    assert not any("LogicalRDD" in plan for plan in fetches)
 
     def pattern():
         views = type_views({t: store.table(t, with_metadata=True)
@@ -243,3 +257,26 @@ def test_request_scale_job_budgets(spark, tmp_path):
     jobs, rows = _jobs(spark, pattern)
     assert rows == {"build": 2, "test": 3}
     assert jobs <= PATTERN_JOBS, f"pattern query ran {jobs} jobs"
+
+
+def test_key_rows_filter_reaches_the_scan(spark, tmp_path):
+    """A fetch's key IN-list is pushed through the dedup aggregate to
+    the parquet scan; a composite key pushes its first field."""
+    from kcidb_spark.store import key_rows
+
+    store = Store(spark, str(tmp_path / "s"))
+    store.load(_odd_report(), timestamp=LOAD_TS)
+
+    def pushed(table, keys):
+        text = (key_rows(store, table, keys)._jdf.queryExecution()
+                .executedPlan().toString())
+        scan = next(ln for ln in text.splitlines() if "FileScan" in ln)
+        return scan.split("PushedFilters: ", 1)[1]
+
+    assert "In(id, [origin:test-1,origin:test-2])" in pushed(
+        "tests", [("origin:test-2",), ("origin:test-1",)])
+    assert "In(id, [origin:issue-1,origin:issue-2])" in pushed(
+        "issues", [("origin:issue-1", 3), ("origin:issue-2", 1)])
+    assert key_rows(store, "issues", [("origin:issue-2", 1)]).count() == 1
+    assert key_rows(store, "issues", [("origin:issue-2", 2)]).count() == 0
+    assert key_rows(store, "tests", []).count() == 0

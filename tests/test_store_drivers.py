@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime
+import io
 
 import pytest
 
@@ -42,6 +43,34 @@ def test_mux_fanout(spark, tmp_path):
     assert mux.table("tests").count() == len(COMPREHENSIVE["tests"])
     with pytest.raises(ValueError):
         MuxStore([])
+
+
+def test_mux_closure_queries_first_member(spark, tmp_path, monkeypatch, capsys):
+    """Closure queries on a mux answer from its first member, as its
+    dumps do: the API calls and ``query -d "mux:…"`` return the first
+    member's closure, not the second's extra build."""
+    import json
+
+    from kcidb_spark import cli
+    from kcidb_spark.closure import query_store, query_store_iter
+    from tests.kcidb_fixtures import graph_fixture
+
+    a = Store(spark, str(tmp_path / "a"))
+    b = Store(spark, str(tmp_path / "b"))
+    mux = MuxStore([a, b])
+    mux.load(graph_fixture())
+    b.load({"version": {"major": 5, "minor": 3},
+            "builds": [{"id": "_:9", "origin": "_", "checkout_id": "_:1"}]})
+    ids = {"checkouts": ["_:1"]}
+    want = query_store(a, ids, children=True)
+    assert {o["id"] for o in want["builds"]} == {"_:1"}
+    assert query_store(mux, ids, children=True) == want
+    assert list(query_store_iter(mux, ids, children=True)) == [want]
+
+    monkeypatch.setattr("sys.stdin", io.StringIO(""))
+    spec = f"mux:{tmp_path / 'a'} {tmp_path / 'b'}"
+    assert cli.main(["query", "-d", spec, "-c", "_:1", "--children"]) == 0
+    assert json.loads(capsys.readouterr().out) == want
 
 
 def test_archive_windowed_copy(spark, tmp_path):
